@@ -91,24 +91,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // optional subset (comma-separated names) — the sf1 scale
-    // rehearsal runs only the slowest queries; absent → full sweep
-    // (the driver contract). The subset is recorded IN the artifact
-    // ("subset":[...]) so a partial sweep can never be mistaken for
-    // the contract total (a stale env var used to be invisible).
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // optional subset (SPARK_GRAFT_QUERIES, see SparkEntry.selection) —
+    // scale rehearsals and per-query timing run only the named
+    // queries; absent → full sweep (the driver contract). The subset
+    // is recorded IN the artifact ("subset":[...]) so a partial sweep
+    // can never be mistaken for the contract total (a stale env var
+    // used to be invisible).
+    val subset = SparkEntry.selection()
+    val spark = LocalSession(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     var etlEps = -1.0
@@ -248,17 +240,9 @@ object Bench {
     // published by run 1 are unreachable garbage, not input to run 2.
     val sweepStart = System.nanoTime()
     def sweepElapsed(): Double = (System.nanoTime() - sweepStart) / 1e9
-    // PERF_r11 sweep-hygiene experiment: SPARK_GRAFT_SWEEP_GC=1
-    // clears cached relations and forces a full GC between queries,
-    // testing whether long-sweep inflation (b11_anti_join 5.0 s in
-    // the r10 driver sweep vs <0.41 s clean) is in-process residue
-    // (heap/catalog buildup) or host-level contention. Off by
-    // default — the driver contract is the plain sweep.
-    val sweepGc = sys.env.get("SPARK_GRAFT_SWEEP_GC").contains("1")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        if (sweepGc) { spark.catalog.clearCache(); System.gc() }
         val cap = if (sweepElapsed() > LateBudgetSec) LateCapSec
                   else QueryCapSec
         val r1 = runCapped(spark, name, cap) { fn(spark, sfDir).count() }

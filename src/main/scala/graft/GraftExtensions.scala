@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`),
+  * (or `.withExtensions(new GraftExtensions)` on a session builder),
   * and `SELECT cosine_similarity(a, b)` works from any SQL-only
   * client — Thrift server, JDBC, notebook gateways — with no
   * user-code `register()` call ever running. The ad-hoc

@@ -28,6 +28,21 @@ object SparkEntry {
       Fuzzy.queries ++ Bpe.queries ++ Unigram.queries ++ WordPiece.queries ++ Geo.queries ++ Profile.queries ++ Sketch.queries ++
       graft.query.Script.queries
 
+  /** The registry names a subset run selects: `spec` (by default the
+    * `SPARK_GRAFT_QUERIES` env var, comma-separated) parsed and checked
+    * against [[queries]]. None means the whole registry. Shared by
+    * [[Bench]] and [[Verify]]; fails listing every unknown name, so a
+    * typo cannot silently run an empty or partial subset. */
+  def selection(spec: Option[String] = sys.env.get("SPARK_GRAFT_QUERIES"))
+      : Option[Set[String]] = spec.map { s =>
+    val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_QUERIES: unknown queries ${unknown.toSeq.sorted.mkString(", ")}")
+    require(names.nonEmpty, "SPARK_GRAFT_QUERIES selects no queries")
+    names
+  }
+
   def oracleSql: Map[String, String] =
     Relational.oracle ++ Extended.oracle ++ TpchSupply.oracle ++
       Temporal.oracle ++

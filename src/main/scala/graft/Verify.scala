@@ -2,54 +2,47 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `SPARK_GRAFT_QUERIES=name1,name2` restricts both to those names
+  * (see [[SparkEntry.selection]]); the driver never sets it, so its
+  * runs dump all. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.selection()
+    val spark = LocalSession()
+    dump(spark, sfDir, outDir, names)
+    spark.stop()
+  }
+
+  /** Writes `<outDir>/<name>/` parquet for every selected query (all
+    * when `names` is None) and their oracle SQL to
+    * `<outDir>/oracle_sql.json`. Leaves the session running. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     // submit queries concurrently (4-way): each writes its own dir,
     // Spark's scheduler overlaps their stages — the gate's wall time
     // is not the sum of 67 sequential jobs. View/function
     // registrations inside query builders are idempotent.
-    // SPARK_GRAFT_POOL widens the submit pool for scale rehearsals
-    // (a 100x dump behind 4 threads serializes behind its heaviest
-    // builders); the driver never sets it, so driver runs keep 4
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.get("SPARK_GRAFT_POOL")
-        .flatMap(v => scala.util.Try(v.toInt).toOption)
-        .filter(_ > 0)
-        .getOrElse(4))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the dump — builder-side
-    // iteration aid; the driver never sets it, so its runs dump all
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    val futures = selected.toSeq.map { case (name, fn) =>
-      scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    def selected(name: String): Boolean = names.forall(_.contains(name))
+    val futures = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
+      .map { case (name, fn) =>
+        scala.concurrent.Future {
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
         }
       }
-    }
-    scala.concurrent.Await.result(
+    try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+    finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -62,9 +55,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

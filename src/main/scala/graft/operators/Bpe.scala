@@ -113,7 +113,7 @@ object Bpe {
     * pair-count job — and `localCheckpoint` every `checkpointEvery`
     * merges truncates the stacked-`replace` lineage the one-merge
     * loop let grow unbounded. Honest regime note (measured,
-    * BpeProbe): on natural-text dictionaries the prefix batches;
+    * PERF_r09.md): on natural-text dictionaries the prefix batches;
     * on digit-run ID dictionaries every top pair shares tokens, the
     * guard proves nothing safe, and this degenerates to sequential
     * with only the lineage fix — [[trainLocal]] is the production

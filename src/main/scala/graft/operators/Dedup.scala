@@ -1021,7 +1021,7 @@ object Dedup {
     // is usually TINY relative to the corpus (256 rows at sf0.1), and
     // the loop's cost is pure scheduling — with AQE on, every exchange
     // becomes its own query-stage job, and every broadcast build is
-    // another (CcProbe r5: ~18 jobs ≈ 6 s for 256 edges). Below the
+    // another (PERF_r05.md: ~18 jobs ≈ 6 s for 256 edges). Below the
     // threshold the WHOLE loop runs in a cloned session (same
     // SparkContext, isolated SQLConf — the withSQLConf move, scoped so
     // Verify's concurrent queries never see the flipped conf) with AQE
@@ -1033,7 +1033,7 @@ object Dedup {
     // Tiny-graph plan mode: below ~100k edges even the 1-partition
     // loop is pure job-scheduling cost (a percolated 20k-edge
     // geo graph spent 12.3 s in ~6 snapshot-write iterations —
-    // DbscanProbe). The edge list is then bounded DRIVER-SIDE state
+    // PERF_r11.md). The edge list is then bounded DRIVER-SIDE state
     // (≤ ~1.6 MB of (long,long) pairs — the same regime as BPE
     // dictionaries and k-means centroids): collect once, union-find
     // with path compression (exact per-component min by definition),
@@ -1426,9 +1426,9 @@ object Dedup {
 
   /** Set by the `d_simhash_prod` builder; lets [[simhashProdOracle]]
     * regenerate the literal signature table for the SAME session/dir
-    * the query ran against. Verify/VerifyOne dump oracle SQL only
-    * after every query future has completed, so the stash is always
-    * populated when the dynamic oracle is rendered. */
+    * the query ran against. Verify dumps oracle SQL only after every
+    * query future has completed, so the stash is always populated
+    * when the dynamic oracle is rendered. */
   @volatile private var simhashProdCtx: Option[(SparkSession, String)] = None
 
   /** `d_simhash_prod`'s oracle, rendered at dump time. The per-doc

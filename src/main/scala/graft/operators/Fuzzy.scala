@@ -49,8 +49,9 @@ object Fuzzy {
     * (tight per-row loop replacing the interpreted HOF lambdas) was
     * built, property-tested equivalent, and measured — warm
     * t_fuzzy_join 6.7 s vs 6.55 s, t_fuzzy_join2 4.1 s vs 3.7 s: no
-    * gain. FuzzStages showed why: the apparent 4.3 s "generation"
-    * stage is first-job JVM/codegen warmup, not lambda dispatch —
+    * gain. A stage breakdown (OPTIMIZATION_r14.md) showed why: the
+    * apparent 4.3 s "generation" stage is first-job JVM/codegen
+    * warmup, not lambda dispatch —
     * warm key generation is ~1 s and the remaining cost is spread
     * across the bucket join + pair distinct (2.1 s) and verify
     * (0.7 s) with no single hot spot. Kept HOF; don't re-try

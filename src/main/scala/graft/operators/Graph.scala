@@ -181,17 +181,18 @@ object Graph {
     // subtree has executed exactly once and the node count is in hand
     val n = degObs.get("n").asInstanceOf[Long]
     require(n > 0, "pageRank: empty edge set")
+    // degenerate 0-iteration call: the result is r⁰ itself — the
+    // constant 1/n over the node set (preserved old behavior), read
+    // from the snapshot so the plan never references the fused cache
+    if (iters <= 0 && tol == 0)
+      return symDegSnap.select(col("src")).distinct()
+        .select(col("src").as("node"),
+          (round(lit(1.0 / n) * 1e6) / 1e6).as("rank"))
     val symDeg =
       if (fused) symDegSnap.repartition(col("src"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else symDegSnap
     try {
-      // degenerate 0-iteration call: the result is r⁰ itself — the
-      // constant 1/n over the node set (preserved old behavior)
-      if (iters <= 0 && tol == 0)
-        return symDeg.select(col("src")).distinct()
-          .select(col("src").as("node"),
-            (round(lit(1.0 / n) * 1e6) / 1e6).as("rank"))
       // r⁰ = 1/n is the same CONSTANT on every node, so iteration 1
       // needs no rank table and no join: its mass term is the literal
       // (1/n)/deg over the annotated edge scan. Every node appears as
@@ -260,7 +261,7 @@ object Graph {
     * the [[Dedup.dupClusters]] union-find device applied here: the
     * edge set IS bounded model-scale state below the gate, so the
     * distributed loop's per-iteration scheduling (≈18 jobs for 256
-    * edges, CcProbe r5) buys nothing. The update is the SAME formula
+    * edges, PERF_r05.md) buys nothing. The update is the SAME formula
     * as the distributed loop ((1−δ)/n + δ·Σ r/deg over in-edges), the
     * final rounding mirrors Spark's Round-on-double semantics
     * (BigDecimal.valueOf, HALF_UP), and the convergence/throw

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -48,21 +48,14 @@ object AnnScaleProbe {
     val factors =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(10, 100, 1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the probe's codegen assert: CODEGEN_ONLY forbids the
-      // interpreted expression path, fallback=false makes a
-      // whole-stage compile failure throw — a janino overflow
-      // (the r13 512-cell ceiling) fails the run instead of
-      // silently degrading to interpreted evaluation
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.sql.codegen.fallback", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the probe's codegen assert: CODEGEN_ONLY forbids the
+    // interpreted expression path, fallback=false makes a
+    // whole-stage compile failure throw — a janino overflow
+    // (the r13 512-cell ceiling) fails the run instead of
+    // silently degrading to interpreted evaluation
+    val spark = LocalSession(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
 
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -85,10 +78,7 @@ object AnnScaleProbe {
           (col("id") / baseN).cast("long") * lit(1000000000L)).as("vec_id"),
         (col("id") / baseN).cast("int").as("k"))
       .select(col("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)), i =>
-          (pmod(xxhash64(col("vec_id") * lit(64L) + i.cast("long"), col("k")),
-            lit(2000000L)).cast("double") / lit(1000000.0) - lit(1.0))
-            .cast("float")).as("embedding"))
+        ScaleUp.replicaEmbedding(col("vec_id"), col("k"), dim).as("embedding"))
 
     factors.foreach { f =>
       val corpusPath = s"$root/corpus_$f"

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.sources.Tables
 
 /** IVF-index state-growth probe (VERDICT r11 #6): the LSH dedup index
@@ -36,16 +36,8 @@ object AnnStateGrowthProbe {
     val dir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 100
     val nWaves = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (nBatches + 16).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      "spark.sql.streaming.numRecentProgressUpdates" -> (nBatches + 16).toString)
     val base = Files.createTempDirectory("ann_state_probe").toString
     val idx = s"$base/idx"
 
@@ -57,11 +49,7 @@ object AnnStateGrowthProbe {
 
     def replica(k: Int) = e
       .withColumn("vec_id", col("vec_id") + lit(k * 1000000000L))
-      .withColumn("embedding",
-        transform(sequence(lit(0), lit(dim - 1)), i =>
-          (pmod(xxhash64(col("vec_id") * lit(64L) + i.cast("long"), lit(k)),
-            lit(2000000L)).cast("double") / lit(1000000.0) - lit(1.0))
-            .cast("float")))
+      .withColumn("embedding", ScaleUp.replicaEmbedding(col("vec_id"), lit(k), dim))
 
     def fileSizes(): Map[String, Long] = {
       val b = Map.newBuilder[String, Long]

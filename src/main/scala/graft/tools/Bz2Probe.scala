@@ -3,7 +3,7 @@ package graft.tools
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** A2 split-claim probe (VERDICT r10 #7): the ETL source reads `.bz2`
   * dumps through Hadoop's splittable BZip2 codec, parallelizing what
@@ -110,15 +110,7 @@ object Bz2Probe {
     val dir = if (args.length > 1) args(1) else "/tmp/bz2probe"
     val streams = if (args.length > 2) args(2).toInt else 30
     Files.createDirectories(Paths.get(dir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val jsonPath = s"$dir/dump.json"
     val bz2Path = s"$dir/dump.json.bz2"

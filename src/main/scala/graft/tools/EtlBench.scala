@@ -3,6 +3,7 @@ package graft.tools
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import graft.ingest.Load
 
 /** ETL throughput benchmark against the reference's headline number:
@@ -88,15 +89,7 @@ object EtlBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 200000
     val dump = if (args.length > 1) args(1) else "/tmp/etl_bench_dump.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val eps = timedLoad(spark, n, dump, "/tmp/etl_bench_out")
 

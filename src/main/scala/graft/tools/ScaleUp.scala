@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.LocalSession
 
 /** Deterministic N× scale-up of a testdata directory — the sf1 scale
   * rehearsal's data generator. Each replica k gets disjoint key
@@ -31,23 +32,25 @@ object ScaleUp {
 
   private val K = 1000000000L // replica key offset; K % 5 == 0
 
+  /** Replica `k`'s embedding for `vecId`: `dim` fresh deterministic
+    * xxhash-derived components in [-1, 1) — the replica convention
+    * shared by the ANN scale and state-growth probes. */
+  private[tools] def replicaEmbedding(vecId: Column, k: Column, dim: Int): Column =
+    transform(sequence(lit(0), lit(dim - 1)), i =>
+      (pmod(xxhash64(vecId * lit(64L) + i.cast("long"), k),
+        lit(2000000L)).cast("double") / lit(1000000.0) - lit(1.0))
+        .cast("float"))
+
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      // when events.ts is parquet TIMESTAMP(NANOS) (older testdata
-      // generations): read it as a raw long and write it back as plain
-      // INT64 nanos — Tables.load's schema-adaptive read (LongType →
-      // `ts DIV 1000`) then works on the scaled dir exactly as on the
-      // source dir. µs-generation data ignores this flag entirely and
-      // round-trips as TIMESTAMP.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // when events.ts is parquet TIMESTAMP(NANOS) (older testdata
+    // generations): read it as a raw long and write it back as plain
+    // INT64 nanos — Tables.load's schema-adaptive read (LongType →
+    // `ts DIV 1000`) then works on the scaled dir exactly as on the
+    // source dir. µs-generation data ignores this flag entirely and
+    // round-trips as TIMESTAMP.
+    val spark = LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
@@ -109,10 +112,7 @@ object ScaleUp {
     replicate("embeddings", Seq("vec_id"), (d, k) =>
       if (k == 0) d
       else d.withColumn("embedding",
-        transform(sequence(lit(0), lit(dim - 1)), i =>
-          (pmod(xxhash64(col("vec_id") * lit(64L) + i.cast("long"), lit(k)),
-            lit(2000000L)).cast("double") / lit(1000000.0) - lit(1.0))
-            .cast("float"))))
+        replicaEmbedding(col("vec_id"), lit(k), dim)))
 
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -27,17 +27,9 @@ object StateGrowthProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep every batch's progress record (default window is 100)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (nBatches + 16).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // keep every batch's progress record (default window is 100)
+    val spark = LocalSession(
+      "spark.sql.streaming.numRecentProgressUpdates" -> (nBatches + 16).toString)
     val base = Files.createTempDirectory("state_probe").toString
 
     val d = Tables.load(spark, dir, "documents")

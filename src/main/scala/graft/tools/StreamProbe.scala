@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Merge
@@ -64,14 +64,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val base = Files.createTempDirectory("stream_probe").toString
 
     // ---- upsertStream: versioned target, one delta file per batch

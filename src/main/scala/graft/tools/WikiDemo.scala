@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.LocalSession
 import graft.ingest.Load
 import graft.query.{Ops, Paths}
 
@@ -24,15 +24,7 @@ object WikiDemo {
       if (args.length > 4) Load.BulkFilterScript(
         java.nio.file.Files.readString(java.nio.file.Paths.get(args(4))))
       else Load.Bulk
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // A17: live progress (records/bytes/rate) from real task metrics
     // while the dump loads — the reference's ProgressBar, minus the

@@ -1182,6 +1182,12 @@ class OperatorsSpec extends AnyFunSuite {
     val dist = Graph.pageRank(edges, 10, tinyGate = 0).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(dist === r)
+    // the degenerate 0-iteration call (r⁰ = 1/n on every node) too
+    val r0 = Graph.pageRank(edges, 0).collect()
+      .map(x => x.getString(0) -> x.getDouble(1)).toMap
+    assert(r0.size === 6)
+    assert(Graph.pageRank(edges, 0, tinyGate = 0).collect()
+      .map(x => x.getString(0) -> x.getDouble(1)).toMap === r0)
   }
 
   test("bfs: layered min-hops, isolated seed at 0, frontier exhaustion stops early") {
@@ -1217,6 +1223,11 @@ class OperatorsSpec extends AnyFunSuite {
     val deep = Graph.pageRank(edges, 120).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(conv === deep)
+    // the distributed loop's tol stop (incl. its i = 1 delta against
+    // the 1/n literal) agrees with the driver-side loop
+    val distConv = Graph.pageRankConverged(edges, 200, 1e-9, tinyGate = 0)
+      .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+    assert(distConv === conv)
     // a budget too small to reach tol fails loudly, never returns a
     // half-converged ranking
     val ex = intercept[IllegalStateException] {
