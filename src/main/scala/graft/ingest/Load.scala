@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 
 /** Load pipeline (SURVEY §2.A A12-A13, A20): source → normalize →
   * optional pre-write filter → partitioned parquet.
@@ -44,34 +45,32 @@ object Load {
   def run(spark: SparkSession, path: String, outDir: String,
           format: String = "json", lang: String = "en",
           mode: LoadMode = Bulk): WikiTables = {
-    // persist: entities and claims are two write ACTIONS off one
-    // normalize — without this the full text scan + from_json parse
+    // cache: entities and claims are two write ACTIONS off one
+    // normalize — without it the full text scan + from_json parse
     // (the dominant ETL cost) runs twice
-    val normalized = Transform.normalize(
-      WikidataSource.read(spark, path, format), lang)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Snapshot.cached(Transform.normalize(
+        WikidataSource.read(spark, path, format), lang)) { normalized =>
+      var entities = Transform.entityMini(normalized)
+      var claims = Transform.claimsRows(normalized)
+      mode match {
+        case Bulk =>
+        case BulkFilter(f) =>
+          val (e2, c2) = f(entities, claims)
+          entities = e2; claims = c2
+        case BulkFilterScript(script) =>
+          val out = graft.query.SurrealQL.run(
+            WikiTables(entities, claims), script)
+          entities = out.tables.entities; claims = out.tables.claims
+      }
 
-    var entities = Transform.entityMini(normalized)
-    var claims = Transform.claimsRows(normalized)
-    mode match {
-      case Bulk =>
-      case BulkFilter(f) =>
-        val (e2, c2) = f(entities, claims)
-        entities = e2; claims = c2
-      case BulkFilterScript(script) =>
-        val out = graft.query.SurrealQL.run(
-          WikiTables(entities, claims), script)
-        entities = out.tables.entities; claims = out.tables.claims
+      entities
+        .withColumn("tb", col("id.tb"))
+        .write.mode(SaveMode.Overwrite).partitionBy("tb")
+        .parquet(s"$outDir/entities")
+      claims
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/claims")
     }
-
-    entities
-      .withColumn("tb", col("id.tb"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tb")
-      .parquet(s"$outDir/entities")
-    claims
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/claims")
-    normalized.unpersist()
     open(spark, outDir)
   }
 

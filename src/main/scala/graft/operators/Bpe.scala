@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Distributed BPE (byte-pair-encoding) tokenizer training — the
@@ -81,8 +82,7 @@ object Bpe {
     * materialized as literals, so downstream writes replay nothing. */
   def train(docs: DataFrame, text: Column, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
-    val wc = wordCounts(docs, text).persist()
-    try {
+    Snapshot.cached(wordCounts(docs, text)) { wc =>
       var cur = wc.select(col("w"), charDelim(col("w")).as("s"), col("cnt"))
       val merges = Seq.newBuilder[(Int, String, String, Long)]
       var exhausted = false
@@ -102,7 +102,7 @@ object Bpe {
       }
       import spark.implicits._
       merges.result().toDF("merge_rank", "pair", "merged", "cnt")
-    } finally { wc.unpersist(); () }
+    }
   }
 
   /** Batched trainer: identical output to [[train]] (per-merge
@@ -154,8 +154,7 @@ object Bpe {
   def trainBatched(docs: DataFrame, text: Column, nMerges: Int,
                    batchK: Int = 16, checkpointEvery: Int = 50): DataFrame = {
     val spark = docs.sparkSession
-    val wc = wordCounts(docs, text).persist()
-    try {
+    Snapshot.cached(wordCounts(docs, text)) { wc =>
       var cur = wc.select(col("w"), charDelim(col("w")).as("s"), col("cnt"))
       val merges = Seq.newBuilder[(Int, String, String, Long)]
       var done = 0
@@ -222,7 +221,7 @@ object Bpe {
       }
       import spark.implicits._
       merges.result().toDF("merge_rank", "pair", "merged", "cnt")
-    } finally { wc.unpersist(); () }
+    }
   }
 
   /** Driver-side trainer over the COLLECTED dictionary — the

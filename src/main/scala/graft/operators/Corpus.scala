@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.functions.HashExpressions
 import graft.sources.Tables
 
@@ -335,14 +336,14 @@ object Corpus {
     // the 5-int-per-doc feature table instead of re-tokenizing the
     // corpus (one text scan total, the fastText-pipeline shape of
     // "extract features once, fit+apply on the features")
-    val feats = Dedup.materialize(
+    val feats = Snapshot(
       df.select(col("doc_id"),
         (nTokens >= 10 && mtl >= 2.0 && mtl <= 12.0).as("keep"),
         least(floor(nTokens.cast("double") / 10.0), lit(20.0)).cast("long")
           .as("lb"),
         floor(mtl).cast("long").as("mb"),
         floor(stopRatio * 10.0).cast("long").as("sb")),
-      "nb_feats")
+      "nb_feats").df
     // ONE training scan: the three per-feature count tables melt into
     // a single (feature, value, class-counts) aggregation — the naive
     // formulation (tot + one groupBy per feature) re-featurized the
@@ -693,11 +694,11 @@ object Corpus {
       // ~3 orders narrower than the text it stands for (the guide §8
       // keys-not-payloads move; the r14 signature-snapshot argument),
       // so one narrow write buys three corpus passes at any scale.
-      val kept = Dedup.materialize(
+      val kept = Snapshot(
         d.join(keep, Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("source"),
             size(tokens(col("text"))).as("n_tokens")),
-        "mix_kept")
+        "mix_kept").df
       val mixed = temperatureMix(kept, col("source"), col("doc_id"),
         total = 150L, alphaPct = 50)
       packSequences(mixed, col("doc_id"),

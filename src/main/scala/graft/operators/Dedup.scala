@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Deduplication operators for a training-data pipeline: exact,
@@ -39,55 +40,6 @@ object Dedup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
-  /** Default per-JVM snapshot root (local[*] runs): a temp directory
-    * deleted at JVM exit. On a REAL cluster a driver-local path is
-    * invisible to executors — set `spark.graft.snapshotDir` to a
-    * shared-filesystem location (hdfs://, s3a://…) and every snapshot
-    * write/read/delete rides [[graft.sources.Dfs]] there instead; the
-    * per-site previous-snapshot deletion keeps that location bounded
-    * at ~one live snapshot per call site. */
-  private lazy val localSnapshotBase: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_snapshots_")
-    sys.addShutdownHook {
-      graft.sources.LocalFs.deleteRecursively(p.toFile)
-    }
-    p
-  }
-
-  /** Shared-FS snapshot roots are RUN-SCOPED (`run_<uuid>` subdir per
-    * JVM, deleted through the Dfs seam at exit) so consecutive runs
-    * never collide and a healthy run leaves nothing behind; a crashed
-    * run's directory is inert garbage a periodic `run_*` sweep of the
-    * configured location reclaims. */
-  private val sharedRunDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def snapshotRoot(s: SparkSession): String =
-    s.conf.getOption("spark.graft.snapshotDir") match {
-      case None => localSnapshotBase.toString
-      case Some(base) =>
-        sharedRunDirs.computeIfAbsent(base, { b =>
-          val dir = s"${b.stripSuffix("/")}/run_${java.util.UUID.randomUUID()}"
-          sys.addShutdownHook { graft.sources.Dfs.default.delete(dir) }
-          dir
-        })
-    }
-
-  /** Write-and-readback snapshot of a SMALL intermediate (candidate
-    * pairs, shard signatures): the DAG above it runs exactly once and
-    * nothing lingers in storage memory after the returned plan is
-    * consumed — unlike persist(), whose blocks a lazily-returned
-    * DataFrame can never safely unpersist. At 100 TB this is the same
-    * move as checkpointing a candidate list to the lake between the
-    * discovery and verify stages. Schema is pinned on read so an empty
-    * snapshot round-trips. Every call gets a UNIQUE directory (a
-    * monotonic counter — two calls from one site/thread never alias),
-    * and the PREVIOUS snapshot of the same (site, thread) is deleted
-    * only after the new one is fully written: disk stays bounded at
-    * ~one live snapshot per site while a concurrently-consumed earlier
-    * result is never ripped out from under a running job mid-write.
-    * (Results are consumed promptly by every in-repo call site; a
-    * caller holding a returned plan across a LATER same-site call on
-    * the same thread must collect it first.) */
   /** Edge-count threshold below which [[connectedComponents]] runs its
     * propagation loop single-partition with AQE off (pure-scheduling
     * regime — see the plan-mode comment in the method). 1M edges ≈
@@ -98,51 +50,6 @@ object Dedup {
     * [[connectedComponents]] — ≤ ~1.6 MB of pairs, the bounded
     * driver-model regime. */
   private val TinyCcEdges = 100000L
-
-  private val snapshotSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastSnapshot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def materialize(df: DataFrame, site: String): DataFrame =
-    materializeDir(df, site)._1
-
-  /** [[materialize]] with the row count observed ON the write (the
-    * CC/Graph observe device, zero extra jobs) — for iterative loops
-    * whose stop test is "is the frontier empty", which otherwise pay
-    * a whole extra count/limit job per round. */
-  private[graft] def materializeCounted(df: DataFrame,
-                                        site: String): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val snap = materialize(
-      df.observe(obs, coalesce(count(lit(1)), lit(0L)).as("n")), site)
-    (snap, obs.get("n").asInstanceOf[Long])
-  }
-
-  /** [[materialize]] that also returns the snapshot directory, for
-    * call sites that re-read the snapshot through a DIFFERENT session
-    * (the connected-components small-graph plan mode below, and the
-    * [[WordPiece]] merge-loop session since r15; extending the device
-    * to the [[Graph]] loops was measured SLOWER at every probed size
-    * and rejected — see OPTIMIZATION_r15.md). */
-  private[graft] def materializeDir(df: DataFrame, site: String): (DataFrame, String) = {
-    val key = s"${site}_t${Thread.currentThread().getId}"
-    val dir =
-      s"${snapshotRoot(df.sparkSession)}/${key}_c${snapshotSeq.incrementAndGet()}"
-    // lighter commit for snapshot-sized intermediates (r15, VERDICT r14
-    // #4): skip the _SUCCESS marker (nothing in-repo reads it — Merge's
-    // CompleteMarker exists precisely because clusters disable it) and
-    // skip the compression codec — snapshots here are hash/id/label
-    // tables (signatures, band keys, frontiers, candidate pairs), high-
-    // entropy bytes a general codec barely shrinks, while parquet's
-    // dictionary/RLE encoding still applies. Both are per-write options:
-    // published outputs (Layout/Merge) keep their own settings.
-    df.write.mode(SaveMode.Overwrite)
-      .option("compression", "none")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(dir)
-    Option(lastSnapshot.put(key, dir))
-      .foreach(graft.sources.Dfs.default.delete)
-    (df.sparkSession.read.schema(df.schema).parquet(dir), dir)
-  }
 
   /** Canonical text normalization for near-exact dedup. */
   def normalized(text: Column): Column =
@@ -222,7 +129,7 @@ object Dedup {
     // aggregation ran TWICE per call (r15; measured 27.1 shuffle-MB
     // vs the Jaccard twin's 16.7 at sf0.1). The pair table is
     // candidate-pairs-sized, the smallest relation in the operator.
-    val inter = materialize(shinglePairCounts(df), "cont_pairs")
+    val inter = Snapshot(shinglePairCounts(df), "cont_pairs").df
     val directed = inter.select(col("doc_a").as("src"), col("doc_b").as("dst"),
         (col("i").cast("double") / col("na").cast("double")).as("c"))
       .union(inter.select(col("doc_b"), col("doc_a"),
@@ -396,7 +303,7 @@ object Dedup {
     // three orders of magnitude narrower than the text it stands for
     // (the index-table argument at line ~410), so one write buys two
     // saved corpus passes at any scale.
-    val sigd = materialize(signatures(df), "mh_sigs")
+    val sigd = Snapshot(signatures(df), "mh_sigs").df
 
     // band key: ONE definition ([[bandKeyArray]]) shared with the
     // persisted-index paths — a second inline copy of the key formula
@@ -475,9 +382,7 @@ object Dedup {
         s"nBuckets\t$nBuckets\nbands\t$bands\nrows\t$rows\n")
     }
     // both writes consume the signatures — compute the kernel once
-    val sigd = signatures(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(signatures(df)) { sigd =>
       val bw = bandKeys(sigd, bands, rows).write
         .bucketBy(nBuckets, "bucket").sortBy("bucket")
         .mode(SaveMode.Overwrite)
@@ -486,7 +391,7 @@ object Dedup {
       val sw = sigd.write.mode(SaveMode.Overwrite)
       location.fold(sw)(dir => sw.option("path", s"$dir/sigs"))
         .saveAsTable(s"${table}_sigs")
-    } finally { sigd.unpersist(); () }
+    }
     // band geometry lives WITH the table, not in callers' heads: the
     // probe/append paths read it back, so a caller passing different
     // bands/rows after a restart cannot silently bucket probe keys
@@ -512,9 +417,7 @@ object Dedup {
                        bands0: Int = 16, rows0: Int = 4): Unit = {
     // appends must key bands exactly like the on-disk index
     val (bands, rows) = lshGeometry(df.sparkSession, table, bands0, rows0)
-    val sigd = signatures(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(signatures(df)) { sigd =>
       // collapse to ONE writer task before the bucketed write:
       // without it every append emits nBuckets x input-partitions
       // files (the StateGrowthProbe's 100-append stream accumulated
@@ -534,7 +437,7 @@ object Dedup {
         .mode(SaveMode.Append).saveAsTable(s"${table}_bands")
       sigd.repartition(1).write
         .mode(SaveMode.Append).saveAsTable(s"${table}_sigs")
-    } finally { sigd.unpersist(); () }
+    }
   }
 
   /** Compact an external LSH index (the `location/{bands,sigs}`
@@ -651,25 +554,23 @@ object Dedup {
     // between windowing the full band table per shard and touching
     // ~|shard × bands| buckets of it. False positives only admit
     // extra buckets into the exact bucket join — never wrong pairs.
-    // The build rides observe() on the snapshot WRITE (the CC
-    // convergence trick): each row contributes its band-key array to
-    // the bloom aggregate during the job that materializes the
-    // signatures — the probe path spends NO separate count or
-    // aggregate jobs before its one probe job. Fixed `bloomBits`
-    // replaces the former pre-count sizing: 2^22 bits holds ~400k
-    // probe keys comfortably (~7 hashes either way); size it to
-    // ~10 bits per expected |shard|×bands key at larger shards —
-    // an overfilled bloom only admits extra buckets, never wrong
-    // pairs, and an underfilled one just has a lower FP rate.
-    val bloomObs = org.apache.spark.sql.Observation()
-    val sigNew = materialize(
-      signatures(newDocs).observe(bloomObs,
-        graft.functions.HashExpressions.bloom_longs_agg(
-          bandKeyArray(col("sig"), bands, rows), bloomBits).as("bloom")),
-      "probe_sigs")
+    // The build rides the snapshot WRITE ([[Snapshot.observe]]):
+    // each row contributes its band-key array to the bloom aggregate
+    // during the job that writes the signatures — the probe path
+    // spends NO separate count or aggregate jobs before its one probe
+    // job. Fixed `bloomBits` replaces the former pre-count sizing:
+    // 2^22 bits holds ~400k probe keys comfortably (~7 hashes either
+    // way); size it to ~10 bits per expected |shard|×bands key at
+    // larger shards — an overfilled bloom only admits extra buckets,
+    // never wrong pairs, and an underfilled one just has a lower FP
+    // rate.
+    val (sigs, bloom) = Snapshot.observe[Array[Byte]](signatures(newDocs),
+      "probe_sigs", graft.functions.HashExpressions.bloom_longs_agg(
+        bandKeyArray(col("sig"), bands, rows), bloomBits).as("bloom"))
+    val sigNew = Snapshot(sigs, "probe_sigs").df
     val probe = bandKeys(sigNew, bands, rows)
       .select(col("doc_id").as("new_id"), col("bucket"))
-    val bloomBytes = bloomObs.get("bloom").asInstanceOf[Array[Byte]]
+    val bloomBytes = bloom()
     // exclude the shard's OWN rows from the index view before the
     // bucket counts: a replayed batch whose bands already landed then
     // probes the exact pre-append state, so its match set — including
@@ -862,9 +763,9 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     val mhCand = minhashPairs(df, bands = 32, rows = 2, maxBucket = 4096)
       .select(col("doc_a"), col("doc_b"))
-    val pairs = materialize(
+    val pairs = Snapshot(
       simCand.union(mhCand).distinct(),
-      "simhash_pairs")
+      "simhash_pairs").df
     // once-shingled array rerank over the pairs in hand (r15) — see
     // [[rerankPairs]]
     rerankPairs(df, pairs, minJaccard)
@@ -913,9 +814,9 @@ object Dedup {
     // the pair list feeds BOTH the candidate-doc set and the final
     // join — snapshot it (O(near-dup pairs), tiny next to the corpus)
     // so the LSH discovery DAG runs once with no lingering persist()
-    val pairs = materialize(
+    val pairs = Snapshot(
       minhashPairs(df, bands, rows, minEst).select(col("doc_a"), col("doc_b")),
-      "minhash_pairs")
+      "minhash_pairs").df
     // exact-rerank only the docs LSH surfaced — per-doc shingle sets
     // are independent, so per-pair Jaccard is unchanged, and the
     // quadratic kernel never sees the full corpus (the discovery/
@@ -960,11 +861,11 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("doc_id")))
       // no distinct: a left-semi probe side tolerates duplicates, and
       // the dedup exchange cost more than the (tiny) duplicate keys
-    val candSh = materialize(
+    val candSh = Snapshot(
       df.join(candDocs, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
           array_distinct(shingles(col("text"))).as("sh")),
-      "rerank_sh")
+      "rerank_sh").df
     pairs
       .join(candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
         "doc_a")
@@ -1009,14 +910,11 @@ object Dedup {
     // the symmetric edge set feeds every round — snapshot it once
     // instead of re-running the union+distinct per iteration; its size
     // is observed ON the write (zero extra jobs) to pick the plan mode
-    val symObs = org.apache.spark.sql.Observation()
-    val (symSnap, symDir) = materializeDir(
+    val (symSnap, edgeCount) = Snapshot.counted(
       edges.toDF("a", "b")
         .union(edges.toDF("b", "a").select(col("a"), col("b")))
-        .distinct()
-        .observe(symObs, coalesce(count(lit(1)), lit(0L)).as("n")),
+        .distinct(),
       "cc_edges")
-    val edgeCount = symObs.get("n").asInstanceOf[Long]
     // Small-graph plan mode: after exact rerank the surviving edge set
     // is usually TINY relative to the corpus (256 rows at sf0.1), and
     // the loop's cost is pure scheduling — with AQE on, every exchange
@@ -1040,8 +938,7 @@ object Dedup {
     // hand back a local frame. Identical output contract; the
     // distributed loop remains the path for real edge sets.
     if (edgeCount <= tinyThreshold) {
-      val pairs = caller.read.schema(symSnap.schema).parquet(symDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val pairs = symSnap.df.collect().map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -1074,9 +971,8 @@ object Dedup {
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2
     }
-    val sym =
-      if (small) sess.read.schema(symSnap.schema).parquet(symDir) else symSnap
-    var (labels, labelsDir) = materializeDir(
+    val sym = if (small) symSnap.in(sess) else symSnap.df
+    var labels = Snapshot(
       sym.select(a.as("node")).distinct()
         .select(col("node"), col("node").as("label")),
       "cc_labels_0")
@@ -1115,17 +1011,15 @@ object Dedup {
       // — a shallow graph (the common dedup-cluster case) converges
       // in ONE write where the round-4 shape took three. The observe
       // rides the snapshot write itself (zero extra jobs).
-      val once = round(labels)
+      val once = round(labels.df)
       val twice = round(once.select(col("node"), col("label")))
-      val obs = org.apache.spark.sql.Observation()
-      val (next, nextDir) = materializeDir(
-        twice.observe(obs,
-          coalesce(sum(when(col("label") =!= col("prev"), 1L)
-            .otherwise(0L)), lit(0L)).as("changed")), // coalesce: empty graph sums to null
-        s"cc_labels_${(i + 1) % 2}") // alternate: never overwrite the dir being read
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      labels = next.select(col("node"), col("label"))
-      labelsDir = nextDir
+      // alternate sites: never overwrite the dir being read
+      val site = s"cc_labels_${(i + 1) % 2}"
+      val (observed, changed) = Snapshot.observe[Long](twice, site,
+        coalesce(sum(when(col("label") =!= col("prev"), 1L)
+          .otherwise(0L)), lit(0L)).as("changed")) // coalesce: empty graph sums to null
+      labels = Snapshot(observed, site)
+      converged = changed() == 0L
       i += 1
     }
     // exiting via the cap would silently publish UNCONVERGED (wrong)
@@ -1137,15 +1031,8 @@ object Dedup {
         s"(2 pointer-jumped rounds each; cluster diameter is pathological); raise maxIter")
     // hand the final snapshot back through the CALLER's session so the
     // result composes with caller-session plans (the loop may have run
-    // in the small-graph clone); re-reading the already-written dir
-    // costs zero jobs (schema pinned)
-    val out =
-      if (small)
-        caller.read.schema(
-          org.apache.spark.sql.types.StructType(labels.schema.fields
-            :+ org.apache.spark.sql.types.StructField("prev",
-              labels.schema("label").dataType))).parquet(labelsDir)
-      else labels
+    // in the small-graph clone)
+    val out = if (small) labels.in(caller) else labels.df
     out.select(col("node").as("doc_id"), col("label").as("component"))
   }
 
@@ -1239,12 +1126,12 @@ object Dedup {
     val shard = df.filter(col("doc_id") % 5 === 0)
     val corpus = df.filter(col("doc_id") % 5 =!= 0)
     initLshIndex(corpus, "graft_inc_idx")
-    val cand = materialize(
+    val cand = Snapshot(
       dedupAgainstIndex(s, shard, "graft_inc_idx")
         .select(col("new_id"), col("dup_of"),
           least(col("new_id"), col("dup_of")).as("doc_a"),
           greatest(col("new_id"), col("dup_of")).as("doc_b")),
-      "incremental_cand")
+      "incremental_cand").df
     // once-shingled array rerank over the discovered pairs (r15) —
     // see [[rerankPairs]]; cand is a snapshot, so referencing it here
     // and inside the rerank costs no recompute

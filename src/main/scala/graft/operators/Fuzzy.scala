@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Edit-distance fuzzy join — entity-resolution / near-duplicate
@@ -101,12 +102,12 @@ object Fuzzy {
     // read pins the pair-expansion width AND pre-distributes on dk —
     // exactly the distribution the at-scale SMJ needs, so past the
     // broadcast threshold it replaces (not adds to) the join exchange.
-    val keyed = Dedup.materialize(
+    val keyed = Snapshot(
       df.select(key.as("nm")).distinct()
         .repartition(width, col("nm"))
         .select(col("nm"),
           explode(deletionVariants(col("nm"), tau)).as("dk")),
-      "fuzzy_keys")
+      "fuzzy_keys").df
       .repartition(width, col("dk"))
     keyed.as("a")
       .join(keyed.as("b"),
@@ -143,10 +144,10 @@ object Fuzzy {
     * unique-name corpora. */
   def resolveEntities(df: DataFrame, key: Column, name: Column,
                       tau: Int): DataFrame = {
-    val ents = Dedup.materialize(
-      df.select(key.cast("long").as("ek"), name.as("nm")), "er_entities")
-    val nameId = Dedup.materialize(
-      ents.groupBy(col("nm")).agg(min(col("ek")).as("nameid")), "er_names")
+    val ents = Snapshot(
+      df.select(key.cast("long").as("ek"), name.as("nm")), "er_entities").df
+    val nameId = Snapshot(
+      ents.groupBy(col("nm")).agg(min(col("ek")).as("nameid")), "er_names").df
     val pairs = editSelfJoin(nameId, col("nm"), tau)
     val edges = pairs
       .join(nameId.select(col("nameid").as("ka"), col("nm").as("name_a")),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Geospatial operators — the query family the reference's
@@ -117,10 +118,10 @@ object Geo {
       .agg(min(struct(col("dist_km"), col("right_id"))).as("best"))
       .select(col("left_id"), col("best.right_id").as("nearest_id"),
         col("best.dist_km").as("dist_km"))
-    // ring snapshots go through Dedup.materialize (write-and-readback),
-    // NOT localCheckpoint: checkpoint blocks persist past the returned
+    // ring snapshots go through Snapshot (write-and-readback), NOT
+    // localCheckpoint: checkpoint blocks persist past the returned
     // plan and PersistHygieneSpec pins the registry to zero leaked
-    // RDDs. Distinct site per ring — materialize reclaims per-site,
+    // RDDs. Distinct site per ring — Snapshot reclaims per-site,
     // and every ring's snapshot must outlive the final union.
     //
     // Ring schedule ×4 (r14): per-ring bests are GLOBAL bests at any
@@ -128,9 +129,9 @@ object Geo {
     // physical knob — ×2 paid ~5 jobs per ring across 4 rings at
     // sf0.1 where ×4 resolves the same queries in 2–3; the candidate
     // sets of the larger early rings stay bounded by local density.
-    // The emptiness probe rides the remaining-write as an observe()
-    // (zero extra jobs, the CC device).
-    var remaining = Dedup.materialize(left, "geo_near_rem")
+    // The emptiness probe rides the remaining-write
+    // ([[Snapshot.counted]], zero extra jobs).
+    var remaining = Snapshot(left, "geo_near_rem").df
     var results = List.empty[DataFrame]
     var r = radiusKm / 8
     var ring = 0
@@ -139,15 +140,15 @@ object Geo {
       val cap = math.min(r, radiusKm)
       // a point's ring-cap nearest has dist <= cap, so nothing outside
       // the ring can beat it: per-ring bests ARE global bests
-      val found = Dedup.materialize(
-        best(radiusJoin(remaining, right, cap)), s"geo_near_hits_r$ring")
+      val found = Snapshot(
+        best(radiusJoin(remaining, right, cap)), s"geo_near_hits_r$ring").df
       results ::= found
       if (cap >= radiusKm) done = true
       else {
-        val (rem, nRem) = Dedup.materializeCounted(remaining.join(
+        val (rem, nRem) = Snapshot.counted(remaining.join(
           found.select(col("left_id").as("id")), Seq("id"), "left_anti"),
           "geo_near_rem")
-        remaining = rem
+        remaining = rem.df
         done = nRem == 0
       }
       r *= 4; ring += 1
@@ -173,7 +174,7 @@ object Geo {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("left_id"))
       .orderBy(col("dist_km"), col("right_id"))
-    // snapshot discipline: see nearestWithin — materialize, never
+    // snapshot discipline: see nearestWithin — Snapshot, never
     // localCheckpoint (PersistHygieneSpec), one site per ring.
     // Ring schedule ×4 + observe-counted frontier (r14): a query's
     // in-ring top-k is its GLOBAL top-k at whatever ring first holds
@@ -182,22 +183,21 @@ object Geo {
     // their exchanges) the straggler tail pays. Measured at sf0.1: 55
     // jobs / 4.2 s warm under ×2 with a per-ring count probe; ×4 with
     // the emptiness test observed on the remaining-write halves both.
-    var (remaining, nRem) =
-      Dedup.materializeCounted(queries, "geo_knn_rem")
+    var (remaining, nRem) = Snapshot.counted(queries, "geo_knn_rem")
     var results = List.empty[DataFrame]
     var r = r0Km
     var ring = 0
     while (ring < maxRings && nRem > 0) {
-      val cand = radiusJoin(remaining, points, r)
+      val cand = radiusJoin(remaining.df, points, r)
       val sat = cand.groupBy(col("left_id"))
         .agg(count(lit(1)).as("n")).filter(col("n") >= k)
         .select(col("left_id"))
-      results ::= Dedup.materialize(cand.join(sat, "left_id")
+      results ::= Snapshot(cand.join(sat, "left_id")
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= k)
         .select(col("left_id"), col("right_id"), col("rnk"), col("dist_km")),
-        s"geo_knn_hits_r$ring")
-      val (rem, n) = Dedup.materializeCounted(remaining
+        s"geo_knn_hits_r$ring").df
+      val (rem, n) = Snapshot.counted(remaining.df
         .join(sat.withColumnRenamed("left_id", "id"), Seq("id"), "left_anti"),
         "geo_knn_rem")
       remaining = rem; nRem = n

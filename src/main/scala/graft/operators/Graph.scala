@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Graph analytics over the relational tables: PageRank on the
@@ -58,18 +59,12 @@ object Graph {
 
   /** The symmetrized edge set — the ONE definition of what "the same
     * undirected graph" means for every graph operator here (pagerank /
-    * PPR / label propagation / BFS), shared by both snapshot variants
-    * below; inline copies could drift on e.g. self-loop or distinct()
-    * handling (code-review r10). */
+    * PPR / label propagation / BFS), laid over the ASYMMETRIC edge
+    * snapshot each of them writes; inline copies could drift on e.g.
+    * self-loop or distinct() handling (code-review r10). */
   private def symUnion(edges: DataFrame): DataFrame =
     edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
-
-  /** Snapshot the ASYMMETRIC list, return the lazy symmetrized view —
-    * half the write of snapshotting the union (see
-    * [[edgeSnapshotCounted]]). */
-  private def symSnapshot(edges: DataFrame, site: String): DataFrame =
-    symUnion(Dedup.materialize(edges, site))
 
   /** Snapshot of the ASYMMETRIC edge list with its row count observed
     * on the write, plus the lazy symmetrized view over it (r14): the
@@ -80,15 +75,12 @@ object Graph {
     * mirrored duplicates). Downstream consumers that scan the
     * symmetrized view twice re-read the half-size snapshot twice —
     * the same bytes as one full-size scan, minus the doubled write.
-    * The observe rides the write (zero extra jobs — the CC move);
-    * only gate-dependent call sites block on it. */
+    * The count rides the write ([[Snapshot.counted]], zero extra
+    * jobs). */
   private def edgeSnapshotCounted(edges: DataFrame,
                                   site: String): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val snap = Dedup.materialize(
-      edges.observe(obs, coalesce(count(lit(1)), lit(0L)).as("n")),
-      site)
-    (symUnion(snap), 2L * obs.get("n").asInstanceOf[Long])
+    val (snap, n) = Snapshot.counted(edges, site)
+    (symUnion(snap.df), 2L * n)
   }
 
   /** Fixed-iteration damped PageRank over an undirected edge list
@@ -154,9 +146,9 @@ object Graph {
     // and so never needs to exist as a frame at all: iteration 1
     // folds it into the edge scan (see the loop). One V-row
     // write-and-readback pass gone at every scale.
-    val degObs = org.apache.spark.sql.Observation()
-    val deg = symSnap.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .observe(degObs, coalesce(count(lit(1)), lit(0L)).as("n"))
+    val (deg, nodes) = Snapshot.observe[Long](
+      symSnap.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      "pr_deg", Snapshot.rowCount)
     // the FUSED iteration shape (VERDICT r13 #7), gated on edge
     // count: above `fusedPrSymEdges` the edge table is pre-partitioned
     // on the join key ONCE and cached, so each of the k iterations
@@ -171,28 +163,23 @@ object Graph {
     // driver-local tiny gate. The shuffle_hash hint on the small side
     // removes the per-iteration sort SMJ would re-impose on the
     // cached edges; map-side partial aggregation bounds the groupBy's
-    // shuffle at O(partitions × nodes). The final vector is pinned
-    // (localCheckpoint) before the cache releases in the finally, so
-    // the returned plan never recomputes against the dropped cache.
+    // shuffle at O(partitions × nodes).
     val fused = mEdges >= fusedPrSymEdges
     val symDegSnap =
-      Dedup.materialize(symSnap.join(deg, "src"), "pr_edges")
-    // the write above just ran (materialize is eager), so the degree
+      Snapshot(symSnap.join(deg, "src"), "pr_edges").df
+    // the write above just ran (snapshots are eager), so the degree
     // subtree has executed exactly once and the node count is in hand
-    val n = degObs.get("n").asInstanceOf[Long]
+    val n = nodes()
     require(n > 0, "pageRank: empty edge set")
     // degenerate 0-iteration call: the result is r⁰ itself — the
-    // constant 1/n over the node set (preserved old behavior), read
-    // from the snapshot so the plan never references the fused cache
+    // constant 1/n over the node set (preserved old behavior)
     if (iters <= 0 && tol == 0)
       return symDegSnap.select(col("src")).distinct()
         .select(col("src").as("node"),
           (round(lit(1.0 / n) * 1e6) / 1e6).as("rank"))
-    val symDeg =
-      if (fused) symDegSnap.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else symDegSnap
-    try {
+    val out = Snapshot.cached(
+        if (fused) symDegSnap.repartition(col("src")) else symDegSnap,
+        enabled = fused) { symDeg =>
       // r⁰ = 1/n is the same CONSTANT on every node, so iteration 1
       // needs no rank table and no join: its mass term is the literal
       // (1/n)/deg over the annotated edge scan. Every node appears as
@@ -244,10 +231,10 @@ object Graph {
       if (tol > 0 && !converged)
         throw new IllegalStateException(
           s"pageRank did not converge to tol=$tol within $iters iterations")
-      if (fused && tol == 0) ranks = ranks.localCheckpoint()
-      ranks.select(col("src").as("node"),
-        (round(col("r") * 1e6) / 1e6).as("rank"))
-    } finally if (fused) symDeg.unpersist(false)
+      ranks
+    }
+    out.select(col("src").as("node"),
+      (round(col("r") * 1e6) / 1e6).as("rank"))
   }
 
   /** Above this many symmetrized edges the power-iteration loops
@@ -327,28 +314,23 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
                            damping: Double = 0.85): DataFrame = {
     val (symSnap, mEdges) = edgeSnapshotCounted(edges, "ppr_sym")
-    // seed count rides observe() on the snapshot write (the CC
-    // move, used three functions up) — the former separate .count()
-    // spent one full extra job AND recomputed the distinct for the
-    // join below (code-review r10)
-    val seedObs = org.apache.spark.sql.Observation()
-    val seedSet = Dedup.materialize(
-      seeds.select(col("node")).distinct()
-        .observe(seedObs, count(lit(1)).as("n")),
-      "ppr_seeds")
-    val nSeeds = seedObs.get("n").asInstanceOf[Long]
+    // seed count rides the snapshot write ([[Snapshot.counted]]) — the
+    // former separate .count() spent one full extra job AND recomputed
+    // the distinct for the join below (code-review r10)
+    val (seedSet, nSeeds) =
+      Snapshot.counted(seeds.select(col("node")).distinct(), "ppr_seeds")
     require(nSeeds > 0, "personalizedPageRank: empty seed set")
     // degree + seed indicator + per-node teleport base, one snapshot
-    val nodeSnap = Dedup.materialize(
+    val nodeSnap = Snapshot(
       symSnap.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .join(seedSet.select(col("node").as("src"),
+        .join(seedSet.df.select(col("node").as("src"),
           lit(true).as("is_seed")), Seq("src"), "left")
         .select(col("src"), col("deg"),
           when(col("is_seed"),
             lit((1 - damping) / nSeeds)).otherwise(lit(0.0)).as("base"),
           when(col("is_seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
             .as("r0")),
-      "ppr_nodes")
+      "ppr_nodes").df
     // base rides the DST side of every edge row (one extra double),
     // so each iteration's update needs NO node-table join: the
     // aggregation recovers it as max(base) — base is functionally
@@ -358,15 +340,13 @@ object Graph {
     // pre-partitioned on the join key once, only the node-sized rank
     // vector shuffles per iteration
     val fused = mEdges >= fusedPrSymEdges
-    val symDegSnap = Dedup.materialize(symSnap
+    val symDegSnap = Snapshot(symSnap
       .join(nodeSnap.select(col("src"), col("deg")), "src")
       .join(nodeSnap.select(col("src").as("dst"), col("base")), "dst"),
-      "ppr_edges")
-    val symDeg =
-      if (fused) symDegSnap.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else symDegSnap
-    try {
+      "ppr_edges").df
+    val out = Snapshot.cached(
+        if (fused) symDegSnap.repartition(col("src")) else symDegSnap,
+        enabled = fused) { symDeg =>
       var ranks = nodeSnap.select(col("src"), col("r0").as("r"))
       var i = 0
       while (i < iters) {
@@ -383,12 +363,10 @@ object Graph {
         if (i % checkpointEvery == 0 && i < iters)
           ranks = ranks.localCheckpoint()
       }
-      // pin before the cache releases: the returned plan must not
-      // recompute the edge join against a dropped cache
-      if (fused) ranks = ranks.localCheckpoint()
-      ranks.select(col("src").as("node"),
-        (round(col("r") * 1e6) / 1e6).as("rank"))
-    } finally if (fused) symDeg.unpersist(false)
+      ranks
+    }
+    out.select(col("src").as("node"),
+      (round(col("r") * 1e6) / 1e6).as("rank"))
   }
 
   /** Distinct part–part co-purchase edges (parts sharing an order) —
@@ -428,7 +406,7 @@ object Graph {
     // snapshot the edge list once — degrees, both wedge-join sides
     // and the closing join all re-derive from it, and the upstream
     // build (the basket self-join) must not re-execute per consumer
-    val e = Dedup.materialize(edges.select(col("a"), col("b")), "tri_edges")
+    val e = Snapshot(edges.select(col("a"), col("b")), "tri_edges").df
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -475,7 +453,7 @@ object Graph {
     * aggregate (partials combine map-side), never a per-node window
     * sort. Labels are 8-byte ids end to end. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
-    val symSnap = symSnapshot(edges, "lpa_sym")
+    val symSnap = symUnion(Snapshot(edges, "lpa_sym").df)
     var labels = symSnap.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     var i = 0
@@ -520,31 +498,30 @@ object Graph {
     * round. On a 100-TB graph the frontier peaks and shrinks while
     * Σ|frontier| = |reached|, so total work is O(E reached) across
     * the whole run vs O(E·hops) for relaxation. Each frontier pins
-    * via [[Dedup.materialize]] (it is read twice next round — the
-    * expansion and the settled union) with the row count observed on
-    * the write, so exhaustion short-circuits the loop with zero extra
+    * via [[Snapshot.counted]] (it is read twice next round — the
+    * expansion and the settled union), whose row count observed on
+    * the write short-circuits the loop on exhaustion with zero extra
     * jobs. Seeds count at hop 0 whether or not they appear in the
     * edge list (an isolated trusted node is still trusted). */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"bfsHops: maxHops must be >= 0, got $maxHops")
-    val sym = symSnapshot(edges, "bfs_sym")
-    var settled = Dedup.materialize(
+    val sym = symUnion(Snapshot(edges, "bfs_sym").df)
+    var settled = Snapshot(
       seeds.select(col("node")).distinct()
-        .select(col("node"), lit(0).as("hops")), "bfs_d0")
+        .select(col("node"), lit(0).as("hops")), "bfs_d0").df
     var frontier = settled
     var h = 0
     var exhausted = false
     while (h < maxHops && !exhausted) {
       h += 1
-      val obs = org.apache.spark.sql.Observation()
       val next = sym
         .join(frontier.select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
         .join(settled.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(h).as("hops"))
-        .observe(obs, coalesce(count(lit(1)), lit(0L)).as("n"))
-      frontier = Dedup.materialize(next, s"bfs_f$h")
-      exhausted = obs.get("n").asInstanceOf[Long] == 0L
+      val (snap, n) = Snapshot.counted(next, s"bfs_f$h")
+      frontier = snap.df
+      exhausted = n == 0L
       // settled stays a LAZY union of the on-disk frontier snapshots:
       // each round's anti-join re-reads them (same total read cost as
       // one merged snapshot) but nothing ever REWRITES the full

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.{Dfs, Tables}
 
 /** Partition-pruned MERGE (upsert) on plain parquet — the managed-
@@ -84,39 +85,39 @@ object Merge {
     recoverSwap(path, fs) // restore any bucket a crashed swap left missing
     // the delta feeds the touched-bucket collect, the anti-join key
     // side AND the union — cache it across the three uses
-    val d = delta.withColumn("_mb", bucketOf(col(key), nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(
+        delta.withColumn("_mb", bucketOf(col(key), nBuckets))) { d =>
       // touched buckets: at most nBuckets longs — a driver-side set,
       // not a data collect
       val touched = d.select(col("_mb")).distinct()
         .collect().map(_.getLong(0)).sorted
-      if (touched.isEmpty) return
-      val target = spark.read
-        // schema from the parquet footer, partition column retained
-        .option("basePath", path).parquet(path)
-        .filter(col("_mb").isin(touched.toIndexedSeq: _*)) // partition-pruned scan
-      val deltaKeys = d.select(col(key).as("_d_key")).distinct()
-      val merged = target
-        .join(deltaKeys, target(key) === col("_d_key"), "left_anti")
-        .drop("_d_key")
-        .unionByName(d.withColumn("_mb", col("_mb").cast("long")))
-      // staged write + per-bucket directory swap: the merged buckets
-      // land next to the live table, then only the touched `_mb=`
-      // directories move into place. Never an in-place overwrite of a
-      // path being read; a crash mid-swap is healed by recoverSwap on
-      // the next merge (staging keeps the complete copy until every
-      // rename landed). All moves ride the [[Dfs]] seam (Hadoop
-      // FileSystem underneath — the same path works on HDFS/S3).
-      val staging = stagingDir(path)
-      merged.write.mode(SaveMode.Overwrite).partitionBy("_mb").parquet(staging)
-      fs.touch(s"$staging/$CompleteMarker")
-      touched.foreach { b =>
-        fs.delete(s"$path/_mb=$b")
-        fs.rename(s"$staging/_mb=$b", s"$path/_mb=$b")
+      if (touched.nonEmpty) {
+        val target = spark.read
+          // schema from the parquet footer, partition column retained
+          .option("basePath", path).parquet(path)
+          .filter(col("_mb").isin(touched.toIndexedSeq: _*)) // partition-pruned scan
+        val deltaKeys = d.select(col(key).as("_d_key")).distinct()
+        val merged = target
+          .join(deltaKeys, target(key) === col("_d_key"), "left_anti")
+          .drop("_d_key")
+          .unionByName(d.withColumn("_mb", col("_mb").cast("long")))
+        // staged write + per-bucket directory swap: the merged buckets
+        // land next to the live table, then only the touched `_mb=`
+        // directories move into place. Never an in-place overwrite of a
+        // path being read; a crash mid-swap is healed by recoverSwap on
+        // the next merge (staging keeps the complete copy until every
+        // rename landed). All moves ride the [[Dfs]] seam (Hadoop
+        // FileSystem underneath — the same path works on HDFS/S3).
+        val staging = stagingDir(path)
+        merged.write.mode(SaveMode.Overwrite).partitionBy("_mb").parquet(staging)
+        fs.touch(s"$staging/$CompleteMarker")
+        touched.foreach { b =>
+          fs.delete(s"$path/_mb=$b")
+          fs.rename(s"$staging/_mb=$b", s"$path/_mb=$b")
+        }
+        fs.delete(staging)
       }
-      fs.delete(staging)
-    } finally { d.unpersist(); () }
+    }
   }
 
   /** Read a merge target (drops the layout column). Heals a crashed
@@ -224,39 +225,39 @@ object Merge {
     val cur = versions(path, fs).last
     val (nBuckets, entries) = readManifest(path, cur, fs)
     // three uses (touched collect, anti-join keys, union) — cache
-    val d = delta.withColumn("_mb", bucketOf(col(key), nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(
+        delta.withColumn("_mb", bucketOf(col(key), nBuckets))) { d =>
       val touched = d.select(col("_mb")).distinct()
         .collect().map(_.getLong(0)).sorted
-      if (touched.isEmpty) return
-      val oldDirs = touched.toSeq.flatMap(entries.get).map(rel => s"$path/$rel")
-      val old =
-        if (oldDirs.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(oldDirs: _*)
-          .withColumn("_mb", bucketOf(col(key), nBuckets)))
-      val deltaKeys = d.select(col(key).as("_d_key")).distinct()
-      val merged = old.map(_.join(deltaKeys, col(key) === col("_d_key"), "left_anti")
-          .drop("_d_key").unionByName(d, allowMissingColumns = true))
-        .getOrElse(d)
-      val next = cur + 1
-      val staging = s"$path/_m_staging_v$next"
-      merged.write.mode(SaveMode.Overwrite).partitionBy("_mb").parquet(staging)
-      val verDir = s"$path/_data/v$next"; fs.mkdirs(verDir)
-      touched.foreach { b =>
-        // a crashed previous attempt at this (unpublished) version may
-        // have left a stale dst — readers only resolve manifests, so
-        // clobbering it is safe
-        fs.delete(s"$verDir/_mb=$b")
-        if (fs.exists(s"$staging/_mb=$b"))
-          fs.rename(s"$staging/_mb=$b", s"$verDir/_mb=$b")
+      if (touched.nonEmpty) {
+        val oldDirs = touched.toSeq.flatMap(entries.get).map(rel => s"$path/$rel")
+        val old =
+          if (oldDirs.isEmpty) None
+          else Some(spark.read.option("mergeSchema", "true").parquet(oldDirs: _*)
+            .withColumn("_mb", bucketOf(col(key), nBuckets)))
+        val deltaKeys = d.select(col(key).as("_d_key")).distinct()
+        val merged = old.map(_.join(deltaKeys, col(key) === col("_d_key"), "left_anti")
+            .drop("_d_key").unionByName(d, allowMissingColumns = true))
+          .getOrElse(d)
+        val next = cur + 1
+        val staging = s"$path/_m_staging_v$next"
+        merged.write.mode(SaveMode.Overwrite).partitionBy("_mb").parquet(staging)
+        val verDir = s"$path/_data/v$next"; fs.mkdirs(verDir)
+        touched.foreach { b =>
+          // a crashed previous attempt at this (unpublished) version may
+          // have left a stale dst — readers only resolve manifests, so
+          // clobbering it is safe
+          fs.delete(s"$verDir/_mb=$b")
+          if (fs.exists(s"$staging/_mb=$b"))
+            fs.rename(s"$staging/_mb=$b", s"$verDir/_mb=$b")
+        }
+        fs.delete(staging)
+        val updated = entries ++ touched.filter(b =>
+            fs.exists(s"$verDir/_mb=$b"))
+          .map(b => b -> s"_data/v$next/_mb=$b")
+        writeManifest(path, next, nBuckets, updated, fs)
       }
-      fs.delete(staging)
-      val updated = entries ++ touched.filter(b =>
-          fs.exists(s"$verDir/_mb=$b"))
-        .map(b => b -> s"_data/v$next/_mb=$b")
-      writeManifest(path, next, nBuckets, updated, fs)
-    } finally { d.unpersist(); () }
+    }
   }
 
   /** Change feed between two published versions — the Delta CDF /

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Dataset profiling — the per-column summary (rows, nulls, distinct
@@ -160,9 +161,9 @@ object Profile {
                      localLimit: Int = 100000): DataFrame = {
     val s = df.sparkSession
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0))
-    val vals = Dedup.materialize(
+    val vals = Snapshot(
       df.select(value.cast("double").as("v")).filter(col("v").isNotNull),
-      "quant_vals")
+      "quant_vals").df
     val head = vals.agg(count(lit(1)).as("n"), min(col("v")).as("mn"),
       max(col("v")).as("mx")).head()
     val n = head.getLong(0)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor / similarity search over the
@@ -1576,8 +1577,8 @@ object Similarity {
       s"mmrTopK: lambda + lambdaComp must be 1, got $lambda + $lambdaComp")
     import org.apache.spark.sql.expressions.Window
     graft.functions.HashExpressions.register(embeddings.sparkSession)
-    val cand = Dedup.materialize(
-      cosineTopK(embeddings, nQueries, nCand), "mmr_cand")
+    val cand = Snapshot(
+      cosineTopK(embeddings, nQueries, nCand), "mmr_cand").df
     // Driver-local greedy (r14): everything AFTER the corpus-scale
     // cosineTopK discovery is bounded by the CALLER'S PARAMETERS —
     // ≤ nQueries·nCand candidate rows and nCand² pair sims per query
@@ -1597,14 +1598,14 @@ object Similarity {
     val cv = cand.select(col("qid"), col("nid"), col("sim"))
       .join(embeddings.select(col("vec_id").as("nid"), col("embedding")),
         "nid")
-    val pair = Dedup.materialize(
+    val pair = Snapshot(
       cv.as("a").join(cv.as("b"),
           col("a.qid") === col("b.qid") && col("a.nid") =!= col("b.nid"))
         .select(col("a.qid").as("pq"), col("a.nid").as("na"),
           col("b.nid").as("nb"),
           (round(cosine(col("a.embedding"), col("b.embedding")) * 1e4) / 1e4)
             .as("ps")),
-      "mmr_pairs")
+      "mmr_pairs").df
     var sel = cand.filter(col("rk") === 1)
       .select(col("qid"), col("nid"), col("sim").as("score"),
         lit(1).as("step"))
@@ -1634,7 +1635,7 @@ object Similarity {
       // Write-and-readback, not localCheckpoint: checkpoint blocks
       // register as persistent RDDs for the session's life, which the
       // PersistHygiene gate forbids for registry queries
-      sel = Dedup.materialize(sel.unionByName(pick), s"mmr_sel$j")
+      sel = Snapshot(sel.unionByName(pick), s"mmr_sel$j").df
     }
     sel.select(col("qid"), col("nid"), col("score"),
       col("step").cast("int").as("step"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Skew-mitigation operators — the hot-key survival kit for 100 TB.
@@ -75,9 +76,7 @@ object Skew {
     * data. Seeded sample + stable file splits ⇒ reproducible plans. */
   def sampledMaxShare(df: DataFrame, key: String,
                       fraction: Double = 0.05, seed: Long = 42L): Double = {
-    val s = df.select(col(key)).sample(fraction, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(df.select(col(key)).sample(fraction, seed)) { s =>
       val total = s.count()
       if (total == 0) 0.0
       else {
@@ -86,7 +85,7 @@ object Skew {
           .collect().head.getLong(1)
         top.toDouble / total
       }
-    } finally { s.unpersist(); () }
+    }
   }
 
   /** Skew-adaptive aggregation: measure, then pick the plain GROUP BY

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline over the
@@ -237,12 +238,12 @@ object TextAnalysis {
     // self-join's two sides + the norms) — at 100× that was 3× the
     // whole featurization cost. Same checkpoint-between-stages move
     // as the dedup pipeline's candidate snapshots.
-    val w = Dedup.materialize(
+    val w = Snapshot(
       feats.join(dfF, "f").crossJoin(broadcast(nDocs))
         .select(col("f"), col("doc_id"),
           (col("tf") * log((col("n_docs") + 1).cast("double") /
             (col("df_f") + 1).cast("double"))).as("w")),
-      "tfidf_w")
+      "tfidf_w").df
     val norms = w.groupBy(col("doc_id"))
       .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     w.as("a").join(w.as("b"),

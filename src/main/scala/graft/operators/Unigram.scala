@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Snapshot
 import graft.sources.Tables
 
 /** Unigram language-model tokenizer (SentencePiece-style), completing
@@ -143,12 +144,8 @@ object Unigram {
     * add-one-smoothed quantized cost the encoder uses. */
   def train(docs: DataFrame, text: Column, vocabSize: Int = 64,
             candN: Int = 192): DataFrame = {
-    val words = wordCounts(docs, text)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cands = candidateCounts(words)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    Snapshot.cached(wordCounts(docs, text)) { words =>
+      Snapshot.cached(candidateCounts(words)) { cands =>
         val model0 = fitModel(cands, candN)
         val em = emCounts(words, model0)
         // final vocab: top-vocabSize EM pieces ∪ all single chars
@@ -167,8 +164,8 @@ object Unigram {
         import s.implicits._
         v1.toSeq.map { case (p, c) => (p, c, lpq(c + 1L, mass)) }
           .toDF("piece", "cnt", "lpq")
-      } finally { cands.unpersist(); () }
-    } finally { words.unpersist(); () }
+      }
+    }
   }
 
   /** Per-document token counts under a freshly trained model — the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Snapshot
 import graft.sources.Tables
 
 /** WordPiece tokenizer (Schuster & Nakajima 2012; the BERT
@@ -88,9 +89,8 @@ object WordPiece {
     // snapshot (not persist) so the merge loop can run in its cloned
     // session — see [[loopDict]]; also persist-hygiene-cleaner: no
     // cached blocks at all
-    val (_, dir) = Dedup.materializeDir(wordCounts(docs, text), "wp_wc")
-    trainFromWc(loopDict(docs.sparkSession, dir), nMerges,
-      docs.sparkSession)
+    val wc = Snapshot(wordCounts(docs, text), "wp_wc")
+    trainFromWc(loopDict(docs.sparkSession, wc), nMerges, docs.sparkSession)
   }
 
   /** Rebind the dictionary snapshot into an AQE-off clone for the
@@ -98,15 +98,15 @@ object WordPiece {
     * bounded token-count collect, the 1-row argmax) is a tiny
     * vocabulary-sized aggregation whose plan AQE splits into 2–3
     * query-stage jobs — 8 rounds cost ~36 jobs where 16 suffice. The
-    * clone (same SparkContext, isolated SQLConf — the CC device)
-    * executes each action as ONE job; plans and arithmetic are
-    * unchanged (no joins anywhere in the round plans — the model
-    * rides typedLit maps), and the caller's session never sees the
-    * flipped conf. */
-  private def loopDict(caller: SparkSession, dir: String): DataFrame = {
+    * clone (same SparkContext, isolated SQLConf, the snapshot rebound
+    * by [[Snapshot.in]]) executes each action as ONE job; plans and
+    * arithmetic are unchanged (no joins anywhere in the round plans —
+    * the model rides typedLit maps), and the caller's session never
+    * sees the flipped conf. */
+  private def loopDict(caller: SparkSession, wc: Snapshot): DataFrame = {
     val s2 = caller.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2.read.schema("w STRING, cnt BIGINT").parquet(dir)
+    wc.in(s2)
   }
 
   /** The merge loop over an already-pinned dictionary frame — shared
@@ -212,14 +212,14 @@ object WordPiece {
     // Snapshot, not persist: the returned plan references perWord
     // lazily, and cached blocks must not outlive a returned plan
     // (persist-hygiene contract).
-    val (wc, wcDir) = Dedup.materializeDir(wordCounts(docs, text), "wp_wc")
+    val wc = Snapshot(wordCounts(docs, text), "wp_wc")
     // the merge loop and the vocabulary collect run on the AQE-off
     // clone ([[loopDict]]); the encode fold + broadcast join stay on
     // the caller's session over the same snapshot
-    val wcLoop = loopDict(docs.sparkSession, wcDir)
+    val wcLoop = loopDict(docs.sparkSession, wc)
     val model = trainFromWc(wcLoop, nMerges, docs.sparkSession).collect()
       .map(_.getString(2)).toSeq
-    val perWord = greedyTokenCount(wc, vocabulary(wcLoop, model))
+    val perWord = greedyTokenCount(wc.df, vocabulary(wcLoop, model))
       .select(col("w"), col("n_tok"))
     docs.select(col("doc_id"), explode(split(text, " ")).as("w"))
       .filter(col("w") =!= "" && !col("w").contains("|") &&

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.operators.AsOfJoin
 import graft.sources.Tables
 
@@ -130,18 +131,12 @@ object Temporal {
     val ev = events(s, dir)
     // v feeds c AND its own count, c feeds p AND its count — cache
     // the cohorts so each stage aggregation runs once. The output is
-    // three scalars, so the stage counts are computed EAGERLY while
-    // the caches are live and both cohorts unpersist before return —
-    // no storage-memory blocks outlive the call (the round-2 leak)
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val c = ev.filter(col("event_type") === "click")
-        .join(v, Seq("user_id")).filter(col("ts") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    // three scalars, computed EAGERLY while the caches are live.
+    Snapshot.cached(ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))) { v =>
+      Snapshot.cached(ev.filter(col("event_type") === "click")
+          .join(v, Seq("user_id")).filter(col("ts") > col("t1"))
+          .groupBy(col("user_id")).agg(min(col("ts")).as("t2"))) { c =>
         val p = ev.filter(col("event_type") === "purchase")
           .join(c, Seq("user_id")).filter(col("ts") > col("t2"))
           .groupBy(col("user_id")).agg(min(col("ts")).as("t3"))
@@ -151,8 +146,8 @@ object Temporal {
         import s.implicits._
         Seq((nView, nClick, nPurchase))
           .toDF("n_view", "n_click", "n_purchase")
-      } finally { c.unpersist(blocking = true); () }
-    } finally { v.unpersist(blocking = true); () }
+      }
+    }
   }
 
   /** PER-ENTITY calendar gap fill — the scale-path variant of
@@ -302,12 +297,12 @@ object Temporal {
     // unpersist-before-return would evict the cache before the
     // action, and leaving it cached would break the persist-hygiene
     // gate.
-    val pts = graft.operators.Dedup.materialize(
+    val pts = Snapshot(
       iv.select(col("start_us").as("t"), lit(1).as("delta"), col("user_id"))
         .unionAll(iv.select(col("end_us").as("t"), lit(-1).as("delta"),
           col("user_id")))
         .withColumn("day", expr(s"t DIV ${86400L * us}L")),
-      "conc_pts")
+      "conc_pts").df
     val dayTotals = pts.groupBy(col("day"))
       .agg(sum(col("delta")).as("d")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)

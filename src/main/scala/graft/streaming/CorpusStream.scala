@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Snapshot
 import graft.operators.Dedup
 
 /** Online corpus deduplication: documents stream in, each micro-batch
@@ -57,11 +58,7 @@ object CorpusStream {
     val s = batch.sparkSession
     // the shingle set feeds the docfreq partial AND the scoring join —
     // cache for the stage's two actions, release before returning
-    // (a foreachBatch stage is an eager scope, so the try/finally
-    // lifecycle works here where it can't in a lazy query builder)
-    val sh = Corpus.shingleSet(batch, col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.cached(Corpus.shingleSet(batch, col("text"))) { sh =>
       sh.groupBy(col("sh"))
         .agg(countDistinct(col("doc_id")).as("df_part"))
         .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
@@ -81,7 +78,7 @@ object CorpusStream {
           Seq("doc_id"), "left")
         .join(Corpus.boilerplateScore(sh, boiler), Seq("doc_id"), "left")
         .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    } finally { sh.unpersist(blocking = true); () }
+    }
   }
 
   /** Start the curation stream: every micro-batch runs
@@ -115,9 +112,8 @@ object CorpusStream {
         // dropping every doc_b keeps exactly the cluster minima
         val intra = Dedup.minhashPairs(batch, minEst = minEst)
           .select(col("doc_b").as("doc_id")).distinct()
-        val batchKept = batch.join(intra, Seq("doc_id"), "left_anti")
-          .persist()
-        try {
+        Snapshot.cached(
+            batch.join(intra, Seq("doc_id"), "left_anti")) { batchKept =>
           val keep =
             if (!Dedup.ensureIndexRegistered(s, table, indexDir)) batchKept
             else {
@@ -129,8 +125,7 @@ object CorpusStream {
                 .select(col("new_id").as("doc_id")).distinct()
               batchKept.join(dupOfPrior, Seq("doc_id"), "left_anti")
             }
-          val k = keep.persist()
-          try {
+          Snapshot.cached(keep) { k =>
             // idempotent corpus write: same batch ⇒ same directory
             k.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
             if (!s.catalog.tableExists(s"${table}_bands"))
@@ -141,8 +136,8 @@ object CorpusStream {
               Dedup.appendToLshIndex(
                 k.join(seen, Seq("doc_id"), "left_anti"), table)
             }
-          } finally { k.unpersist(); () }
-        } finally { batchKept.unpersist(); () }
+          }
+        }
       }
       .start()
 }

@@ -1328,6 +1328,13 @@ class OperatorsSpec extends AnyFunSuite {
         Option(d.listFiles()).getOrElse(Array.empty)).map(_.getName)
       assert(names.exists(_.startsWith("minhash_pairs")),
         s"no snapshot under configured root: ${names.mkString(",")}")
+      // a second snapshot from the same site and thread deletes the
+      // first once it is written: one live directory per site
+      Snapshot(docs, "conf_probe")
+      Snapshot(docs, "conf_probe")
+      val probes = runDirs.flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+        .map(_.getName).filter(_.startsWith("conf_probe_t"))
+      assert(probes.length === 1, probes.mkString(","))
     } finally spark.conf.unset("spark.graft.snapshotDir")
   }
 
