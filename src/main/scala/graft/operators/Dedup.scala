@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Snapshot
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Deduplication operators for a training-data pipeline: exact,
   * normalized-exact, n-gram Jaccard, MinHash+LSH, and SimHash.
@@ -378,8 +378,8 @@ object Dedup {
       // record the layout so post-restart registration cannot
       // misdeclare the bucketing of the on-disk files
       fs.mkdirs(dir)
-      fs.writeStringAtomic(s"$dir/_index_meta.tsv",
-        s"nBuckets\t$nBuckets\nbands\t$bands\nrows\t$rows\n")
+      Artifact.index(dir, fs).publish(Artifact.Meta(
+        "nBuckets" -> nBuckets, "bands" -> bands, "rows" -> rows))
     }
     // both writes consume the signatures — compute the kernel once
     Snapshot.cached(signatures(df)) { sigd =>
@@ -456,10 +456,7 @@ object Dedup {
   def compactLshIndex(spark: SparkSession, table: String,
                       location: String,
                       fs: graft.sources.Dfs = graft.sources.Dfs.default): Unit = {
-    val kv = fs.readString(s"$location/_index_meta.tsv")
-      .linesIterator.map(_.split("\t", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-    val nBuckets = kv("nBuckets").toInt
+    val nBuckets = Artifact.index(location, fs).meta("nBuckets").toInt
     val tmp = s"${table}_bands_compact_tmp"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
     fs.delete(s"$location/bands_compact")
@@ -486,7 +483,7 @@ object Dedup {
 
   /** Recover the catalog entries of an external-location index after
     * a restart (the in-memory catalog forgets them; the directories
-    * don't). The bucket count comes from the `_index_meta.tsv` the
+    * don't). The bucket count comes from the [[Artifact]] meta record the
     * init wrote — never from a caller guess, which could misdeclare
     * the on-disk bucketing and corrupt every probe and append after
     * it. Returns true when the index is usable — both tables already
@@ -497,15 +494,12 @@ object Dedup {
                             fs: graft.sources.Dfs = graft.sources.Dfs.default): Boolean = {
     val bandsDir = s"$location/bands"
     val sigsDir = s"$location/sigs"
-    val meta = s"$location/_index_meta.tsv"
-    if (!fs.exists(bandsDir) || !fs.exists(sigsDir) || !fs.exists(meta))
-      return spark.catalog.tableExists(s"${table}_bands") &&
+    val meta = Artifact.index(location, fs).read match {
+      case Some(m) if fs.exists(bandsDir) && fs.exists(sigsDir) => m
+      case _ => return spark.catalog.tableExists(s"${table}_bands") &&
         spark.catalog.tableExists(s"${table}_sigs")
-    val kv = fs.readString(meta)
-      .linesIterator.map(_.split("\t", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-    val nBuckets = kv.getOrElse("nBuckets",
-      throw new IllegalStateException(s"no nBuckets in $meta")).toInt
+    }
+    val nBuckets = meta("nBuckets").toInt
     if (!spark.catalog.tableExists(s"${table}_bands")) {
       spark.sql(
         s"""CREATE TABLE ${table}_bands (doc_id BIGINT, bucket BIGINT)
@@ -516,7 +510,7 @@ object Dedup {
       // probe/append read it back via lshGeometry, so a post-restart
       // caller with different bands/rows defaults cannot compute keys
       // the on-disk index never contained (code-review r10)
-      (kv.get("bands"), kv.get("rows")) match {
+      (meta.get("bands"), meta.get("rows")) match {
         case (Some(b), Some(r)) =>
           spark.sql(s"ALTER TABLE ${table}_bands SET TBLPROPERTIES " +
             s"('graft.bands' = '$b', 'graft.rows' = '$r')")

@@ -318,7 +318,7 @@ object Layout {
     val fp = (scala.util.hashing.MurmurHash3.stringHash(dir) & Int.MaxValue)
       .toString
     // CONTENT-sensitive reuse, like every other ensure path (the
-    // ensureIvfIndex/_fixture_meta contract): a catalog-existence
+    // graft.sources.Artifact contract): a catalog-existence
     // check alone reuses stale bucketed copies after the corpus at
     // `dir` is regenerated (code-review r10). Key sums are reduced
     // mod a prime so the fingerprint aggregate can't overflow ANSI

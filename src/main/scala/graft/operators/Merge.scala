@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Snapshot
-import graft.sources.{Dfs, Tables}
+import graft.sources.{Artifact, Dfs, Tables}
 
 /** Partition-pruned MERGE (upsert) on plain parquet — the managed-
   * table primitive (Delta/Iceberg `MERGE INTO`) re-expressed as an
@@ -492,47 +492,28 @@ object Merge {
     math.max(1000000L, mk + 1L)
   }
 
-  /** Stable on-disk home for a demo's merge fixture, keyed by corpus
-    * dir so sf0.01 (Verify) and sf0.1 (Bench) never thrash each
-    * other's layouts. Configurable via `spark.graft.mergeFixtureDir`
-    * — on a cluster, a shared filesystem. */
+  /** Stable on-disk home for a demo's merge fixture
+    * ([[Artifact.stableDir]]), keyed by corpus dir so sf0.01 (Verify)
+    * and sf0.1 (Bench) never thrash each other's layouts. */
   private[graft] def fixturePath(spark: SparkSession, dir: String,
                           demo: String): String =
-    graft.sources.Dfs.stableCacheDir(spark, "spark.graft.mergeFixtureDir",
-      "graft_merge_fixture", dir) + s"/$demo"
+    Artifact.stableDir(spark, "graft_merge_fixture", dir) + s"/$demo"
 
   /** Restart-safe ensure of a demo's versioned/bucketed table at its
-    * stable path — [[graft.operators.Similarity.ensureIvfIndex]]'s
-    * `_index_meta` protocol applied to the m_* gates: `build` (the
-    * full-table write + merges) runs only when the meta (a lineage
-    * tag naming the delta recipe + the cheap corpus fingerprint) is
-    * absent or stale, so the benched queries measure the MERGE/READ
-    * machinery rather than a per-run base-table rewrite (VERDICT r9
-    * #2). Meta is written atomically AFTER the build, so a torn
-    * build reads as absent and rebuilds — never reused. The build
-    * path itself stays gated: first contact with any corpus runs it,
-    * and the readback hash certifies whichever path ran. */
+    * stable path — the [[Artifact]] reuse-or-rebuild protocol applied
+    * to the m_* gates: `build` (the full-table write + merges) runs
+    * only when the meta (a lineage tag naming the delta recipe + the
+    * content fingerprint keyed on `key`) is absent or stale, so the
+    * benched queries measure the MERGE/READ machinery rather than a
+    * per-run base-table rewrite (VERDICT r9 #2). The build path itself
+    * stays gated: first contact with any corpus runs it, and the
+    * readback hash certifies whichever path ran. */
   private[graft] def ensureFixture(c: DataFrame, key: String, path: String,
                             lineage: String, fs: Dfs = Dfs.default)
-                           (build: String => Unit): Unit = {
-    // fingerprint is CONTENT-sensitive, not just (count, keySum): a
-    // regenerated corpus with identical keys but different values
-    // must rebuild, never reuse stale data into a hash gate.
-    // bit_xor of row hashes is order-independent and cannot overflow
-    // (sum of hashes would throw under ANSI at scale)
-    val fp = c.agg(count(lit(1)).as("n"),
-      coalesce(sum(col(key)), lit(0L)).as("s"),
-      coalesce(bit_xor(xxhash64(c.columns.map(col): _*)), lit(0L))
-        .as("x")).head()
-    val meta = s"lineage\t$lineage\ncount\t${fp.getLong(0)}\n" +
-      s"keySum\t${fp.getLong(1)}\ncontentSig\t${fp.getLong(2)}\n"
-    val metaPath = s"$path/_fixture_meta.tsv"
-    if (!(fs.exists(metaPath) && fs.readString(metaPath) == meta)) {
-      fs.delete(path)
-      build(path)
-      fs.writeStringAtomic(metaPath, meta)
-    }
-  }
+                           (build: String => Unit): Unit =
+    Artifact.fixture(path, fs).ensure(Artifact.Meta("lineage" -> lineage) ++
+      Artifact.Fingerprint.of(c, key).meta("keySum"))(build(path))
+
   def mergeDemo(s: SparkSession, dir: String): DataFrame = {
     val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Snapshot
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Approximate-nearest-neighbor / similarity search over the
   * `embeddings` table (`embedding: array<float>`).
@@ -422,26 +422,7 @@ object Similarity {
       .select(col("qid"), col("qe"), col("pc").as("cell"))
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // <= nCells values, not a data collect
-    // read ONLY the probed directories, by name: a plain read of the
-    // cells root builds a file index over EVERY cell before the
-    // partition filter prunes it — one recursive listing of nCells
-    // directories per search batch, which the 2048-cell AnnScaleProbe
-    // measured dominating warm search latency (and at object-store
-    // scale is nCells LIST calls). One driver-side name listing picks
-    // the probed dirs that exist (cells can be empty → never
-    // written); basePath keeps `cell` a partition column
-    val cellsDir = s"$path/cells"
-    val present = graft.sources.Dfs.default.listNames(cellsDir)
-      .filter(_.startsWith("cell="))
-      .map(_.stripPrefix("cell=").toInt).toSet
-    val probedDirs = cells.filter(present).map(c => s"$cellsDir/cell=$c")
-    val scanned =
-      if (probedDirs.isEmpty)
-        spark.read.parquet(cellsDir)
-          .filter(col("cell").isin(cells.toIndexedSeq: _*))
-      else
-        spark.read.option("basePath", cellsDir)
-          .parquet(probedDirs.toIndexedSeq: _*)
+    val scanned = probedCellScan(spark, path, cells.toIndexedSeq)
     // soft-deleted ids ([[deleteFromIvfIndex]]) drop here: an id-only
     // broadcast anti-join on the pruned scan — cell pruning and the
     // candidate shapes are unchanged when no tombstones exist
@@ -455,63 +436,47 @@ object Similarity {
     topKPerQuery(cand, k)
   }
 
-  /** Restart-safe ensure of a [[writeIvfIndex]] layout at `path` —
-    * the LSH index's external-location + `_index_meta` protocol
-    * ([[Dedup.initLshIndex]] / [[Dedup.ensureIndexRegistered]])
-    * applied to the ANN side. The meta file records a layout version,
-    * the build parameters, and a cheap corpus fingerprint (row count
-    * + sum of vec_id residues mod 1e9+7: ONE columnar scan of the
-    * 8-byte id column, negligible next to retraining centroids and
-    * rewriting the corpus); a session whose meta matches reuses the on-disk
-    * cells/centroids with no training and no corpus rewrite — the
-    * "search 100 TB without rebuilding the index" path. The meta is
-    * written atomically AFTER the data, so it doubles as the
-    * completion marker: a torn previous build reads as absent and is
-    * rebuilt, never reused. Returns true when the existing index was
-    * reused. */
-  /** Content-sensitive corpus fingerprint for the index restart
-    * protocols: (count, sum of vec_id residues mod 1e9+7,
-    * order-independent XOR of per-row
-    * xxhash64(vec_id, embedding)). Computable identically from the
-    * input corpus AND from the persisted cells' columns
-    * ([[appendIvfIndex]]), so meta describes the exact vector
-    * CONTENT — a regenerated corpus with the same ids but new
-    * vectors rebuilds, never reuses stale cells into a hash gate.
-    * bit_xor (not sum of hashes) cannot overflow under ANSI. */
-  private[graft] def corpusFingerprint(vecs: DataFrame): (Long, Long, Long) = {
-    // the id component sums RESIDUES mod 1e9+7, not raw ids: replica
-    // key offsets put ids near 1e13, and a raw sum over ~10^7 such
-    // rows overflows long, which under ANSI (the Spark 4 default)
-    // throws instead of wrapping — found by AnnScaleProbe's 20M-row
-    // decade. Residue sums keep the disjoint-union composition law
-    // ([[composeFp]]) exactly, and stay within long for any index
-    // under ~9·10⁹ rows; content sensitivity lives in the xor-of-row-
-    // hashes component either way.
-    val r = vecs.agg(count(lit(1)).as("n"),
-      coalesce(sum(pmod(col("vec_id"), lit(1000000007L))), lit(0L)).as("s"),
-      coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L))
-        .as("x")).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2))
+  /** The probed cell directories of a persisted cell-partitioned
+    * layout, read by name — ONE read for the IVF and IVF-PQ searches.
+    * A plain read of the cells root builds a file index over EVERY
+    * cell before the partition filter prunes it: one recursive listing
+    * of nCells directories per search batch, which the 2048-cell
+    * AnnScaleProbe measured dominating warm search latency (and at
+    * object-store scale is nCells LIST calls). One driver-side name
+    * listing picks the probed dirs that exist (cells can be empty →
+    * never written); basePath keeps `cell` a partition column. */
+  private def probedCellScan(spark: SparkSession, path: String,
+                             cells: Seq[Int]): DataFrame = {
+    val cellsDir = s"$path/cells"
+    val present = graft.sources.Dfs.default.listNames(cellsDir)
+      .filter(_.startsWith("cell="))
+      .map(_.stripPrefix("cell=").toInt).toSet
+    val probedDirs = cells.filter(present).map(c => s"$cellsDir/cell=$c")
+    if (probedDirs.isEmpty)
+      spark.read.parquet(cellsDir).filter(col("cell").isin(cells: _*))
+    else
+      spark.read.option("basePath", cellsDir).parquet(probedDirs: _*)
   }
 
-  /** Fingerprint composition law: the three components (count,
-    * vecIdSum, xor-of-row-hashes) of a disjoint union are the
-    * component-wise sum/sum/xor — what makes append maintenance
-    * O(batch) and lets the stream's write-ahead intent predict the
-    * post-append meta exactly. */
-  private[graft] def composeFp(a: (Long, Long, Long),
-                               b: (Long, Long, Long)): (Long, Long, Long) =
-    (a._1 + b._1, a._2 + b._2, a._3 ^ b._3)
+  /** The (vec_id, embedding) content fingerprint every IVF meta
+    * records ([[Artifact.Fingerprint]]): computable identically from
+    * an input corpus, an append batch and the persisted cells'
+    * columns, so the meta describes the exact vector CONTENT — a
+    * regenerated corpus with the same ids but new vectors rebuilds,
+    * never reuses stale cells into a hash gate. */
+  private[graft] def vectorFp(vecs: DataFrame): Artifact.Fingerprint =
+    Artifact.Fingerprint.of(vecs.select(col("vec_id"), col("embedding")),
+      "vec_id")
 
   /** Layout version 2 = the r13 fingerprint format change (vecIdSum
     * holds RESIDUE sums mod 1e9+7, not raw id sums). Bumping the
     * version makes the one-time rebuild of any v1 index attributable
     * to the intentional format change instead of reading as a silent
     * fingerprint mismatch (ADVICE r13). */
-  private[graft] def ivfMetaString(nCells: Int, refineIters: Int,
-                                   fp: (Long, Long, Long)): String =
-    s"version\t2\nnCells\t$nCells\nrefineIters\t$refineIters\n" +
-      s"count\t${fp._1}\nvecIdSum\t${fp._2}\ncontentSig\t${fp._3}\n"
+  private[graft] def ivfMeta(nCells: Int, refineIters: Int,
+                             fp: Artifact.Fingerprint): Artifact.Meta =
+    Artifact.Meta("version" -> 2, "nCells" -> nCells,
+      "refineIters" -> refineIters) ++ fp.meta("vecIdSum")
 
   /** The driver-held centroid model of a persisted index — ONE
     * loader for the search/append/PQ paths (code-review r10: the
@@ -548,12 +513,21 @@ object Similarity {
         StructField("lut", ArrayType(ArrayType(DoubleType))))))
   }
 
+  /** Restart-safe ensure of a [[writeIvfIndex]] layout at `path` —
+    * the [[Artifact]] reuse-or-rebuild protocol. The meta records a
+    * layout version, the build parameters and the [[vectorFp]] corpus
+    * fingerprint (one columnar scan, negligible next to retraining
+    * centroids and rewriting the corpus); a session whose meta matches
+    * reuses the on-disk cells/centroids with no training and no corpus
+    * rewrite — the "search 100 TB without rebuilding the index" path.
+    * The `_tombstones` delete set is the one piece of user state in
+    * the layout and is carried across a rebuild. Returns true when the
+    * existing index was reused. */
   def ensureIvfIndex(embeddings: DataFrame, path: String,
                      nCells: Int = 16, refineIters: Int = 2,
                      fs: graft.sources.Dfs = graft.sources.Dfs.default): Boolean = {
-    val metaPath = s"$path/_index_meta.tsv"
-    val meta = ivfMetaString(nCells, refineIters,
-      corpusFingerprint(embeddings))
+    val index = Artifact.index(path, fs)
+    val meta = ivfMeta(nCells, refineIters, vectorFp(embeddings))
     // Crash recovery: a rebuild interrupted between the tombstone
     // stash-rename below and the restoring rename strands the user's
     // delete set at ${path}_tombstones_keep — and the next ensure
@@ -563,49 +537,42 @@ object Similarity {
     // leftover stash always implies the index dir has no live
     // tombstones of its own (code-review r10).
     val stash = s"${path}_tombstones_keep"
+    val tombs = s"$path/_tombstones"
     if (fs.exists(stash)) {
       // MERGE rather than replace: deletes issued after the crash
       // (appended straight to a fresh _tombstones) must survive too.
       // Tombstones are append-only parquet files of vec_ids, read
       // through distinct(), so adopting the stash = moving its files
       // in beside whatever is already there.
-      val live = s"$path/_tombstones"
-      if (fs.exists(live)) {
+      if (fs.exists(tombs)) {
         fs.listNames(stash).zipWithIndex.foreach { case (f, i) =>
-          fs.rename(s"$stash/$f", s"$live/restored-$i-$f")
+          fs.rename(s"$stash/$f", s"$tombs/restored-$i-$f")
         }
         fs.delete(stash)
-      } else fs.rename(stash, live)
-      fs.delete(metaPath) // the interrupted rebuild is not trustworthy
+      } else fs.rename(stash, tombs)
+      index.unpublish() // the interrupted rebuild is not trustworthy
     }
-    if (fs.exists(metaPath) && fs.readString(metaPath) == meta) true
-    else {
+    index.isCurrent(meta) || {
       // tombstones survive the rebuild: they are USER deletions
       // layered on top of whatever layout serves the corpus, and the
       // corpus parquet still contains the deleted rows — a plain
-      // fs.delete(path) silently resurrected every soft-deleted
-      // vector on any rebuild (code-review r10)
-      val tombs = s"$path/_tombstones"
-      val tombsTmp = stash
+      // rebuild silently resurrected every soft-deleted vector
+      // (code-review r10)
       val hadTombs = fs.exists(tombs)
-      if (hadTombs) { fs.delete(tombsTmp); fs.rename(tombs, tombsTmp) }
-      fs.delete(path)
-      writeIvfIndex(embeddings, path, nCells, refineIters)
-      if (hadTombs) fs.rename(tombsTmp, tombs)
-      fs.writeStringAtomic(metaPath, meta)
+      if (hadTombs) { fs.delete(stash); fs.rename(tombs, stash) }
+      index.rebuild(meta) {
+        writeIvfIndex(embeddings, path, nCells, refineIters)
+        if (hadTombs) fs.rename(stash, tombs)
+      }
       false
     }
   }
 
-  /** Stable on-disk home for a corpus dir's IVF index, so separate
-    * driver runs (fresh JVMs) land on the SAME layout and
-    * [[ensureIvfIndex]] can reuse it. Configurable via
-    * `spark.graft.ivfIndexDir` — on a real cluster point it at a
-    * shared filesystem; the local default is a fixed temp-root
-    * subtree keyed by the corpus path. */
+  /** Stable on-disk home for a corpus dir's IVF index
+    * ([[Artifact.stableDir]]), so separate driver runs (fresh JVMs)
+    * land on the SAME layout and [[ensureIvfIndex]] can reuse it. */
   private[graft] def ivfIndexPath(spark: SparkSession, dir: String): String =
-    graft.sources.Dfs.stableCacheDir(spark, "spark.graft.ivfIndexDir",
-      "graft_ivf_index", dir)
+    Artifact.stableDir(spark, "graft_ivf_index", dir)
 
   // ------------------------------------------------ IVF-PQ on disk //
 
@@ -659,10 +626,10 @@ object Similarity {
     * historical sample); arrivals route scan-locally to their nearest
     * cell and land as APPENDED parquet files inside the cell
     * partitions — no rewrite of existing files, no retraining, cost
-    * O(new vectors). The `_index_meta` fingerprint is then recomputed
-    * FROM THE ON-DISK LAYOUT (one columnar scan of the 8-byte vec_id
-    * column) and committed atomically, so meta always describes disk
-    * truth: a session's [[ensureIvfIndex]] over the grown corpus
+    * O(new vectors). The meta fingerprint then advances by the
+    * batch's ([[Artifact.Fingerprint]]'s composition law) and is
+    * published atomically, so meta always describes disk truth: a
+    * session's [[ensureIvfIndex]] over the grown corpus
     * reuses the index, and a crash between data and meta leaves a
     * stale fingerprint that can only cause a REBUILD — never a wrong
     * reuse. */
@@ -673,16 +640,14 @@ object Similarity {
     graft.functions.HashExpressions.register(spark)
     val centroids = loadCentroids(spark, path)
     // batch-only aggregates BEFORE the append; the fingerprint's
-    // three components (count, vecIdSum, xor-of-row-hashes) were
-    // chosen to COMPOSE, so the grown layout's fingerprint is
-    // old ⊕ batch without rescanning the index — a full-disk
-    // recompute here made every streaming micro-batch O(index size),
-    // quadratic total ingest work (code-review r10). Crash between
-    // append and meta publish leaves pre-append meta: the next
-    // ensure over the grown corpus mismatches and rebuilds — the
-    // same torn-state contract as before.
-    val bfp = corpusFingerprint(
-      newVecs.select(col("vec_id"), col("embedding")))
+    // three components were chosen to COMPOSE, so the grown layout's
+    // fingerprint is old + batch without rescanning the index — a
+    // full-disk recompute here made every streaming micro-batch
+    // O(index size), quadratic total ingest work (code-review r10).
+    // Crash between append and meta publish leaves pre-append meta:
+    // the next ensure over the grown corpus mismatches and rebuilds —
+    // the same torn-state contract as before.
+    val bfp = vectorFp(newVecs)
     newVecs.select(col("vec_id"), col("embedding"),
         nearestCell(centroids, col("embedding")).as("cell"))
       // the cell-wise repartition bounds the append at ≤ nCells new
@@ -693,35 +658,12 @@ object Similarity {
       .repartition(col("cell"))
       .write.mode(SaveMode.Append).partitionBy("cell")
       .parquet(s"$path/cells")
-    val metaPath = s"$path/_index_meta.tsv"
-    val old = fs.readString(metaPath).split("\n").filter(_.nonEmpty)
-      .map(_.split("\t")).map(a => a(0) -> a(1)).toMap
-    val fp = composeFp(
-      (old("count").toLong, old("vecIdSum").toLong,
-        old("contentSig").toLong), bfp)
-    fs.writeStringAtomic(metaPath,
-      ivfMetaString(old("nCells").toInt, old("refineIters").toInt, fp))
+    val index = Artifact.index(path, fs)
+    val old = index.meta
+    index.publish(ivfMeta(old("nCells").toInt, old("refineIters").toInt,
+      Artifact.Fingerprint.from(old, "vecIdSum") + bfp))
   }
 
-  /** Merge a cell's accumulated small append files into one — the IVF
-    * twin of [[graft.operators.Dedup.compactLshIndex]] (the r11
-    * 100-batch LSH probe found small-file accumulation throttling
-    * probe latency; the r12 [[graft.tools.AnnStateGrowthProbe]]
-    * measured the SAME linear growth here — nCells files per
-    * streamed micro-batch — before it bites at larger state).
-    * Offline pass, scheduled between appends like the tombstone
-    * compaction: rewrites only cells whose file count exceeds
-    * `maxFilesPerCell`, write-new → swap per cell. Content is
-    * unchanged, so the recomputed fingerprint equals the saved one —
-    * but the saved meta STILL can't stay published through the swaps:
-    * [[ensureIvfIndex]] compares the meta FILE to its expected string,
-    * never to disk content, so a crash mid-swap (merged file moved in,
-    * old files not yet deleted → duplicated rows) would otherwise
-    * leave a torn layout that ensure happily reuses. [[compactIvfCells]]'
-    * completion-marker contract applies: unpublish meta before the
-    * first swap, republish the identical string atomically after the
-    * last — a torn pass then reads as an absent index and forces a
-    * rebuild. Returns the compacted cell ids. */
   /** The move-in-then-delete swap both compaction paths share: move
     * every parquet part of `tmp` into `dir`, then delete the parquet
     * files `dir` held before (the caller's pre-merge snapshot), then
@@ -742,64 +684,6 @@ object Similarity {
     fs.delete(tmp)
   }
 
-  def compactIvfSmallFiles(spark: SparkSession, path: String,
-                           maxFilesPerCell: Int = 8,
-                           fs: graft.sources.Dfs = graft.sources.Dfs.default)
-      : Seq[Int] = {
-    val cellsDir = s"$path/cells"
-    val crowded = fs.listNames(cellsDir).filter(_.startsWith("cell="))
-      .filter(d => fs.listNames(s"$cellsDir/$d")
-        .count(_.endsWith(".parquet")) > maxFilesPerCell)
-      .map(_.stripPrefix("cell=").toInt).sorted
-    if (crowded.isEmpty) return crowded
-    val metaPath = s"$path/_index_meta.tsv"
-    val saved =
-      if (fs.exists(metaPath)) Some(fs.readString(metaPath)) else None
-    fs.delete(metaPath)
-    crowded.foreach { c =>
-      val dir = s"$cellsDir/cell=$c"
-      val tmp = s"$path/_compact_tmp/cell=$c"
-      fs.delete(tmp)
-      // snapshot the file set BEFORE the merge read (single writer,
-      // so the read sees exactly this set); leaf-dir read: rows are
-      // (vec_id, embedding), the cell value lives in the dirname
-      val oldFiles = fs.listNames(dir).filter(_.endsWith(".parquet"))
-      spark.read.parquet(dir).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      // merged part IN first, snapshot out after: a mid-swap listing
-      // sees bounded duplicates (at worst a displaced k-th neighbor),
-      // never a MISSING cell losing every true neighbor in it — see
-      // [[swapInMergedFiles]] for the full reader contract
-      swapInMergedFiles(fs, dir, tmp, oldFiles)
-    }
-    fs.delete(s"$path/_compact_tmp")
-    saved.foreach(fs.writeStringAtomic(metaPath, _))
-    crowded
-  }
-
-  /** SIZE-TIERED small-file compaction — the write-amplification fix
-    * over [[compactIvfSmallFiles]]'s leveling scheme. Leveling
-    * rewrites a crowded cell WHOLESALE, so once the index dwarfs the
-    * batch size every pass re-rewrites the cell's big base file and
-    * amortized rewrite bytes per ingested batch grow with index size.
-    * Here files are bucketed by SIZE (Cassandra STCS shape): sort a
-    * cell's parquet files ascending, open a bucket at each file whose
-    * size exceeds tierFactor × the current bucket's floor, and merge
-    * ONLY buckets holding ≥ minTierFiles members — fresh micro-batch
-    * files merge among themselves into a medium file, mediums merge
-    * into a large one when enough accumulate, and the big base file
-    * is untouched until its own tier fills. Each byte is rewritten
-    * O(log_tierFactor(index/batch)) times TOTAL, so per-batch rewrite
-    * bytes stay bounded as the index grows.
-    *
-    * `minSizeBytes` floors the bucket threshold so KB-scale stream
-    * droppings coalesce aggressively regardless of their exact sizes.
-    * Same crash contract as [[compactIvfSmallFiles]]: meta
-    * unpublished before the first swap, republished atomically after
-    * the last — a torn pass reads as index-absent and rebuilds, never
-    * a silent partial layout. Content (and so the fingerprint) is
-    * unchanged. Single writer (the caller's contract). Returns the
-    * touched cell ids. */
   /** The pure size-tiered merge planner: sort (name, size) pairs
     * ascending, open a new bucket whenever a file's size exceeds
     * tierFactor × the current bucket's (floored) minimum, and return
@@ -824,6 +708,31 @@ object Similarity {
     }
   }
 
+  /** Merge a cell's accumulated small append files — the IVF twin
+    * of [[graft.operators.Dedup.compactLshIndex]] (the r11 100-batch
+    * LSH probe found small-file accumulation throttling probe
+    * latency; the r12 [[graft.tools.AnnStateGrowthProbe]] measured the
+    * SAME linear growth here — nCells files per streamed micro-batch).
+    * SIZE-TIERED (Cassandra STCS shape, [[sizeTierBuckets]]): fresh
+    * micro-batch files merge among themselves into a medium file,
+    * mediums into a large one when enough accumulate, and a cell's
+    * big base file is untouched until its own tier fills. Each byte
+    * is rewritten O(log_tierFactor(index/batch)) times TOTAL, so
+    * per-batch rewrite bytes stay bounded as the index grows — unlike
+    * leveling, which rewrites a crowded cell wholesale (leveling is
+    * the special case `minTierFiles = maxFilesPerCell + 1` with a
+    * `minSizeBytes` above every file size, all of a cell's files in
+    * one tier). `minSizeBytes` floors the bucket threshold so KB-scale
+    * stream droppings coalesce regardless of their exact sizes.
+    *
+    * Content (and so the fingerprint) is unchanged, but the meta
+    * still can't stay published through the swaps: [[ensureIvfIndex]]
+    * compares the meta FILE, never disk content, so a crash mid-swap
+    * (merged file moved in, old files not yet deleted → duplicated
+    * rows) would leave a torn layout that ensure reuses. The pass
+    * runs inside the [[Artifact.maintain]] bracket instead: a torn
+    * pass reads as index-absent and rebuilds. Single writer (the
+    * caller's contract). Returns the touched cell ids. */
   def compactIvfSizeTiered(spark: SparkSession, path: String,
                            minTierFiles: Int = 4,
                            tierFactor: Long = 8,
@@ -845,24 +754,21 @@ object Similarity {
           sizeTierBuckets(sized, minTierFiles, tierFactor, minSizeBytes)
             .map(cell -> _)
         }
-    if (plans.isEmpty) return Seq.empty
-    val metaPath = s"$path/_index_meta.tsv"
-    val saved =
-      if (fs.exists(metaPath)) Some(fs.readString(metaPath)) else None
-    fs.delete(metaPath)
-    plans.foreach { case (cell, names) =>
-      val dir = s"$cellsDir/cell=$cell"
-      val tmp = s"$path/_compact_tmp/cell=$cell"
-      fs.delete(tmp)
-      // merge ONLY the bucket's files — the whole point: files
-      // outside the bucket (the big base file) are never read or
-      // rewritten by this pass
-      spark.read.parquet(names.map(n => s"$dir/$n"): _*).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      swapInMergedFiles(fs, dir, tmp, names)
+    if (plans.nonEmpty) Artifact.index(path, fs).maintain { saved =>
+      plans.foreach { case (cell, names) =>
+        val dir = s"$cellsDir/cell=$cell"
+        val tmp = s"$path/_compact_tmp/cell=$cell"
+        fs.delete(tmp)
+        // merge ONLY the bucket's files — the whole point: files
+        // outside the bucket (the big base file) are never read or
+        // rewritten by this pass
+        spark.read.parquet(names.map(n => s"$dir/$n"): _*).coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+        swapInMergedFiles(fs, dir, tmp, names)
+      }
+      fs.delete(s"$path/_compact_tmp")
+      saved
     }
-    fs.delete(s"$path/_compact_tmp")
-    saved.foreach(fs.writeStringAtomic(metaPath, _))
     plans.map(_._1).distinct
   }
 
@@ -912,103 +818,91 @@ object Similarity {
       case (c, n, nd) if nd > 0 && nd.toDouble / n >= minDeadFrac => c
     }.sorted.toSeq
     if (toCompact.isEmpty) return Seq.empty
-    // meta goes FIRST: the stored fingerprint still matches the
-    // pre-compact corpus, so a crash mid-rewrite would otherwise let
-    // a later ensure REUSE the torn layout. With meta gone, torn
-    // reads as absent and ensure rebuilds — the same completion-
-    // marker contract as every build path here.
-    val metaPath = s"$path/_index_meta.tsv"
-    val old = fs.readString(metaPath).split("\n").filter(_.nonEmpty)
-      .map(_.split("\t")).map(a => a(0) -> a(1)).toMap
-    fs.delete(metaPath)
-    toCompact.foreach { c =>
-      val dir = s"$path/cells/cell=$c"
-      val tmp = s"$path/_compact_tmp_cell_$c"
-      // same move-in-then-delete swap as [[compactIvfSmallFiles]]: a
-      // concurrent search listing mid-swap sees surviving rows twice
-      // (dead rows stay masked — the tombstone set only shrinks AFTER
-      // this loop), never a missing cell
-      val oldFiles = fs.listNames(dir).filter(_.endsWith(".parquet"))
-      spark.read.parquet(dir)
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      swapInMergedFiles(fs, dir, tmp, oldFiles)
+    // the whole pass runs inside the maintenance bracket: the stored
+    // fingerprint still matches the pre-compact corpus, so a crash
+    // mid-rewrite would otherwise let a later ensure REUSE the torn
+    // layout. With meta gone, torn reads as absent and ensure rebuilds
+    val index = Artifact.index(path, fs)
+    val old = index.meta
+    index.maintain { _ =>
+      toCompact.foreach { c =>
+        val dir = s"$path/cells/cell=$c"
+        val tmp = s"$path/_compact_tmp_cell_$c"
+        // same move-in-then-delete swap as [[compactIvfSizeTiered]]: a
+        // concurrent search listing mid-swap sees surviving rows twice
+        // (dead rows stay masked — the tombstone set only shrinks
+        // AFTER this loop), never a missing cell
+        val oldFiles = fs.listNames(dir).filter(_.endsWith(".parquet"))
+        spark.read.parquet(dir)
+          .join(broadcast(tomb), Seq("vec_id"), "left_anti")
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+        swapInMergedFiles(fs, dir, tmp, oldFiles)
+      }
+      // tombstones shrink to ids still physically present (cells kept
+      // below the threshold); an emptied set deletes the dir outright.
+      // The shrink swap must keep the VISIBLE set a SUPERSET of the
+      // true dead set at every instant: a delete-dir→rename order has
+      // a window with NO tombstone dir while under-threshold cells
+      // still hold dead rows — a concurrent search returns them, and a
+      // crash there resurrects them PERMANENTLY (both the rebuild path
+      // and [[tombstoneIds]] key off the dir's existence, and neither
+      // knows about `_tombstones_tmp`). Same move-in-then-delete swap
+      // as the cells: the transient old ∪ new union only carries extra
+      // ids whose rows are no longer physically present — a no-op for
+      // the anti-joins — and the read side distinct()s duplicates.
+      val remaining = tomb.join(
+        spark.read.parquet(s"$path/cells").select(col("vec_id")),
+        Seq("vec_id"), "left_semi")
+      val tombsDir = s"$path/_tombstones"
+      val tmpT = s"$path/_tombstones_tmp"
+      val oldTombFiles = fs.listNames(tombsDir).filter(_.endsWith(".parquet"))
+      remaining.write.mode(SaveMode.Overwrite).parquet(tmpT)
+      val nRemain = spark.read.parquet(tmpT).count()
+      if (nRemain > 0) swapInMergedFiles(fs, tombsDir, tmpT, oldTombFiles)
+      else {
+        // every dead row was physically removed by the rewrites above,
+        // so an absent set is correct at any crash point from here on
+        fs.delete(tombsDir)
+        fs.delete(tmpT)
+      }
+      // meta keeps describing PHYSICAL cell content (the append-path
+      // contract): recompute the fingerprint from the compacted layout
+      Some(ivfMeta(old("nCells").toInt, old("refineIters").toInt,
+        vectorFp(spark.read.parquet(s"$path/cells"))))
     }
-    // tombstones shrink to ids still physically present (cells kept
-    // below the threshold); an emptied set deletes the dir outright.
-    // The shrink swap must keep the VISIBLE set a SUPERSET of the
-    // true dead set at every instant: a delete-dir→rename order has
-    // a window with NO tombstone dir while under-threshold cells
-    // still hold dead rows — a concurrent search returns them, and a
-    // crash there resurrects them PERMANENTLY (both the rebuild path
-    // and [[tombstoneIds]] key off the dir's existence, and neither
-    // knows about `_tombstones_tmp`). Same move-in-then-delete swap
-    // as the cells: the transient old ∪ new union only carries extra
-    // ids whose rows are no longer physically present — a no-op for
-    // the anti-joins — and the read side distinct()s duplicates.
-    val remaining = tomb.join(
-      spark.read.parquet(s"$path/cells").select(col("vec_id")),
-      Seq("vec_id"), "left_semi")
-    val tombsDir = s"$path/_tombstones"
-    val tmpT = s"$path/_tombstones_tmp"
-    val oldTombFiles = fs.listNames(tombsDir).filter(_.endsWith(".parquet"))
-    remaining.write.mode(SaveMode.Overwrite).parquet(tmpT)
-    val nRemain = spark.read.parquet(tmpT).count()
-    if (nRemain > 0) swapInMergedFiles(fs, tombsDir, tmpT, oldTombFiles)
-    else {
-      // every dead row was physically removed by the rewrites above,
-      // so an absent set is correct at any crash point from here on
-      fs.delete(tombsDir)
-      fs.delete(tmpT)
-    }
-    // meta keeps describing PHYSICAL cell content (the append-path
-    // contract): recompute the fingerprint from the compacted layout
-    // and republish — completion marker for the whole pass
-    val fp = corpusFingerprint(spark.read.parquet(s"$path/cells")
-      .select(col("vec_id"), col("embedding")))
-    fs.writeStringAtomic(metaPath,
-      ivfMetaString(old("nCells").toInt, old("refineIters").toInt, fp))
     toCompact
   }
 
   /** Restart-safe ensure of a [[writeIvfPqIndex]] layout at `path` —
-    * [[ensureIvfIndex]]'s `_index_meta` protocol applied to the
-    * composed IVF-PQ index: meta records the layout version, ALL
-    * build parameters (cells, refine iters, PQ shape), and the cheap
-    * corpus fingerprint; a matching meta reuses the on-disk
+    * [[ensureIvfIndex]]'s [[Artifact]] protocol applied to the
+    * composed IVF-PQ index: meta records the layout version, ALL build
+    * parameters (cells, refine iters, PQ shape), and the [[vectorFp]]
+    * fingerprint; a matching meta reuses the on-disk
     * centroids/books/cells with no k-means, no PQ training, and no
-    * corpus rewrite. Written atomically AFTER the data so a torn
-    * build reads as absent. Returns true when reused. */
+    * corpus rewrite. Returns true when reused. */
   def ensureIvfPqIndex(embeddings: DataFrame, path: String,
                        nCells: Int = 16, refineIters: Int = 2,
                        nSub: Int = 8, codesPerSub: Int = 64,
                        pqIters: Int = 2,
                        fs: graft.sources.Dfs = graft.sources.Dfs.default)
       : Boolean = {
-    val metaPath = s"$path/_index_meta.tsv"
-    val fp = corpusFingerprint(embeddings)
-    // version 2 ≡ the residue-sum fingerprint format
-    // ([[ivfMetaString]]) — this meta shares corpusFingerprint, so it
-    // bumps in lockstep
-    val meta = s"version\t2\nnCells\t$nCells\nrefineIters\t$refineIters\n" +
-      s"nSub\t$nSub\ncodesPerSub\t$codesPerSub\npqIters\t$pqIters\n" +
-      s"count\t${fp._1}\nvecIdSum\t${fp._2}\ncontentSig\t${fp._3}\n"
-    if (fs.exists(metaPath) && fs.readString(metaPath) == meta) true
-    else {
-      fs.delete(path)
+    // version 2 ≡ the residue-sum fingerprint format ([[ivfMeta]]) —
+    // this meta shares the fingerprint, so it bumps in lockstep
+    val meta = Artifact.Meta("version" -> 2, "nCells" -> nCells,
+      "refineIters" -> refineIters, "nSub" -> nSub,
+      "codesPerSub" -> codesPerSub, "pqIters" -> pqIters) ++
+      vectorFp(embeddings).meta("vecIdSum")
+    Artifact.index(path, fs).ensure(meta) {
       writeIvfPqIndex(embeddings, path, nCells, refineIters, nSub,
         codesPerSub, pqIters)
-      fs.writeStringAtomic(metaPath, meta)
-      false
     }
   }
 
   /** Stable on-disk home for a corpus dir's IVF-PQ index (the
     * [[ivfIndexPath]] convention, separate subtree so the two layouts
-    * never collide). Configurable via `spark.graft.ivfPqIndexDir`. */
+    * never collide). */
   private[graft] def ivfPqIndexPath(spark: SparkSession, dir: String): String =
-    graft.sources.Dfs.stableCacheDir(spark, "spark.graft.ivfPqIndexDir",
-      "graft_ivfpq_index", dir)
+    Artifact.stableDir(spark, "graft_ivfpq_index", dir)
 
   /** Probed ADC search over a persisted [[writeIvfPqIndex]] layout:
     * probe cells come from the persisted centroid model (scan-local
@@ -1047,33 +941,11 @@ object Similarity {
     // batch, defeating the probed-directories scale story
     // (code-review r10); the scan remains only the fallback for
     // meta-less layouts
-    val fsm = graft.sources.Dfs.default
-    val metaPath = s"$path/_index_meta.tsv"
-    val n =
-      if (fsm.exists(metaPath))
-        fsm.readString(metaPath).split("\n").filter(_.nonEmpty)
-          .map(_.split("\t")).collectFirst { case Array("count", v) =>
-            v.toLong }
-          .getOrElse(spark.read.parquet(s"$path/cells").count())
-      else spark.read.parquet(s"$path/cells").count()
+    val n = Artifact.index(path).read.flatMap(_.get("count")).map(_.toLong)
+      .getOrElse(spark.read.parquet(s"$path/cells").count())
     val shortlist = math.max(minShortlist,
       math.ceil(n * shortlistFrac).toInt)
-    // same probed-directories read as [[searchIvfIndex]]: name-list
-    // once, open only the probed cell dirs (a root read file-indexes
-    // every cell before pruning)
-    val cellsDir = s"$path/cells"
-    val present = fsm.listNames(cellsDir)
-      .filter(_.startsWith("cell="))
-      .map(_.stripPrefix("cell=").toInt).toSet
-    val probedDirs = cellSet.filter(present)
-      .map(c => s"$cellsDir/cell=$c")
-    val index =
-      if (probedDirs.isEmpty)
-        spark.read.parquet(cellsDir)
-          .filter(col("cell").isin(cellSet.toIndexedSeq: _*))
-      else
-        spark.read.option("basePath", cellsDir)
-          .parquet(probedDirs.toIndexedSeq: _*)
+    val index = probedCellScan(spark, path, cellSet.toIndexedSeq)
     val adc = index
       .join(broadcast(probes), Seq("cell"))
       .join(broadcast(lutDf), Seq("qid"))
@@ -2026,14 +1898,12 @@ object Similarity {
       val e = emb(s, dir)
       val path = ivfIndexPath(s, dir) + "_grow"
       val fs = graft.sources.Dfs.default
-      val metaPath = s"$path/_index_meta.tsv"
-      val want = ivfMetaString(16, 2, corpusFingerprint(e))
       // the marker certifies the layout really is 90%-built + 10%-
       // appended; ANY rebuild (incl. one a broken append would
       // provoke inside ensureIvfIndex) deletes it, so a full-trained
       // index can never satisfy this gate — no silent pass
       val marker = s"$path/_grown.tsv"
-      if (!(fs.exists(metaPath) && fs.readString(metaPath) == want &&
+      if (!(Artifact.index(path).isCurrent(ivfMeta(16, 2, vectorFp(e))) &&
           fs.exists(marker))) {
         fs.delete(path)
         ensureIvfIndex(e.filter(col("vec_id") % 10 =!= 7), path,

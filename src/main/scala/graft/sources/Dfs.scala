@@ -5,8 +5,11 @@ import java.io.IOException
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The filesystem seam under the table-layout protocols (Merge's
-  * staging/swap/manifest publish, Dedup's persisted LSH index).
+/** The filesystem seam under the table-layout protocols: Merge's
+  * staging/swap/manifest publish, MergeStream's high-water marks,
+  * AnnStream's write-ahead intent, and the [[Artifact]] meta protocol
+  * (persisted IVF/IVF-PQ/LSH indexes, merge fixtures, the WikiStream
+  * view) with its reuse-or-rebuild and maintenance bracket.
   *
   * The protocols themselves — stage, marker, per-bucket rename,
   * manifest-atomic publish — are storage-agnostic; what varies is how
@@ -133,20 +136,4 @@ object Dfs {
     * Spark's own readers use; local runs resolve file:// exactly as
     * before). */
   lazy val default: Dfs = new HadoopDfs(() => new Configuration())
-
-  /** Stable per-corpus cache location for restart-safe artifacts
-    * (persisted ANN indexes, merge-demo fixtures): a conf-overridable
-    * base plus a 12-hex md5 key of the corpus dir. ONE derivation for
-    * every ensure path — three verbatim copies of this logic drifting
-    * apart would silently split artifact locations across operators
-    * (code-review r10). */
-  def stableCacheDir(spark: org.apache.spark.sql.SparkSession,
-                     confKey: String, defaultName: String,
-                     dir: String): String = {
-    val base = spark.conf.get(confKey,
-      sys.props("java.io.tmpdir").stripSuffix("/") + "/" + defaultName)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$base/$key"
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Similarity
+import graft.sources.Artifact
 
 /** Streaming maintenance of a persisted IVF ANN index: each
   * micro-batch of (vec_id, embedding) arrivals appends into the
@@ -34,20 +35,12 @@ import graft.operators.Similarity
   * loud failure into exactly the silent short answer the swap order
   * exists to prevent). Deployments that serve queries concurrently
   * with ingest and can tolerate neither should pass
-  * `compactEvery = 0` and schedule
-  * [[Similarity.compactIvfSmallFiles]] in a reader-quiesced window;
-  * exact
+  * `compactEvery = 0` and schedule [[Similarity.compactIvfSizeTiered]]
+  * in a reader-quiesced window; exact
   * snapshot isolation under maintenance is what the Merge manifest
   * protocol provides and is the upgrade path for this layout. Single
   * writer per index path (the MergeStream contract). */
 object AnnStream {
-
-  private def readMetaFp(indexPath: String,
-                         fs: graft.sources.Dfs): (Long, Long, Long) = {
-    val m = fs.readString(s"$indexPath/_index_meta.tsv").split("\n")
-      .filter(_.nonEmpty).map(_.split("\t")).map(a => a(0) -> a(1)).toMap
-    (m("count").toLong, m("vecIdSum").toLong, m("contentSig").toLong)
-  }
 
   /** One micro-batch of the ingest — exposed so the spec drives
     * replay scenarios deterministically ([[CorpusStream
@@ -95,18 +88,17 @@ object AnnStream {
     if (batchId > MergeStream.lastApplied(indexPath, id)) {
       val fs = graft.sources.Dfs.default
       val intentFile = s"$indexPath/_append_intent_$id.tsv"
-      val cur = readMetaFp(indexPath, fs)
+      val cur = Artifact.Fingerprint.from(
+        Artifact.index(indexPath, fs).meta, "vecIdSum")
       val landed = fs.exists(intentFile) && {
         val a = fs.readString(intentFile).trim.split("\t")
         a(0).toLong == batchId &&
-          (a(1).toLong, a(2).toLong, a(3).toLong) == cur
+          Artifact.Fingerprint(a(1).toLong, a(2).toLong, a(3).toLong) == cur
       }
       if (!landed) {
-        val bfp = Similarity.corpusFingerprint(
-          batch.select(batch.col("vec_id"), batch.col("embedding")))
-        val exp = Similarity.composeFp(cur, bfp)
+        val exp = cur + Similarity.vectorFp(batch)
         fs.writeStringAtomic(intentFile,
-          s"$batchId\t${exp._1}\t${exp._2}\t${exp._3}\n")
+          s"$batchId\t${exp.count}\t${exp.keySum}\t${exp.contentSig}\n")
         Similarity.appendIvfIndex(batch, indexPath)
       }
       MergeStream.recordApplied(indexPath, id, batchId)

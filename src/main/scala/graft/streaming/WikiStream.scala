@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.{Transform, WikidataSource}
 import graft.operators.Merge
 import graft.query.Paths
+import graft.sources.Artifact
 
 /** Streaming Wikidata ingest + incremental materialized-view
   * maintenance (SURVEY §7 / B16's Structured-Streaming extension).
@@ -71,7 +72,6 @@ object WikiStream {
         // one row per id within a batch (a dump can repeat an entity;
         // which copy wins is arbitrary, matching upsert semantics)
         val updates = mediaRows(batch).dropDuplicates("id")
-        val fs = graft.sources.Dfs.default
         // our OWN marker, not Spark's _SUCCESS (absent when a cluster
         // disables marksuccessfuljobs — Merge's CompleteMarker makes
         // the same argument): depending on _SUCCESS meant every batch
@@ -80,13 +80,14 @@ object WikiStream {
         // nBuckets, so a restart with a different caller value merges
         // with the on-disk bucketing instead of pruning the wrong
         // _mb= directories (code-review r10).
-        val metaPath = s"$viewDir/_GRAFT_VIEW_META"
-        if (!fs.exists(metaPath)) {
-          Merge.writeTarget(updates, viewDir, "id", nBuckets)
-          fs.writeStringAtomic(metaPath, s"nBuckets\t$nBuckets\n")
-        } else {
-          val nb = fs.readString(metaPath).trim.split("\t")(1).toInt
-          Merge.into(batch.sparkSession, viewDir, updates, "id", nb)
+        val view = Artifact.view(viewDir)
+        view.read match {
+          case None =>
+            Merge.writeTarget(updates, viewDir, "id", nBuckets)
+            view.publish(Artifact.Meta("nBuckets" -> nBuckets))
+          case Some(meta) =>
+            Merge.into(batch.sparkSession, viewDir, updates, "id",
+              meta("nBuckets").toInt)
         }
       }
       .start()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
+import graft.sources.Artifact
 import graft.streaming.{AnnStream, MergeStream}
 
 /** Streaming IVF-index maintenance: arrivals append under the frozen
@@ -25,6 +26,12 @@ class AnnStreamSpec extends AnyFunSuite {
     graft.functions.HashExpressions.register(s)
     s
   }
+
+  /** A size floor above every file size here: all of a cell's files
+    * fall in one tier, so `compactIvfSizeTiered` with `minTierFiles =
+    * m + 1` rewrites exactly the cells holding more than m files,
+    * wholesale (the leveling policy). */
+  private val LevelingFloor = 1L << 40
 
   private def vecs(lo: Int, hi: Int) = {
     import spark.implicits._
@@ -69,15 +76,10 @@ class AnnStreamSpec extends AnyFunSuite {
     // append exactly as ingestBatch would (intent first), then "die"
     // before the hwm write
     val fs = graft.sources.Dfs.default
-    val meta = fs.readString(s"$path/_index_meta.tsv").split("\n")
-      .filter(_.nonEmpty).map(_.split("\t")).map(a => a(0) -> a(1)).toMap
-    val bfp = Similarity.corpusFingerprint(
-      b0.select(col("vec_id"), col("embedding")))
-    val exp = Similarity.composeFp(
-      (meta("count").toLong, meta("vecIdSum").toLong,
-        meta("contentSig").toLong), bfp)
+    val exp = Artifact.Fingerprint.from(Artifact.index(path).meta,
+      "vecIdSum") + Similarity.vectorFp(b0)
     fs.writeStringAtomic(s"$path/_append_intent_$id.tsv",
-      s"0\t${exp._1}\t${exp._2}\t${exp._3}\n")
+      s"0\t${exp.count}\t${exp.keySum}\t${exp.contentSig}\n")
     Similarity.appendIvfIndex(b0, path)
     assert(n() === 384)
     assert(MergeStream.lastApplied(path, id) === -1L) // record "crashed"
@@ -220,8 +222,8 @@ class AnnStreamSpec extends AnyFunSuite {
       }
       val before = nFiles
       val pre = got.collect().map(_.toString).sorted
-      val compacted = Similarity.compactIvfSmallFiles(spark, path,
-        maxFilesPerCell = 1)
+      val compacted = Similarity.compactIvfSizeTiered(spark, path,
+        minTierFiles = 2, minSizeBytes = LevelingFloor)
       assert(compacted.nonEmpty, "appends must leave compactable cells")
       assert(nFiles < before, s"file count $before did not shrink")
       assert(spark.read.parquet(s"$path/cells").count() === 512)
@@ -298,30 +300,6 @@ class AnnStreamSpec extends AnyFunSuite {
     assert(results() === pre)
   }
 
-  /** Ordered log of every seam call, delegating to the real
-    * filesystem — the data path (Spark parquet I/O) stays real while
-    * the PROTOCOL sequencing becomes assertable, the [[DfsSpec]]
-    * mock's trick applied where a pure mock can't carry Spark reads. */
-  private final class LoggingDfs(inner: graft.sources.Dfs)
-      extends graft.sources.Dfs {
-    val log = scala.collection.mutable.ArrayBuffer.empty[String]
-    override def exists(p: String): Boolean = inner.exists(p)
-    override def mkdirs(p: String): Unit = inner.mkdirs(p)
-    override def delete(p: String): Unit = {
-      log += s"delete $p"; inner.delete(p) }
-    override def rename(s: String, d: String): Unit = {
-      log += s"rename $s -> $d"; inner.rename(s, d) }
-    override def listNames(p: String): Seq[String] = inner.listNames(p)
-    override def listDirNames(p: String): Seq[String] =
-      inner.listDirNames(p)
-    override def listFileSizes(p: String): Seq[(String, Long)] =
-      inner.listFileSizes(p)
-    override def touch(p: String): Unit = inner.touch(p)
-    override def readString(p: String): String = inner.readString(p)
-    override def writeStringAtomic(p: String, c: String): Unit = {
-      log += s"publish $p"; inner.writeStringAtomic(p, c) }
-  }
-
   test("compaction swap protocol: merged part moves IN before old files" +
       " delete, meta unpublished across the loop, no whole-dir delete") {
     val path = JF.createTempDirectory("ann_swap").toString + "/idx"
@@ -331,8 +309,8 @@ class AnnStreamSpec extends AnyFunSuite {
     Similarity.appendIvfIndex(vecs(128, 192), path)
     Similarity.appendIvfIndex(vecs(192, 256), path)
     val fs = new LoggingDfs(graft.sources.Dfs.default)
-    val compacted = Similarity.compactIvfSmallFiles(spark, path,
-      maxFilesPerCell = 1, fs)
+    val compacted = Similarity.compactIvfSizeTiered(spark, path,
+      minTierFiles = 2, minSizeBytes = LevelingFloor, fs = fs)
     assert(compacted.nonEmpty)
     val log = fs.log.toSeq
     val meta = s"$path/_index_meta.tsv"

@@ -380,6 +380,14 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("c_custkey", "c_name", "c_acctbal")
     Merge.ensureFixture(c2, "c_custkey", fx, "v1")(build(c2))
     assert(builds === 2)
+    // keys near 4e18: a raw key sum overflows long, which throws under
+    // ANSI; the residue-sum fingerprint builds once, then reuses
+    val big = Seq((4000000000000000000L, "a", 1.0),
+      (4000000000000000001L, "b", 2.0), (4000000000000000002L, "c", 3.0))
+      .toDF("c_custkey", "c_name", "c_acctbal")
+    Merge.ensureFixture(big, "c_custkey", fx + "_big", "v1")(build(big))
+    Merge.ensureFixture(big, "c_custkey", fx + "_big", "v1")(build(big))
+    assert(builds === 3)
   }
 
   test("clusteredCorpus: deterministic, distributed, matches the driver-side generator") {
