@@ -133,8 +133,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("wikidata traversal (B4): claims join broadcasts at fixture scale") {
-    val t = graft.ingest.Load.run(spark,
-      "/root/reference/tests/data/Entity.json",
+    val t = graft.ingest.Load.run(spark, ReferenceFixtures("Entity.json"),
       java.nio.file.Files.createTempDirectory("plan-audit").toString)
     val traversed = graft.query.Paths.withClaims(t.entities, t.claims)
       .filter(col("label") === "Black Clover, season 1")
@@ -664,7 +663,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("multi-language projection behind keepAllLanguages flag") {
     val raw = graft.ingest.WikidataSource.read(spark,
-      "/root/reference/tests/data/Entity.json")
+      ReferenceFixtures("Entity.json"))
     val n = graft.ingest.Transform.normalize(raw, "en", keepAllLanguages = true)
     val row = n.filter(col("id.id") === 70331950L)
       .select(element_at(col("labels_all"), "ja")).collect()(0)

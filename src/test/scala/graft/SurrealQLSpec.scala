@@ -19,11 +19,23 @@ class SurrealQLSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val fixtures = "/root/reference/tests/data"
-
   lazy val tables: Load.WikiTables = {
     val n = Transform.normalize(
-      WikidataSource.read(spark, s"$fixtures/Entity.json"), "en")
+      WikidataSource.read(spark, ReferenceFixtures("Entity.json")), "en")
+    Load.WikiTables(Transform.entityMini(n), Transform.claimsRows(n))
+  }
+
+  /** Inline entities for the tests whose checks never read fixture
+    * content: they need only well-formed Entity/Claims tables. Labels
+    * are out of sorted order on disk. */
+  lazy val authored: Load.WikiTables = {
+    val lines =
+      """{"entities":{"Q900000013":{"type":"item","id":"Q900000013","labels":{"en":{"language":"en","value":"authored c"}},"claims":{}}}}
+        |{"entities":{"Q900000011":{"type":"item","id":"Q900000011","labels":{"en":{"language":"en","value":"authored a"}},"claims":{}}}}
+        |{"entities":{"Q900000012":{"type":"item","id":"Q900000012","labels":{"en":{"language":"en","value":"authored b"}},"claims":{}}}}""".stripMargin
+    val dir = Files.createTempDirectory("surql-authored").toString
+    Files.writeString(JPaths.get(s"$dir/authored.json"), lines)
+    val n = Transform.normalize(WikidataSource.read(spark, dir), "en")
     Load.WikiTables(Transform.entityMini(n), Transform.claimsRows(n))
   }
 
@@ -34,14 +46,14 @@ class SurrealQLSpec extends AnyFunSuite {
         |{"entities":{"Q900000002":{"type":"item","id":"Q900000002","labels":{"en":{"language":"en","value":"no eps b"}},"claims":{}}}}""".stripMargin
     val mixDir = Files.createTempDirectory("surql").toString
     Files.writeString(JPaths.get(s"$mixDir/extra.json"), extra)
-    Files.copy(JPaths.get(s"$fixtures/Entity.json"),
+    Files.copy(JPaths.get(ReferenceFixtures("Entity.json")),
       JPaths.get(s"$mixDir/Entity.json"))
     val n = Transform.normalize(WikidataSource.read(spark, mixDir), "en")
     val mixed = Load.WikiTables(Transform.entityMini(n), Transform.claimsRows(n))
     assert(mixed.entities.count() === 5)
 
     val script = Files.readString(
-      JPaths.get(s"$fixtures/test_filter.surql"))
+      JPaths.get(ReferenceFixtures("test_filter.surql")))
     val out = SurrealQL.run(mixed, script)
     assert(out.tables.entities.count() === 3) // ≡ integration.rs:73
     assert(out.tables.claims.count() === 3)
@@ -224,7 +236,7 @@ class SurrealQLSpec extends AnyFunSuite {
 
   test("registered DEFINE ANALYZER pipeline == t_normalize's analyzeBlankEnglish") {
     graft.functions.TextFunctions.register(spark)
-    val out = SurrealQL.run(tables,
+    val out = SurrealQL.run(authored,
       "DEFINE ANALYZER OVERWRITE blank_english TOKENIZERS blank FILTERS lowercase, ascii, snowball(english);")
     val an = out.analyzers("blank_english")
     import spark.implicits._
@@ -238,7 +250,7 @@ class SurrealQLSpec extends AnyFunSuite {
     assert(got.toSeq === want.toSeq)
     // unknown filters must fail loudly, not silently drop
     intercept[IllegalArgumentException] {
-      SurrealQL.run(tables,
+      SurrealQL.run(authored,
         "DEFINE ANALYZER bad TOKENIZERS blank FILTERS uppercase;")
     }
   }
@@ -248,12 +260,12 @@ class SurrealQLSpec extends AnyFunSuite {
       """{"entities":{"Q900000003":{"type":"item","id":"Q900000003","labels":{"en":{"language":"en","value":"no eps c"}},"claims":{}}}}"""
     val mixDir = Files.createTempDirectory("surql-load").toString
     Files.writeString(JPaths.get(s"$mixDir/extra.json"), extra)
-    Files.copy(JPaths.get(s"$fixtures/Entity.json"),
+    Files.copy(JPaths.get(ReferenceFixtures("Entity.json")),
       JPaths.get(s"$mixDir/Entity.json"))
     val out = Load.run(spark, mixDir,
       Files.createTempDirectory("surql-sink").toString,
       mode = Load.BulkFilterScript(
-        Files.readString(JPaths.get(s"$fixtures/test_filter.surql"))))
+        Files.readString(JPaths.get(ReferenceFixtures("test_filter.surql")))))
     assert(out.entities.count() === 3)
     assert(out.claims.count() === 3)
   }
@@ -272,7 +284,7 @@ class SurrealQLSpec extends AnyFunSuite {
 
   test("labels containing AND / # parse correctly (quote-aware splitting)") {
     // a condition value containing ' and ' must not split the WHERE
-    val out = SurrealQL.run(tables,
+    val out = SurrealQL.run(authored,
       """return select id from Entity where label = "War and Peace # 5"""")
     assert(out.returned.get.count() === 0) // parses; matches nothing
   }
@@ -297,10 +309,10 @@ class SurrealQLSpec extends AnyFunSuite {
   }
 
   test("[0] is deterministic: smallest row, not an arbitrary partition's") {
-    val out = SurrealQL.run(tables,
+    val out = SurrealQL.run(authored,
       "return (select label from Entity)[0]")
     val got = out.returned.get.collect()(0).getString(0)
-    val all = SurrealQL.run(tables, "return select label from Entity")
+    val all = SurrealQL.run(authored, "return select label from Entity")
       .returned.get.collect().map(_.getString(0)).sorted
     assert(got === all.head)
   }
@@ -342,7 +354,7 @@ class SurrealQLSpec extends AnyFunSuite {
     // ETL the reference's Property.json fixture alongside Entity.json,
     // then run the reference's own assertion query as a string
     val n = Transform.normalize(
-      WikidataSource.read(spark, s"$fixtures/Property.json"), "en")
+      WikidataSource.read(spark, ReferenceFixtures("Property.json")), "en")
     val both = Load.WikiTables(
       tables.entities.unionByName(Transform.entityMini(n), allowMissingColumns = true),
       tables.claims.unionByName(Transform.claimsRows(n), allowMissingColumns = true))

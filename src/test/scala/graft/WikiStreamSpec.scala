@@ -23,7 +23,7 @@ class WikiStreamSpec extends AnyFunSuite {
 
   test("dump files stream through the batch transform unchanged") {
     val dumpDir = tmp()
-    Files.copy(JPaths.get("/root/reference/tests/data/Entity.json"),
+    Files.copy(JPaths.get(ReferenceFixtures("Entity.json")),
       JPaths.get(s"$dumpDir/part1.json"))
     val q = WikiStream.normalizedStream(spark, dumpDir).writeStream
       .outputMode("append").format("memory").queryName("wiki_stream").start()

@@ -26,10 +26,9 @@ class WikidataPipelineSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val fixtures = "/root/reference/tests/data"
   def tmp(): String = Files.createTempDirectory("graft-test").toString
 
-  lazy val entityRaw = WikidataSource.read(spark, s"$fixtures/Entity.json")
+  lazy val entityRaw = WikidataSource.read(spark, ReferenceFixtures("Entity.json"))
   lazy val entityTables = {
     val n = Transform.normalize(entityRaw, "en")
     Load.WikiTables(Transform.entityMini(n), Transform.claimsRows(n))
@@ -48,14 +47,14 @@ class WikidataPipelineSpec extends AnyFunSuite {
     codec.setConf(spark.sparkContext.hadoopConfiguration)
     val out = codec.createOutputStream(
       new java.io.FileOutputStream(bz2Path))
-    Files.copy(JPaths.get(s"$fixtures/Entity.json"), out)
+    Files.copy(JPaths.get(ReferenceFixtures("Entity.json")), out)
     out.close()
     assert(WikidataSource.read(spark, bz2Path, "bz2").count() === 3)
   }
 
   test("A3: unknown format fails fast") {
     intercept[IllegalArgumentException] {
-      WikidataSource.read(spark, s"$fixtures/Entity.json", "7z")
+      WikidataSource.read(spark, s"${ReferenceFixtures.dir}/Entity.json", "7z")
     }
   }
 
@@ -106,7 +105,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
 
   test("flagship (integration.rs:25-53): Black Clover season 1 has 51.0 episodes") {
     val dir = tmp()
-    val t = Load.run(spark, s"$fixtures/Entity.json", dir, lang = "en")
+    val t = Load.run(spark, ReferenceFixtures("Entity.json"), dir, lang = "en")
     val episodes = Paths.withClaims(t.entities, t.claims)
       .filter(col("label") === "Black Clover, season 1")
       .select(Paths.quantityAmount(col("claims_arr"), 1113).as("episodes"))
@@ -116,7 +115,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
 
   test("property load (integration.rs:87-100): 2 properties with en labels") {
     val dir = tmp()
-    val t = Load.run(spark, s"$fixtures/Property.json", dir, lang = "en")
+    val t = Load.run(spark, ReferenceFixtures("Property.json"), dir, lang = "en")
     val props = t.entities.filter(col("id.tb") === "Property")
     assert(props.count() === 2)
     assert(props.select("label").collect().map(_.getString(0)).toSet ===
@@ -134,7 +133,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
         |{"entities":{"Q900000002":{"type":"item","id":"Q900000002","labels":{"en":{"language":"en","value":"no episodes b"}},"claims":{}}}}""".stripMargin
     val mixDir = tmp()
     Files.writeString(JPaths.get(s"$mixDir/extra.json"), extra)
-    Files.copy(JPaths.get(s"$fixtures/Entity.json"),
+    Files.copy(JPaths.get(ReferenceFixtures("Entity.json")),
       JPaths.get(s"$mixDir/Entity.json"))
     val t = Load.run(spark, mixDir, dir, lang = "en",
       mode = Load.BulkFilter(Ops.filterLacksProperty(1113)))
@@ -145,7 +144,7 @@ class WikidataPipelineSpec extends AnyFunSuite {
   test("B7: value union branches — monolingualtext, novalue, quantity bounds") {
     val dir = tmp()
     val n = Transform.normalize(
-      WikidataSource.read(spark, s"$fixtures/Property.json"), "en")
+      WikidataSource.read(spark, ReferenceFixtures("Property.json")), "en")
     // P527 carries a novalue snak on P3254 (qualifier of its claims)
     val hasNoValue = n.select(expr(
       "size(filter(claims_arr, c -> c.value.ClaimValueData.NoValue = true)) > 0")
