@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.SparkSession
+import graft.obs.Counters
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and
@@ -47,8 +48,9 @@ object Bench {
   private val LateCapSec = 15
 
   /** Run `body` under a dedicated job group; a daemon watchdog cancels
-    * the group's jobs at `capSec`. Returns elapsed seconds, `capSec`
-    * when the watchdog fired, -1 on genuine (pre-cap) failure.
+    * the group's jobs at `capSec`. Returns elapsed seconds (`capSec`
+    * when the watchdog fired, -1 on genuine (pre-cap) failure) and the
+    * group, under which [[Counters]] holds the run's jobs.
     *
     * The cancel REPEATS every 200 ms until the body exits:
     * cancelJobGroup is a one-shot cancel of the jobs running at that
@@ -57,7 +59,7 @@ object Bench {
     * arbitrarily far past the cap (observed: 84.8 s past a 60 s cap
     * in a stall window). */
   private def runCapped(spark: SparkSession, tag: String, capSec: Int)
-                       (body: => Unit): Double = {
+                       (body: => Unit): (Double, String) = {
     val sc = spark.sparkContext
     val group = s"bench-$tag-${System.nanoTime()}"
     val done = new AtomicBoolean(false)
@@ -73,10 +75,12 @@ object Bench {
     watchdog.setDaemon(true)
     watchdog.start()
     val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
-    catch {
-      case _: Throwable => if (fired.get()) capSec.toDouble else -1.0
-    } finally { done.set(true); sc.clearJobGroup() }
+    val sec =
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case _: Throwable => if (fired.get()) capSec.toDouble else -1.0
+      } finally { done.set(true); sc.clearJobGroup() }
+    (sec, group)
   }
 
   /** 4-decimal (0.1 ms) formatting keeps the 100+-query JSON line
@@ -103,6 +107,9 @@ object Bench {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // per query: the job group of the rep that gave its recorded time
+    val groups = scala.collection.mutable.Map[String, String]()
+    val counters = new Counters()
     var etlEps = -1.0
     // end-of-sweep re-run of the SAME calibration marker (r15, VERDICT
     // r14 #1): the marker is measured first, so a host-speed swing
@@ -150,7 +157,11 @@ object Bench {
         case None => ""
       }
       val partialField = if (complete) "" else ""","partial":true"""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"best_of_2","queries":$qs,"sf":"$sfDir","etl_entities_per_sec":${fmt(etlEps)},"etl_baseline_eps":568${windowFields()}$subsetField$failedField$partialField}"""
+      // window-immune counters of each recorded rep (full artifact only)
+      def perQuery(of: Counters.Acc => Long): String =
+        results.keys.map(k => "\"" + k + "\":" + of(counters.group(groups(k))))
+          .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"best_of_2","queries":$qs,"jobs":${perQuery(_.jobs)},"shuffle_bytes":${perQuery(_.shuffleWriteBytes)},"sf":"$sfDir","etl_entities_per_sec":${fmt(etlEps)},"etl_baseline_eps":568${windowFields()}$subsetField$failedField$partialField}"""
     }
 
     /** The round driver records only the LAST ~2000 chars of output and
@@ -212,7 +223,7 @@ object Bench {
     // code) — throughput takes the max over however many runs succeed.
     def etlOnce(): Double = {
       var eps = -1.0
-      val r = runCapped(spark, "etl", 3 * QueryCapSec) {
+      val (r, _) = runCapped(spark, "etl", 3 * QueryCapSec) {
         eps = graft.tools.EtlBench.timedLoad(spark, 150000,
           "/tmp/graft_bench_dump.json", "/tmp/graft_bench_etl")
       }
@@ -226,9 +237,6 @@ object Bench {
       etlEps = math.max(etlEps, second)
       flush()
     }
-    // maxPartitionBytes was shrunk for the small ETL file; restore the
-    // default so parquet query scans split normally
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
 
     // per-query best-of-2: a contention spike during either run cannot
     // inflate the recorded time. Semantics note ("timing":"best_of_2"):
@@ -240,39 +248,45 @@ object Bench {
     // published by run 1 are unreachable garbage, not input to run 2.
     val sweepStart = System.nanoTime()
     def sweepElapsed(): Double = (System.nanoTime() - sweepStart) / 1e9
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        val cap = if (sweepElapsed() > LateBudgetSec) LateCapSec
-                  else QueryCapSec
-        val r1 = runCapped(spark, name, cap) { fn(spark, sfDir).count() }
-        // MEASUREMENT FIX (r14, documented in OPTIMIZATION_r14.md):
-        // the old rule skipped rep 2 whenever rep 1 exceeded 5 s — on
-        // a slow/contended host that records rep 1's FIRST-EXECUTION
-        // cost (codegen/JIT compile, ensure-fixture builds) as the
-        // query's time, mismeasuring by 3–10× exactly for the
-        // heavyweight queries (measured: d_exact_norm recorded 9.6 s
-        // cold vs 0.5 s warm in the r14 baseline sweep). Rep 2 now
-        // always runs inside the sweep budget, with its wall cap tied
-        // to rep 1 (≤ ~1.25×rep1, floor 6 s): a genuine stall window
-        // wastes at most about one extra rep1, while a cold-compile
-        // rep 1 gets its warm rep 2 and best-of-2 means what it says.
-        // A rep-2 watchdog fire returns the cap and loses to rep 1.
-        val best =
-          if (r1 >= 0 && sweepElapsed() <= SingleRepAfterSec) {
-            val cap2 = math.min(cap, math.max(6, math.ceil(r1 * 1.25).toInt))
-            val r2 = runCapped(spark, name, cap2) { fn(spark, sfDir).count() }
-            if (r2 < 0) singleRep += name // rep 2 failed → cold record
-            if (r2 >= 0) math.min(r1, r2) else r1
-          } else {
-            // late-sweep single-rep regime: the recorded time is a cold
-            // first execution — mark it so the artifact says so (r15)
-            if (r1 >= 0) singleRep += name
-            r1
-          }
-        results(name) = best
-        flush()
-      }
+    // listener events trail the runs: the artifact written during the
+    // sweep may undercount its last query; the final one is settled
+    counters.during(spark) {
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => subset.forall(_.contains(name)) }
+        .foreach { case (name, fn) =>
+          val cap = if (sweepElapsed() > LateBudgetSec) LateCapSec
+                    else QueryCapSec
+          val (r1, g1) = runCapped(spark, name, cap) { fn(spark, sfDir).count() }
+          // MEASUREMENT FIX (r14, documented in OPTIMIZATION_r14.md):
+          // the old rule skipped rep 2 whenever rep 1 exceeded 5 s — on
+          // a slow/contended host that records rep 1's FIRST-EXECUTION
+          // cost (codegen/JIT compile, ensure-fixture builds) as the
+          // query's time, mismeasuring by 3–10× exactly for the
+          // heavyweight queries (measured: d_exact_norm recorded 9.6 s
+          // cold vs 0.5 s warm in the r14 baseline sweep). Rep 2 now
+          // always runs inside the sweep budget, with its wall cap tied
+          // to rep 1 (≤ ~1.25×rep1, floor 6 s): a genuine stall window
+          // wastes at most about one extra rep1, while a cold-compile
+          // rep 1 gets its warm rep 2 and best-of-2 means what it says.
+          // A rep-2 watchdog fire returns the cap and loses to rep 1.
+          val (best, group) =
+            if (r1 >= 0 && sweepElapsed() <= SingleRepAfterSec) {
+              val cap2 = math.min(cap, math.max(6, math.ceil(r1 * 1.25).toInt))
+              val (r2, g2) = runCapped(spark, name, cap2) { fn(spark, sfDir).count() }
+              if (r2 < 0) singleRep += name // rep 2 failed → cold record
+              if (r2 >= 0 && r2 < r1) (r2, g2) else (r1, g1)
+            } else {
+              // late-sweep single-rep regime: the recorded time is a cold
+              // first execution — mark it so the artifact says so (r15)
+              if (r1 >= 0) singleRep += name
+              (r1, g1)
+            }
+          groups(name) = group
+          results(name) = best
+          flush()
+        }
+      counters.settle()
+    }
 
     // re-measure the calibration marker at sweep END (r15): untouched
     // code, so start-vs-end drift is host speed — the one number that

@@ -1,102 +1,73 @@
 package graft.ingest
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.obs.Counters
 
 /** A17 progress reporting: the reference renders an indicatif
   * `ProgressBar` with a HARDCODED total of 112,500,000 entities and a
   * hand-rolled ETA (`src/utils/init_progress_bar.rs:3-22`, incremented
-  * per chunk at `src/utils.rs:162-164`). The Spark-native equivalent is
-  * a [[SparkListener]]: executors already report per-task input/output
-  * metrics, so the counters here are REAL records/bytes — no hardcoded
-  * total needed (an optional one only feeds the ETA line).
+  * per chunk at `src/utils.rs:162-164`). The Spark-native equivalent
+  * renders the running total of [[Counters]]: executors already report
+  * per-task input/output metrics, so the counts here are REAL
+  * records/bytes — no hardcoded total needed (an optional one only
+  * feeds the ETA line).
   *
-  * Listener callbacks run on the listener-bus dispatch thread while
-  * tasks keep completing — everything is atomic, nothing blocks, and a
-  * slow `out` sink can at worst delay reports (never the job: Spark
-  * drops a listener that stalls the bus, it does not stall tasks).
+  * Reports are rendered on the listener-bus thread while tasks keep
+  * completing; nothing blocks, and a slow `out` sink can at worst
+  * delay reports (never the job: Spark drops a listener that stalls
+  * the bus, it does not stall tasks).
   */
 final class EtlProgress(totalRecords: Option[Long] = None,
                         reportEveryMs: Long = 5000L,
-                        out: String => Unit = m => System.err.println(m))
-    extends SparkListener {
+                        out: String => Unit = m => System.err.println(m)) {
 
   private val startNs = System.nanoTime()
-  private val lastReportNs = new AtomicLong(System.nanoTime())
+  private var lastReportNs = startNs // read and written on the bus thread only
 
-  val recordsRead = new AtomicLong(0L)
-  val bytesRead = new AtomicLong(0L)
-  val recordsWritten = new AtomicLong(0L)
-  val bytesWritten = new AtomicLong(0L)
-  val tasksCompleted = new AtomicLong(0L)
-
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-    val m = taskEnd.taskMetrics
-    if (m != null) {
-      recordsRead.addAndGet(m.inputMetrics.recordsRead)
-      bytesRead.addAndGet(m.inputMetrics.bytesRead)
-      recordsWritten.addAndGet(m.outputMetrics.recordsWritten)
-      bytesWritten.addAndGet(m.outputMetrics.bytesWritten)
-    }
-    tasksCompleted.incrementAndGet()
+  val counters = new Counters(() => {
     val now = System.nanoTime()
-    val last = lastReportNs.get()
-    if ((now - last) >= reportEveryMs * 1000000L &&
-        lastReportNs.compareAndSet(last, now))
+    if (now - lastReportNs >= reportEveryMs * 1000000L) {
+      lastReportNs = now
       out(render())
-  }
+    }
+  })
 
   def elapsedSec: Double = (System.nanoTime() - startNs) / 1e9
 
-  /** Wait (bounded) until the task counter stops moving — the async
-    * listener bus has drained as far as it will. Returns `this`. */
-  def settled(maxWaitMs: Long = 2000L): EtlProgress = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var prev = -1L
-    while (tasksCompleted.get() != prev && System.nanoTime() < deadline) {
-      prev = tasksCompleted.get()
-      Thread.sleep(50L)
-    }
-    this
-  }
-
   /** One status line, reference-bar shaped: count [/total], rate, ETA. */
   def render(): String = {
-    val read = recordsRead.get()
+    val t = counters.total
+    val read = t.inputRecords
     val secs = math.max(elapsedSec, 1e-9)
     val rate = read / secs
     val eta = totalRecords match {
-      case Some(t) if rate > 0 && t > read =>
-        f", eta ${(t - read) / rate}%.0fs"
+      case Some(n) if rate > 0 && n > read =>
+        f", eta ${(n - read) / rate}%.0fs"
       case _ => ""
     }
-    val ofTotal = totalRecords.fold("")(t => s"/$t")
-    f"[graft etl] $read%,d$ofTotal records in (${bytesRead.get() / (1 << 20)}%,d MiB), " +
-      f"${recordsWritten.get()}%,d out, ${tasksCompleted.get()}%,d tasks, " +
+    val ofTotal = totalRecords.fold("")(n => s"/$n")
+    f"[graft etl] $read%,d$ofTotal records in (${t.inputBytes / (1 << 20)}%,d MiB), " +
+      f"${t.outputRecords}%,d out, ${t.tasks}%,d tasks, " +
       f"$rate%,.0f rec/s$eta"
   }
 }
 
 object EtlProgress {
 
-  /** Install a listener around `body`, always detach it after, and emit
-    * one final summary line. Counter caveat: the listener bus is async,
-    * so the final line can trail the last task by a beat — [[settled]]
-    * is the read for anyone who needs exact totals.
-    */
+  /** Count tasks during `body`, detach after, and emit one final
+    * summary line over the settled counters. */
   def withProgress[A](spark: SparkSession,
                       totalRecords: Option[Long] = None,
                       reportEveryMs: Long = 5000L,
                       out: String => Unit = m => System.err.println(m))
                      (body: EtlProgress => A): A = {
     val p = new EtlProgress(totalRecords, reportEveryMs, out)
-    spark.sparkContext.addSparkListener(p)
-    try {
+    p.counters.during(spark) {
       val r = body(p)
-      out(p.settled().render())
+      p.counters.settle()
+      out(p.render())
       r
-    } finally spark.sparkContext.removeSparkListener(p)
+    }
   }
 }

@@ -420,7 +420,7 @@ object Dedup {
     Snapshot.cached(signatures(df)) { sigd =>
       // collapse to ONE writer task before the bucketed write:
       // without it every append emits nBuckets x input-partitions
-      // files (the StateGrowthProbe's 100-append stream accumulated
+      // files (the `Probe growth dedup` 100-append stream accumulated
       // 25,600 files for 245 MB, and the per-batch index scan's
       // latency grew 5.8x — footer opens, not data; PERF_r11). The
       // writer fans its task back out into one file per bucket id, so

@@ -378,7 +378,7 @@ object Similarity {
     // cap: a raw partitionBy leaves every WRITE TASK emitting a file
     // into every cell it sees — tasks × nCells files, which at
     // cluster scale (1000s of tasks, √N cells) is a small-file
-    // explosion the AnnStateGrowthProbe showed taxes every
+    // explosion `Probe growth ann` showed taxes every
     // subsequent search. One shuffle at build time (write-once,
     // search-many) buys ~one file per cell; maxRecordsPerFile is the
     // opposite-direction bound (ADVICE r13): a cell whose population
@@ -441,7 +441,7 @@ object Similarity {
     * A plain read of the cells root builds a file index over EVERY
     * cell before the partition filter prunes it: one recursive listing
     * of nCells directories per search batch, which the 2048-cell
-    * AnnScaleProbe measured dominating warm search latency (and at
+    * `Probe annscale` measured dominating warm search latency (and at
     * object-store scale is nCells LIST calls). One driver-side name
     * listing picks the probed dirs that exist (cells can be empty →
     * never written); basePath keeps `cell` a partition column. */
@@ -711,7 +711,7 @@ object Similarity {
   /** Merge a cell's accumulated small append files — the IVF twin
     * of [[graft.operators.Dedup.compactLshIndex]] (the r11 100-batch
     * LSH probe found small-file accumulation throttling probe
-    * latency; the r12 [[graft.tools.AnnStateGrowthProbe]] measured the
+    * latency; the r12 `Probe growth ann` run (PERF_r12) measured the
     * SAME linear growth here — nCells files per streamed micro-batch).
     * SIZE-TIERED (Cassandra STCS shape, [[sizeTierBuckets]]): fresh
     * micro-batch files merge among themselves into a medium file,

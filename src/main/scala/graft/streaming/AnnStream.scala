@@ -79,7 +79,7 @@ object AnnStream {
     * file is rewritten only when its own size tier fills — each byte
     * is rewritten O(log(index/batch)) times total, so per-batch
     * rewrite bytes stay bounded as the index grows
-    * (AnnStateGrowthProbe measures the per-wave rewrite curve).
+    * (`Probe growth ann` measures the per-wave rewrite curve).
     * `maxFilesPerCell` sets the tier trigger: a size bucket merges
     * once it holds that many files. */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String,

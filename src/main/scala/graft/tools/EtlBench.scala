@@ -64,26 +64,30 @@ object EtlBench {
   /** Shared timing path (Bench reuses it so both tools measure under
     * one split-sizing policy): generate n entities, load, return
     * entities/sec. Split size fans a small bench file out the way a
-    * multi-GB dump would. */
+    * multi-GB dump would; the session's own setting is back in place
+    * when this returns, so later scans split normally. */
   def timedLoad(spark: SparkSession, n: Int, dump: String,
                 outDir: String): Double = {
     writeDump(dump, n)
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      if (dump.endsWith(".bz2")) "4m" else "8m")
-    // untimed warm-up load: JIT + codegen cost is not the pipeline's
-    // steady-state throughput (measured 4.4k cold vs 16k warm e/s)
-    writeDump("/tmp/etl_warmup.json", 5000)
-    Load.run(spark, "/tmp/etl_warmup.json", "/tmp/etl_warmup_out")
-      .entities.count()
-    val t0 = System.nanoTime()
-    // A17: the reference's progress bar equivalent — live task-metric
-    // reporting while the timed load runs (listener overhead is noise)
-    val t = graft.ingest.EtlProgress.withProgress(spark, Some(n.toLong)) {
-      _ => Load.run(spark, dump, outDir,
-        format = if (dump.endsWith(".bz2")) "bz2" else "json")
-    }
-    val entities = t.entities.count()
-    entities / ((System.nanoTime() - t0) / 1e9)
+    val splitKey = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getAll.get(splitKey)
+    spark.conf.set(splitKey, if (dump.endsWith(".bz2")) "4m" else "8m")
+    try {
+      // untimed warm-up load: JIT + codegen cost is not the pipeline's
+      // steady-state throughput (measured 4.4k cold vs 16k warm e/s)
+      writeDump("/tmp/etl_warmup.json", 5000)
+      Load.run(spark, "/tmp/etl_warmup.json", "/tmp/etl_warmup_out")
+        .entities.count()
+      val t0 = System.nanoTime()
+      // A17: the reference's progress bar equivalent — live task-metric
+      // reporting while the timed load runs (listener overhead is noise)
+      val t = graft.ingest.EtlProgress.withProgress(spark, Some(n.toLong)) {
+        _ => Load.run(spark, dump, outDir,
+          format = if (dump.endsWith(".bz2")) "bz2" else "json")
+      }
+      val entities = t.entities.count()
+      entities / ((System.nanoTime() - t0) / 1e9)
+    } finally prior.fold(spark.conf.unset(splitKey))(spark.conf.set(splitKey, _))
   }
 
   def main(args: Array[String]): Unit = {

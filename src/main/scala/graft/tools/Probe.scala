@@ -1,19 +1,26 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.{LocalSession, SparkEntry}
+import graft.obs.Counters
+import graft.operators.{Merge, Similarity}
+import graft.sources.Tables
+import graft.streaming.{AnnStream, CorpusStream, DriftStream, MergeStream}
 
-/** Per-query probes over named registry queries. Two modes, each a
-  * function of a live session (`main` is a thin wrapper), so tests
-  * call them without stopping a shared session:
+/** Probes over named registry queries and over the streaming and ANN
+  * operators. Each mode is a function of a live session (`main` is a
+  * thin wrapper that builds the session), so tests call them without
+  * stopping a shared session:
   *
   *  - `stats`: for each query, builder + count() twice (cold, warm);
   *    reports the WARM run's wall seconds, Spark jobs, stages, tasks,
-  *    shuffle MB written and input MB read. A query whose warm time is
+  *    shuffle MB written and input MB read, read from [[Counters]]
+  *    under the warm run's own job group. A query whose warm time is
   *    dominated by job count × local-mode scheduling (tiny shuffle and
   *    input bytes) is overhead-bound: the fix is fewer actions, not
   *    faster kernels.
@@ -23,10 +30,20 @@ import graft.{LocalSession, SparkEntry}
   *    PlanAuditSpec). Queries whose builders run real writes at
   *    plan-build time (index builds, versioned merges) execute those
   *    writes here; the dumped plan is the final returned stage.
+  *  - `stream`: per-batch latency and throughput of the four streaming
+  *    operators (PERF_r10).
+  *  - `growth dedup|ann`: per-batch latency against accumulated stream
+  *    state for the LSH dedup index and the IVF index (PERF_r11–r13,
+  *    OPTIMIZATION_r15).
+  *  - `annscale`: IVF build and probed search against brute force over
+  *    replicated corpora (PERF_r13).
   *
   * {{{
   *   runMain graft.tools.Probe stats <sfDir> <q1,q2,...>
   *   runMain graft.tools.Probe plan <sfDir> <out.md> [q1,q2,...]
+  *   runMain graft.tools.Probe stream <sfDir> [nBatches]
+  *   runMain graft.tools.Probe growth <sfDir> dedup|ann [nBatches] [nWaves]
+  *   runMain graft.tools.Probe annscale <sfDir> [factor ...]
   * }}}
   * Plain timing of named queries is a `graft.Bench` subset run
   * (`SPARK_GRAFT_QUERIES=q1,q2`).
@@ -42,58 +59,24 @@ object Probe {
   }
 
   def stats(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Stats] = {
-    val jobs = new AtomicInteger(0)
-    val jobsEnded = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val shuffleW = new AtomicLong(0L)
-    val input = new AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        jobsEnded.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-      }
-      // bytes come from each task's own metrics: the stage-level
-      // aggregate left input bytes at 0 for parquet scans
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          input.addAndGet(m.inputMetrics.bytesRead)
-        }
-    }
-    // listener events arrive asynchronously: wait until every started
-    // job has ended and the stage count holds still (capped at 5 s)
-    def settle(): Unit = {
-      val deadline = System.nanoTime() + 5000000000L
-      var seen = -1
-      while (System.nanoTime() < deadline &&
-             (stages.get != seen || jobs.get != jobsEnded.get)) {
-        seen = stages.get
-        Thread.sleep(200)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val sc = spark.sparkContext
+    val counters = new Counters()
+    counters.during(spark) {
       // session warm-up so the first probed query doesn't carry JIT cost
       spark.range(1000000).selectExpr("sum(id)").collect()
       names.map { name =>
         val fn = SparkEntry.queries(name)
         fn(spark, sfDir).count() // cold pass (JIT + page cache)
-        settle()
-        Seq(jobs, jobsEnded, stages, tasks).foreach(_.set(0))
-        Seq(shuffleW, input).foreach(_.set(0L))
+        val group = s"probe-$name-${System.nanoTime()}"
+        sc.setJobGroup(group, name)
         val t0 = System.nanoTime()
-        val rows = fn(spark, sfDir).count()
+        val rows = try fn(spark, sfDir).count() finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        settle()
-        Stats(name, sec, rows, jobs.get, stages.get, tasks.get,
-          shuffleW.get / 1e6, input.get / 1e6)
+        val c = counters.settle().group(group)
+        Stats(name, sec, rows, c.jobs.toInt, c.stages.toInt, c.tasks.toInt,
+          c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6)
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   val headline = Seq(
@@ -166,11 +149,326 @@ object Probe {
         graft.sources.Tables.load(spark, sfDir, "documents"))))
   }
 
+  /** One streaming micro-batch with input: its id, input rows and
+    * `triggerExecution` wall ms (source discovery + the foreachBatch
+    * body + sink writes — the end-to-end batch cost). */
+  case class Batch(id: Long, rows: Long, ms: Long)
+
+  /** The non-empty batches of a stream's retained progress, in batch
+    * order. First/last-decile mean trigger ms: a flat latency curve has
+    * `tailOverHead` ~1, superlinear per-batch cost shows up directly. */
+  case class Batches(all: Seq[Batch]) {
+    private val dec = math.max(1, all.length / 10)
+    val firstDecileMs: Double = all.take(dec).map(_.ms).sum.toDouble / dec
+    val lastDecileMs: Double = all.takeRight(dec).map(_.ms).sum.toDouble / dec
+    def tailOverHead: Double = (lastDecileMs / firstDecileMs * 100).round / 100.0
+  }
+
+  private def batches(q: StreamingQuery): Batches =
+    Batches(q.recentProgress.filter(_.numInputRows > 0).sortBy(_.batchId).toSeq
+      .map(p => Batch(p.batchId, p.numInputRows,
+        p.durationMs.get("triggerExecution").longValue())))
+
+  /** Write each chunk as exactly one JSON file `chunk<offset + i>.json`
+    * in `inDir` — the file-stream source's batch unit. Staging in waves
+    * into a LIVE stream dir passes an `offset` so no name the source
+    * already processed is reused; the `_stage` dirs are hidden from the
+    * source by their leading underscore. */
+  private def stageChunks(inDir: String, chunks: Seq[DataFrame],
+                          offset: Int = 0): Unit = {
+    Files.createDirectories(Paths.get(inDir))
+    chunks.zipWithIndex.foreach { case (df, i0) =>
+      val i = i0 + offset
+      val stage = s"$inDir/_stage$i"
+      df.coalesce(1).write.mode("overwrite").json(stage)
+      val part = new File(stage).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+        .getOrElse(sys.error(s"no part file in $stage"))
+      Files.move(part.toPath, Paths.get(s"$inDir/chunk$i.json"),
+        StandardCopyOption.REPLACE_EXISTING)
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(stage))
+    }
+  }
+
+  /** Run `body` over a fresh temp dir, deleted afterwards: a probe's
+    * indexes, checkpoints and staged input are scratch (a 100-batch
+    * dedup growth run at sf0.1 wrote 245 MB of index files, PERF_r11). */
+  private def inTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  /** One staged file per micro-batch. */
+  private def fileStream(spark: SparkSession, ddl: String, dir: String): DataFrame =
+    spark.readStream.schema(ddl).option("maxFilesPerTrigger", "1").json(dir)
+
+  /** Path → bytes of every parquet file under `dir`. */
+  private def parquetFiles(dir: String): Map[String, Long] = {
+    def walk(f: File): Seq[(String, Long)] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f.getPath -> f.length())
+      else Nil
+    walk(new File(dir)).toMap
+  }
+
+  /** `stream`: drives [[MergeStream.upsertStream]],
+    * [[CorpusStream.onlineDedup]], [[AnnStream.ingestStream]] and
+    * [[DriftStream.driftStream]] with a file-source stream over the sf
+    * tables, one staged input file per micro-batch, and returns each
+    * stream's non-empty batches under its tag. */
+  def stream(spark: SparkSession, sfDir: String,
+             nBatches: Int): Seq[(String, Batches)] = inTempDir("stream_probe") { base =>
+    // stage `df` as one file per `key % nBatches` slice, stream the
+    // files through `start` and return the stream's batches
+    def run(tag: String, df: DataFrame, key: String, ddl: String)
+           (start: DataFrame => StreamingQuery): (String, Batches) = {
+      val in = s"$base/${tag}_in"
+      stageChunks(in, (0 until nBatches).map(i => df.filter(col(key) % nBatches === i)))
+      val q = start(fileStream(spark, ddl, in))
+      q.processAllAvailable(); q.stop()
+      tag -> batches(q)
+    }
+
+    // upsertStream: versioned target, one delta file per batch
+    val c = Tables.load(spark, sfDir, "customer")
+      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
+    Merge.writeVersioned(c, s"$base/target", "c_custkey", nBuckets = 8)
+    val up = run("upsert", c.withColumn("c_acctbal", col("c_acctbal") + 1.0),
+        "c_custkey", c.schema.toDDL)(
+      MergeStream.upsertStream(_, s"$base/target", "c_custkey", s"$base/up_ckpt"))
+
+    // onlineDedup: document chunks, LSH index accumulates state
+    val d = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val dd = run("online_dedup", d, "doc_id", d.schema.toDDL)(
+      CorpusStream.onlineDedup(_, "stream_probe_docs", s"$base/dd_index",
+        s"$base/dd_out", s"$base/dd_ckpt"))
+
+    // annIngestStream: IVF index grown one vector-batch per trigger
+    val e = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val half = e.count() / 2
+    val idx = s"$base/ann_idx"
+    Similarity.ensureIvfIndex(e.filter(col("vec_id") < half), idx)
+    val ai = run("ann_ingest", e.filter(col("vec_id") >= half), "vec_id",
+        "vec_id LONG, embedding ARRAY<FLOAT>")(
+      AnnStream.ingestStream(_, idx, s"$base/ann_ckpt"))
+
+    // driftStream: PSI monitor over document-length batches, frozen
+    // reference = the english slice
+    val docs = Tables.load(spark, sfDir, "documents")
+    val model = DriftStream.fitReference(
+      docs.filter(col("lang") === "en"), col("n_chars"))
+    val dr = run("drift", docs.select(col("doc_id"), col("n_chars")), "doc_id",
+        "doc_id LONG, n_chars LONG")(
+      DriftStream.driftStream(_, model, col("n_chars"), s"$base/dr_state",
+        s"$base/dr_out", s"$base/dr_ckpt"))
+
+    Seq(up, dd, ai, dr)
+  }
+
+  /** `growth`: does per-batch latency stay flat as the stream's
+    * accumulated state grows 10x/100x? Fixed-size micro-batches, each
+    * one full replica of the source table under ScaleUp's convention
+    * (replica k: key offset k·10⁹; documents get every token suffixed
+    * "x<k>", embeddings fresh xxhash components), so batches are
+    * content-disjoint and the curve isolates index cost — not
+    * pair-explosion cost (dedup) or cell skew (ann).
+    *
+    * Batches arrive in `nWaves` waves into one live stream and its
+    * checkpoint, as a long-running ingest would: stage wave w,
+    * processAllAvailable, measure, stage the next.
+    *
+    *  - `dedup` ([[CorpusStream.onlineDedup]], one wave by default):
+    *    per-batch trigger ms against cumulative indexed docs.
+    *  - `ann` ([[AnnStream.ingestStream]] over an index prebuilt on the
+    *    base vectors): per-append trigger latency (super-linear growth
+    *    means the append path rescans the index); after each wave the
+    *    index FILE count, the bytes compaction REWROTE since the last
+    *    wave (files gone since then: appends only add files) and the
+    *    search latency over the grown layout (file-count growth taxes
+    *    the scan's listing/footers long before data volume does); and
+    *    a trailing offline `compactIvfSizeTiered` pass, which should
+    *    find little left since the stream compacts every 10 batches.
+    *
+    * Returns the one JSON summary line.
+    */
+  def growth(spark: SparkSession, sfDir: String, kind: String,
+             nBatches: Int, nWaves: Int): String = inTempDir(s"${kind}_state_probe") { base =>
+    require(kind == "dedup" || kind == "ann", s"growth kind: $kind")
+    val perWave = nBatches / nWaves
+    val tag = if (kind == "ann") "[ann_probe]" else "[state_probe]"
+
+    // stage the waves (chunk j holds replica(j)), start the stream
+    // after the first wave, call `afterWave` after each; stops the
+    // stream and returns its batches
+    def inWaves[W](replica: Int => DataFrame, start: String => StreamingQuery)
+                  (afterWave: Int => W): (Batches, Seq[W]) = {
+      var q: StreamingQuery = null
+      val ws = (0 until nWaves).map { w =>
+        stageChunks(s"$base/in",
+          (w * perWave until (w + 1) * perWave).map(replica), offset = w * perWave)
+        if (q == null) q = start(s"$base/in")
+        q.processAllAvailable()
+        afterWave(w)
+      }
+      q.stop()
+      (batches(q), ws)
+    }
+
+    if (kind == "dedup") {
+      val d = Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+      val perBatch = d.count()
+      System.err.println(s"$tag staging $nBatches x $perBatch docs")
+      val (bs, _) = inWaves(k =>
+        if (k == 0) d
+        else d
+          .withColumn("doc_id", col("doc_id") + lit(k * 1000000000L))
+          .withColumn("text", array_join(
+            transform(split(col("text"), " "), t => concat(t, lit(s"x$k"))), " ")),
+        in => CorpusStream.onlineDedup(
+          fileStream(spark, "doc_id LONG, text STRING", in),
+          "state_probe_docs", s"$base/index", s"$base/out", s"$base/ckpt"))(_ => ())
+      var cum = 0L
+      val pts = bs.all.map { b =>
+        cum += b.rows
+        System.err.println(s"$tag batch=${b.id} state_docs=$cum trigger_ms=${b.ms}")
+        s"""{"batch":${b.id},"state_docs":$cum,"trigger_ms":${b.ms}}"""
+      }
+      s"""{"metric":"dedup_state_growth","batches":${bs.all.length},"docs_per_batch":$perBatch,"final_state_docs":$cum,"first_decile_ms":${bs.firstDecileMs.round},"last_decile_ms":${bs.lastDecileMs.round},"tail_over_head":${bs.tailOverHead},"points":[${pts.mkString(",")}]}"""
+    } else {
+      val idx = s"$base/idx"
+      val e = Tables.load(spark, sfDir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val perBatch = e.count()
+      val dim = e.select(size(col("embedding"))).first().getInt(0)
+      Similarity.ensureIvfIndex(e, idx)
+      def searchMs(): Long = {
+        val q = e.filter(col("vec_id") < 10)
+          .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+        val t0 = System.nanoTime()
+        Similarity.searchIvfIndex(spark, idx, q, 5).count()
+        (System.nanoTime() - t0) / 1000000L
+      }
+      System.err.println(s"$tag $nBatches batches x $perBatch vecs, $nWaves waves")
+      var prevSizes = parquetFiles(s"$idx/cells")
+      // chunk j holds replica j + 1: replica 0 is the prebuilt base
+      val (bs, waves) = inWaves(j => e
+          .withColumn("vec_id", col("vec_id") + lit((j + 1) * 1000000000L))
+          .withColumn("embedding",
+            ScaleUp.replicaEmbedding(col("vec_id"), lit(j + 1), dim)),
+        in => AnnStream.ingestStream(
+          fileStream(spark, "vec_id LONG, embedding ARRAY<FLOAT>", in),
+          idx, s"$base/ckpt")) { w =>
+        val sizes = parquetFiles(s"$idx/cells")
+        val rewritten = prevSizes.collect {
+          case (p, sz) if !sizes.contains(p) => sz
+        }.sum
+        prevSizes = sizes
+        val sms = searchMs()
+        val stateVecs = perBatch * (1 + (w + 1).toLong * perWave)
+        System.err.println(
+          s"$tag wave=$w state_vecs=$stateVecs files=${sizes.size} " +
+            s"rewritten_mb=${rewritten / 1048576.0} search_ms=$sms")
+        s"""{"state_vecs":$stateVecs,"files":${sizes.size},"search_ms":$sms,"rewritten_bytes":$rewritten}"""
+      }
+      val compacted = Similarity.compactIvfSizeTiered(spark, idx).size
+      val filesAfter = parquetFiles(s"$idx/cells").size
+      val searchAfter = searchMs()
+      System.err.println(
+        s"$tag compacted=$compacted cells files=$filesAfter search_ms=$searchAfter")
+      s"""{"metric":"ann_ingest_state_growth","batches":${bs.all.length},"vecs_per_batch":$perBatch,"first_decile_trigger_ms":${bs.firstDecileMs.round},"last_decile_trigger_ms":${bs.lastDecileMs.round},"tail_over_head":${bs.tailOverHead},"compacted_cells":$compacted,"files_after_compact":$filesAfter,"search_ms_after_compact":$searchAfter,"waves":[${waves.mkString(",")}]}"""
+    }
+  }
+
+  /** `annscale`: IVF build + probed search over replicated embedding
+    * corpora, against the brute-force cross join as the honesty
+    * baseline. Per factor F it certifies:
+    *
+    *   - build cost and the post-build FILE COUNT (must equal the cell
+    *     count: the r13 cell-wise repartition caps the layout at one
+    *     file per cell — a raw partitionBy emits tasks × cells files,
+    *     the small-file class `growth ann` showed taxes every search);
+    *   - warm probed-search latency vs warm brute-force latency for the
+    *     same query batch — the cell-pruned scan reads nProbe/nCells of
+    *     the corpus, so the gap must WIDEN with N;
+    *   - the scanned fraction itself (nProbe/nCells), printed so the
+    *     claimed pruning is arithmetic, not adjective.
+    *
+    * Cell count scales as √N (power-of-two), uncapped: the centroid
+    * model rides the codegen references array as two flat arrays
+    * (`nearest_cell` kernel), so generated-code size is constant in
+    * nCells. `main` runs this mode on a CODEGEN_ONLY, no-fallback
+    * session, so a regression to an uncompilable expression (the r13
+    * unrolled-literal formulation overflowed janino at 1024 cells ×
+    * dim 64) FAILS the probe instead of silently degrading to
+    * interpreted evaluation. Prints one line per factor:
+    * `ann_scale factor=F n=N cells=C files=FC build_s=B
+    *  search_ms=S brute_ms=BR scan_frac=0.xxx speedup=X`.
+    */
+  def annScale(spark: SparkSession, sfDir: String,
+               factors: Seq[Int]): Unit = inTempDir("ann_scale") { root =>
+    val base = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val dim = base.select(size(col("embedding"))).first().getInt(0)
+    val baseN = base.count()
+
+    // ONE range-based plan per factor, not a factor-way unionAll —
+    // a 10,000-branch union spends many minutes in ANALYSIS alone
+    // (measured: the driver pinned single-threaded before the first
+    // job launched). Every replica, including k = 0, takes ScaleUp's
+    // xxhash component formula; a latency probe needs the base
+    // corpus's GEOMETRY (near-uniform pseudo-random components), not
+    // its exact bytes.
+    def corpusOf(f: Int) = spark.range(0, baseN * f)
+      // `/` is DOUBLE division on Columns — cast back to long (floor
+      // for the non-negative range) so vec_id stays an integer key
+      .select(((col("id") % baseN) +
+          (col("id") / baseN).cast("long") * lit(1000000000L)).as("vec_id"),
+        (col("id") / baseN).cast("int").as("k"))
+      .select(col("vec_id"),
+        ScaleUp.replicaEmbedding(col("vec_id"), col("k"), dim).as("embedding"))
+
+    factors.foreach { f =>
+      val corpusPath = s"$root/corpus_$f"
+      corpusOf(f).write.mode(SaveMode.Overwrite).parquet(corpusPath)
+      val corpus = spark.read.parquet(corpusPath)
+      val n = corpus.count()
+      val nCells =
+        Integer.highestOneBit(math.max(16, math.sqrt(n.toDouble).toInt))
+      val idx = s"$root/idx_$f"
+      val t0 = System.nanoTime()
+      Similarity.ensureIvfIndex(corpus, idx, nCells, refineIters = 1)
+      val buildS = (System.nanoTime() - t0) / 1e9
+      val files = parquetFiles(s"$idx/cells").size
+      val queries = corpus.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      def timedMs(run: => Long): Long = {
+        run // warm: plan + codegen + page cache
+        val s0 = System.nanoTime()
+        run
+        (System.nanoTime() - s0) / 1000000L
+      }
+      val searchMs = timedMs(
+        Similarity.searchIvfIndex(spark, idx, queries, 10, nProbe = 8).count())
+      val bruteMs = timedMs(Similarity.cosineTopK(corpus, 10, 10).count())
+      val frac = 8.0 / nCells
+      println(f"ann_scale factor=$f n=$n cells=$nCells files=$files " +
+        f"build_s=$buildS%.1f search_ms=$searchMs brute_ms=$bruteMs " +
+        f"scan_frac=$frac%.4f speedup=${bruteMs.toDouble / searchMs}%.1f")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // same parsing and unknown-name check as Bench/Verify subsets
     def names(csv: String) = SparkEntry.selection(Some(csv)).get.toSeq.sorted
     val usage = "usage: Probe stats <sfDir> <q1,q2,...> | " +
-      "Probe plan <sfDir> <out.md> [q1,q2,...]"
+      "Probe plan <sfDir> <out.md> [q1,q2,...] | " +
+      "Probe stream <sfDir> [nBatches] | " +
+      "Probe growth <sfDir> dedup|ann [nBatches] [nWaves] | " +
+      "Probe annscale <sfDir> [factor ...]"
     args match {
       case Array("stats", sfDir, qs) =>
         val selected = names(qs)
@@ -187,6 +485,35 @@ object Probe {
             "Machine-checked plan properties: `PlanAuditSpec`.\n", "", "")
         Files.writeString(Paths.get(out), md)
         println(s"wrote $out (${plans.size} plans)")
+        spark.stop()
+      case Array("stream", sfDir, rest @ _*) if rest.length <= 1 =>
+        val spark = LocalSession()
+        stream(spark, sfDir, rest.headOption.fold(5)(_.toInt)).foreach {
+          case (tag, bs) =>
+            bs.all.foreach(b =>
+              println(s"$tag batch=${b.id} rows=${b.rows} trigger_ms=${b.ms}"))
+            val rows = bs.all.map(_.rows).sum
+            val ms = bs.all.map(_.ms).sum
+            if (ms > 0)
+              println(f"$tag TOTAL rows=$rows batches=${bs.all.length} " +
+                f"sum_trigger_s=${ms / 1e3}%.2f rows_per_sec=${rows * 1e3 / ms}%.0f " +
+                f"mean_batch_ms=${ms.toDouble / math.max(1, bs.all.length)}%.0f")
+        }
+        spark.stop()
+      case Array("growth", sfDir, kind @ ("dedup" | "ann"), rest @ _*) if rest.length <= 2 =>
+        val nBatches = rest.headOption.fold(100)(_.toInt)
+        val nWaves = rest.lift(1).fold(if (kind == "ann") 10 else 1)(_.toInt)
+        // keep every batch's progress record (default window is 100)
+        val spark = LocalSession(
+          "spark.sql.streaming.numRecentProgressUpdates" -> (nBatches + 16).toString)
+        println(growth(spark, sfDir, kind, nBatches, nWaves))
+        spark.stop()
+      case Array("annscale", sfDir, factors @ _*) =>
+        val spark = LocalSession(
+          "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+          "spark.sql.codegen.fallback" -> "false")
+        annScale(spark, sfDir,
+          if (factors.isEmpty) Seq(10, 100, 1000) else factors.map(_.toInt))
         spark.stop()
       case _ => throw new IllegalArgumentException(usage)
     }

@@ -36,14 +36,15 @@ class ProgressSpec extends AnyFunSuite {
       graft.ingest.Load.run(spark, dump, s"${dump}_out")
         .entities.count()
       p
-    }.settled()
+    }
+    val c = p.counters.settle().total
 
     // 475 items + 25 property pages, each read at least once (the
     // normalize scan) and written once (the partitioned sink)
-    assert(p.recordsRead.get() >= 500L, s"read=${p.recordsRead.get()}")
-    assert(p.bytesRead.get() > 0L)
-    assert(p.recordsWritten.get() >= 500L, s"written=${p.recordsWritten.get()}")
-    assert(p.tasksCompleted.get() > 0L)
+    assert(c.inputRecords >= 500L, s"read=${c.inputRecords}")
+    assert(c.inputBytes > 0L)
+    assert(c.outputRecords >= 500L, s"written=${c.outputRecords}")
+    assert(c.tasks > 0L)
     assert(!lines.isEmpty, "at least the final summary line must emit")
     val last = p.render()
     assert(last.contains("rec/s") && last.contains("/500"),
@@ -54,12 +55,12 @@ class ProgressSpec extends AnyFunSuite {
     val p = EtlProgress.withProgress(spark, out = _ => ()) { p =>
       spark.range(100).count()
       p
-    }.settled()
-    val after = p.tasksCompleted.get()
+    }
+    val after = p.counters.settle().total.tasks
     assert(after > 0L)
     // listener is off the bus now: further jobs must not tick counters
     spark.range(100).count()
-    assert(p.settled().tasksCompleted.get() === after,
+    assert(p.counters.settle().total.tasks === after,
       "listener still attached after withProgress returned")
   }
 }
