@@ -96,10 +96,13 @@ object AnnStream {
           Artifact.Fingerprint(a(1).toLong, a(2).toLong, a(3).toLong) == cur
       }
       if (!landed) {
-        val exp = cur + Similarity.vectorFp(batch)
+        // the batch is fingerprinted once: the intent and the append
+        // both use it
+        val bfp = Similarity.vectorFp(batch)
+        val exp = cur + bfp
         fs.writeStringAtomic(intentFile,
           s"$batchId\t${exp.count}\t${exp.keySum}\t${exp.contentSig}\n")
-        Similarity.appendIvfIndex(batch, indexPath)
+        Similarity.appendIvfIndex(batch, indexPath, fs, batchFp = Some(bfp))
       }
       MergeStream.recordApplied(indexPath, id, batchId)
       // cadence keys off batchId, not a counter: deterministic under
@@ -148,22 +151,4 @@ object AnnStream {
       Similarity.deleteFromIvfIndex(batch, indexPath)
       MergeStream.recordApplied(indexPath, s"$id-del", batchId)
     }
-
-  /** Start the delete stream over `idStream` (vec_id). Composes with
-    * a concurrent [[ingestStream]] on the same index: both only ADD
-    * files (cell appends / tombstone appends), so readers keep seeing
-    * a consistent monotone state; physical reclamation stays the
-    * explicitly scheduled [[Similarity.compactIvfCells]]. */
-  def deleteStream(idStream: DataFrame, indexPath: String,
-                   checkpoint: String): StreamingQuery = {
-    val id = MergeStream.streamId(checkpoint)
-    idStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deleteBatch(batch, batchId, indexPath, id)
-      }
-      .start()
-  }
 }

@@ -149,9 +149,9 @@ object Probe {
         graft.sources.Tables.load(spark, sfDir, "documents"))))
   }
 
-  /** One streaming micro-batch with input: its id, input rows and
-    * `triggerExecution` wall ms (source discovery + the foreachBatch
-    * body + sink writes — the end-to-end batch cost). */
+  /** One streaming micro-batch with input: its id, the rows staged
+    * for it and `triggerExecution` wall ms (source discovery + the
+    * foreachBatch body + sink writes — the end-to-end batch cost). */
   case class Batch(id: Long, rows: Long, ms: Long)
 
   /** The non-empty batches of a stream's retained progress, in batch
@@ -164,29 +164,40 @@ object Probe {
     def tailOverHead: Double = (lastDecileMs / firstDecileMs * 100).round / 100.0
   }
 
-  private def batches(q: StreamingQuery): Batches =
-    Batches(q.recentProgress.filter(_.numInputRows > 0).sortBy(_.batchId).toSeq
-      .map(p => Batch(p.batchId, p.numInputRows,
-        p.durationMs.get("triggerExecution").longValue())))
+  /** The stream's non-empty batches, each with the rows of the staged
+    * chunk it consumed (`staged`, in staging order): Spark's
+    * `numInputRows` counts every read of a batch inside the
+    * foreachBatch sink, not the rows fed. One file per trigger makes
+    * the i-th non-empty batch the i-th non-empty chunk; the retained
+    * progress may have dropped the oldest batches, hence `takeRight`. */
+  private def batches(q: StreamingQuery, staged: Seq[Long]): Batches = {
+    val ps = q.recentProgress.filter(_.numInputRows > 0).sortBy(_.batchId).toSeq
+    Batches(ps.zip(staged.filter(_ > 0).takeRight(ps.length)).map { case (p, rows) =>
+      Batch(p.batchId, rows, p.durationMs.get("triggerExecution").longValue())
+    })
+  }
 
   /** Write each chunk as exactly one JSON file `chunk<offset + i>.json`
     * in `inDir` — the file-stream source's batch unit. Staging in waves
     * into a LIVE stream dir passes an `offset` so no name the source
     * already processed is reused; the `_stage` dirs are hidden from the
-    * source by their leading underscore. */
+    * source by their leading underscore. Returns each chunk's row
+    * count: its JSON lines. */
   private def stageChunks(inDir: String, chunks: Seq[DataFrame],
-                          offset: Int = 0): Unit = {
+                          offset: Int = 0): Seq[Long] = {
     Files.createDirectories(Paths.get(inDir))
-    chunks.zipWithIndex.foreach { case (df, i0) =>
+    chunks.zipWithIndex.map { case (df, i0) =>
       val i = i0 + offset
       val stage = s"$inDir/_stage$i"
       df.coalesce(1).write.mode("overwrite").json(stage)
       val part = new File(stage).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
         .getOrElse(sys.error(s"no part file in $stage"))
-      Files.move(part.toPath, Paths.get(s"$inDir/chunk$i.json"),
+      val chunk = Files.move(part.toPath, Paths.get(s"$inDir/chunk$i.json"),
         StandardCopyOption.REPLACE_EXISTING)
       org.apache.commons.io.FileUtils.deleteDirectory(new File(stage))
+      val lines = Files.lines(chunk)
+      try lines.count() finally lines.close()
     }
   }
 
@@ -224,10 +235,11 @@ object Probe {
     def run(tag: String, df: DataFrame, key: String, ddl: String)
            (start: DataFrame => StreamingQuery): (String, Batches) = {
       val in = s"$base/${tag}_in"
-      stageChunks(in, (0 until nBatches).map(i => df.filter(col(key) % nBatches === i)))
+      val staged = stageChunks(in,
+        (0 until nBatches).map(i => df.filter(col(key) % nBatches === i)))
       val q = start(fileStream(spark, ddl, in))
       q.processAllAvailable(); q.stop()
-      tag -> batches(q)
+      tag -> batches(q, staged)
     }
 
     // upsertStream: versioned target, one delta file per batch
@@ -306,15 +318,16 @@ object Probe {
     def inWaves[W](replica: Int => DataFrame, start: String => StreamingQuery)
                   (afterWave: Int => W): (Batches, Seq[W]) = {
       var q: StreamingQuery = null
+      val staged = Seq.newBuilder[Long]
       val ws = (0 until nWaves).map { w =>
-        stageChunks(s"$base/in",
+        staged ++= stageChunks(s"$base/in",
           (w * perWave until (w + 1) * perWave).map(replica), offset = w * perWave)
         if (q == null) q = start(s"$base/in")
         q.processAllAvailable()
         afterWave(w)
       }
       q.stop()
-      (batches(q), ws)
+      (batches(q, staged.result()), ws)
     }
 
     if (kind == "dedup") {

@@ -198,6 +198,9 @@ class AnnStreamSpec extends AnyFunSuite {
     try {
       q.processAllAvailable()
       assert(spark.read.parquet(s"$path/cells").count() === 512)
+      // each micro-batch is read twice — one fingerprint, then the cell
+      // write — so the engine counts 2x the 256 staged rows
+      assert(q.recentProgress.map(_.numInputRows).sum === 2 * 256)
       // the full corpus searches the grown index (clusteredCorpus is
       // well-separated — nProbe 2/8 finds same-cluster neighbors)
       val e = vecs(0, 512)

@@ -36,6 +36,11 @@ class ArtifactSpec extends AnyFunSuite {
     assert(Similarity.ivfMeta(16, 2, fp).render ===
       "version\t2\nnCells\t16\nrefineIters\t2\n" +
         "count\t3\nvecIdSum\t588\ncontentSig\t-7\n")
+    // a PQ layout: the PQ shape after refineIters
+    assert(Similarity.ivfMeta(16, 2, fp, Some(Similarity.Pq())).render ===
+      "version\t2\nnCells\t16\nrefineIters\t2\n" +
+        "nSub\t8\ncodesPerSub\t64\npqIters\t2\n" +
+        "count\t3\nvecIdSum\t588\ncontentSig\t-7\n")
     val fixture = Artifact.Meta("lineage" -> "upsert-v2") ++ fp.meta("keySum")
     assert(fixture.render ===
       "lineage\tupsert-v2\ncount\t3\nkeySum\t588\ncontentSig\t-7\n")
@@ -50,12 +55,12 @@ class ArtifactSpec extends AnyFunSuite {
   test("one artifact root: spark.graft.artifactDir holds every stable artifact") {
     val s = spark.newSession()
     def paths(dir: String) = Seq(Similarity.ivfIndexPath(s, dir),
-      Similarity.ivfPqIndexPath(s, dir), Merge.fixturePath(s, dir, "cdc"))
+      Similarity.ivfIndexPath(s, dir) + "_pq", Merge.fixturePath(s, dir, "cdc"))
     // unset: the per-kind temp-root defaults, keyed by md5(dir)
     val tmp = sys.props("java.io.tmpdir").stripSuffix("/")
     assert(paths("/data/sf0.01") === Seq(
       s"$tmp/graft_ivf_index/bce288cbc3ef",
-      s"$tmp/graft_ivfpq_index/bce288cbc3ef",
+      s"$tmp/graft_ivf_index/bce288cbc3ef_pq",
       s"$tmp/graft_merge_fixture/bce288cbc3ef/cdc"))
     s.conf.set("spark.graft.artifactDir", "/shared/artifacts/")
     val dirs = Seq("/data/sf0.01", "/data/sf0.1")
@@ -68,6 +73,19 @@ class ArtifactSpec extends AnyFunSuite {
     assert(dirs.flatMap(paths).distinct.size === 6)
     assert(paths("/data/sf0.1")(0) ===
       "/shared/artifacts/graft_ivf_index/3aef36141d86")
+  }
+
+  test("one cell writer: partitionBy(\"cell\") appears in src/main exactly once") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (no ${root.getAbsolutePath})")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val hits = for {
+      f <- files(root) if f.getName.endsWith(".scala")
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
+      if line.contains("partitionBy(\"cell\")")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(hits.size === 1, hits.mkString("\n"))
   }
 
   // ------------------------------------------------ crash-point sweep //
@@ -98,7 +116,8 @@ class ArtifactSpec extends AnyFunSuite {
     * reuses after a completed `op`. */
   private def sweep(nCells: Int, prepare: String => Unit,
                     op: (String, Dfs) => Unit,
-                    intended: String => DataFrame): Int = {
+                    intended: String => DataFrame,
+                    pq: Option[Similarity.Pq] = None): Int = {
     val template = Files.createTempDirectory("artifact_sweep")
     prepare(s"$template/idx")
     val deleted = tombstones(s"$template/idx")
@@ -109,10 +128,15 @@ class ArtifactSpec extends AnyFunSuite {
       s"$root/idx"
     }
     def ensure(corpus: DataFrame, path: String): Boolean =
-      Similarity.ensureIvfIndex(corpus, path, nCells = nCells, refineIters = 1)
-    def hits(path: String): Seq[String] =
-      Similarity.searchIvfIndex(spark, path, queries, 5, nProbe = nCells)
-        .collect().map(_.toString).sorted.toSeq
+      Similarity.ensureIvfIndex(corpus, path, nCells = nCells, refineIters = 1,
+        pq = pq)
+    // every cell probed (and, for PQ, every candidate shortlisted), so
+    // the answer is exact and must not depend on a rebuild's models
+    def hits(path: String): Seq[String] = (pq match {
+      case None => Similarity.searchIvfIndex(spark, path, queries, 5, nProbe = nCells)
+      case Some(_) => Similarity.searchIvfPqIndex(spark, path, queries, 5,
+        nProbe = nCells, shortlistFrac = 1.0)
+    }).collect().map(_.toString).sorted.toSeq
 
     val ref = run()
     val refLog = new LoggingDfs(Dfs.default)
@@ -194,6 +218,44 @@ class ArtifactSpec extends AnyFunSuite {
         val kept = ids(spark.read.parquet(s"$ref/cells"))
         vecs(0, 256).filter(col("vec_id").isin(kept: _*))
       })
+    assert(n > 4)
+  }
+
+  // the same maintenance passes over a layout built with a PQ shape:
+  // appends PQ-encode, and every republished meta keeps the shape
+  private val pq = Some(Similarity.Pq(nSub = 4, codesPerSub = 16, pqIters = 1))
+
+  test("crash sweep: append + compactIvfSizeTiered on a PQ layout") {
+    val n = sweep(nCells = 4,
+      prepare = { p =>
+        Similarity.ensureIvfIndex(vecs(0, 128), p, nCells = 4, refineIters = 1,
+          pq = pq)
+        Similarity.appendIvfIndex(vecs(128, 192), p)
+        Similarity.appendIvfIndex(vecs(192, 256), p)
+        Similarity.deleteFromIvfIndex(
+          vecs(0, 256).filter(col("vec_id") % 16 === 5), p)
+      },
+      op = (p, fs) => assert(Similarity.compactIvfSizeTiered(spark, p,
+        minTierFiles = 2, minSizeBytes = 1L << 40, fs = fs).nonEmpty),
+      intended = _ => vecs(0, 256), pq = pq)
+    assert(n > 4)
+  }
+
+  test("crash sweep: compactIvfCells on a PQ layout") {
+    val n = sweep(nCells = 8,
+      prepare = { p =>
+        Similarity.ensureIvfIndex(vecs(0, 256), p, nCells = 8, refineIters = 1,
+          pq = pq)
+        Similarity.deleteFromIvfIndex(
+          vecs(0, 256).filter(col("vec_id") % 8 === 2 || col("vec_id") === 201),
+          p)
+      },
+      op = (p, fs) => assert(Similarity.compactIvfCells(spark, p,
+        minDeadFrac = 0.3, fs = fs).nonEmpty),
+      intended = { ref =>
+        val kept = ids(spark.read.parquet(s"$ref/cells"))
+        vecs(0, 256).filter(col("vec_id").isin(kept: _*))
+      }, pq = pq)
     assert(n > 4)
   }
 }

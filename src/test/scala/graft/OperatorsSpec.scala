@@ -234,14 +234,20 @@ class OperatorsSpec extends AnyFunSuite {
         nCells = 16, nProbe = 4, refineIters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fromIndex === inMemory)
-    // the probed read is partition-pruned: cell is a partition column
-    // and the literal IN filter reaches PartitionFilters (directories
-    // outside the probe set are never listed, let alone read)
-    val p = Similarity.ivfIndexScan(spark, path, Seq(1, 3))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters"), p)
-    assert(p.linesIterator.exists(l =>
-      l.contains("PartitionFilters") && l.contains("cell")), p)
+    // the probed read is pruned: the search's own executed scan reads
+    // files under the query's nProbe nearest cell= directories only
+    // (directories outside the probe set are never listed, let alone
+    // read); the probe set is the centroid ranking cosine DESC, cell ASC
+    val one = queries.filter(col("qid") === 0L)
+    val probed = spark.read.parquet(s"$path/centroids").crossJoin(one)
+      .select(col("cell"), Similarity.cosine(col("qe"), col("ce")).as("sim"))
+      .orderBy(col("sim").desc, col("cell")).limit(4)
+      .collect().map(_.getInt(0)).toSet
+    val cellFiles = Similarity.searchIvfIndex(spark, path, one, 5, nProbe = 4)
+      .inputFiles.filter(_.contains(s"$path/cells/")).toSeq
+    assert(cellFiles.nonEmpty)
+    cellFiles.foreach(f =>
+      assert(probed.exists(c => f.contains(s"$path/cells/cell=$c/")), f))
   }
 
   test("ensureIvfIndex restart protocol: reuse on matching meta, rebuild on drift") {
@@ -274,32 +280,77 @@ class OperatorsSpec extends AnyFunSuite {
       path, nCells = 16, refineIters = 1))
   }
 
-  test("ensureIvfPqIndex restart protocol: reuse on matching meta, rebuild on drift") {
+  test("IVF-PQ ensure restart protocol: reuse on matching meta, rebuild on drift") {
     val path = java.nio.file.Files.createTempDirectory("ivfpq_ensure").toString
-    assert(!Similarity.ensureIvfPqIndex(emb, path, nCells = 8, refineIters = 1,
-      nSub = 8, codesPerSub = 16, pqIters = 1))
+    val pq8 = Some(Similarity.Pq(nSub = 8, codesPerSub = 16, pqIters = 1))
+    val pq4 = Some(Similarity.Pq(nSub = 4, codesPerSub = 16, pqIters = 1))
+    assert(!Similarity.ensureIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = pq8))
     val metaFile = new java.io.File(s"$path/_index_meta.tsv")
     assert(metaFile.exists())
     val builtAt = metaFile.lastModified()
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val first = Similarity.searchIvfPqIndex(spark, queries, path, 3, nProbe = 8)
+    val first = Similarity.searchIvfPqIndex(spark, path, queries, 3, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // identical params + corpus → reuse, layout untouched, search
     // byte-identical (the fresh-JVM restart path)
-    assert(Similarity.ensureIvfPqIndex(emb, path, nCells = 8, refineIters = 1,
-      nSub = 8, codesPerSub = 16, pqIters = 1))
+    assert(Similarity.ensureIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = pq8))
     assert(metaFile.lastModified() === builtAt, "reuse must not rewrite")
-    val again = Similarity.searchIvfPqIndex(spark, queries, path, 3, nProbe = 8)
+    val again = Similarity.searchIvfPqIndex(spark, path, queries, 3, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again === first)
     // PQ-shape drift forces a rebuild (nSub is in the meta)
-    assert(!Similarity.ensureIvfPqIndex(emb, path, nCells = 8, refineIters = 1,
-      nSub = 4, codesPerSub = 16, pqIters = 1))
+    assert(!Similarity.ensureIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = pq4))
     // torn build (meta missing) reads as absent
     metaFile.delete()
-    assert(!Similarity.ensureIvfPqIndex(emb, path, nCells = 8, refineIters = 1,
-      nSub = 4, codesPerSub = 16, pqIters = 1))
+    assert(!Similarity.ensureIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = pq4))
+  }
+
+  test("IVF-PQ append + delete: PQ search at full probe has recall 1 on the live corpus") {
+    val path = java.nio.file.Files.createTempDirectory("ivfpq_grow").toString
+    val pq = Some(Similarity.Pq(nSub = 8, codesPerSub = 16, pqIters = 1))
+    assert(!Similarity.ensureIvfIndex(emb.filter(col("vec_id") % 10 =!= 7),
+      path, nCells = 8, refineIters = 1, pq = pq))
+    Similarity.appendIvfIndex(emb.filter(col("vec_id") % 10 === 7), path)
+    Similarity.deleteFromIvfIndex(emb.filter(col("vec_id") % 7 === 3), path)
+    // the grown meta keeps the PQ shape: a full-corpus ensure reuses
+    assert(Similarity.ensureIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = pq))
+    val live = emb.filter(col("vec_id") % 7 =!= 3)
+    val q = live.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val exact = Similarity.cosineTopK(live, 10, 5)
+    // appended vectors are among the true neighbors, so a PQ search
+    // that cannot score them misses some
+    assert(exact.collect().exists(_.getLong(1) % 10 == 7))
+    // every probed cell and every candidate: exact over the live rows
+    val got = Similarity.searchIvfPqIndex(spark, path, q, 5, nProbe = 8,
+      shortlistFrac = 1.0)
+    assert(got.collect().forall(_.getLong(1) % 7 != 3), "a deleted id surfaced")
+    val rec = Similarity.annRecall(got, exact, 5).collect()
+    assert(rec.length === q.count())
+    assert(rec.forall(_.getDouble(1) == 1.0),
+      rec.map(r => s"${r.getLong(0)}:${r.getDouble(1)}").mkString(","))
+  }
+
+  test("one IVF layout: flat search is the same on a PQ layout; PQ search needs the codebook") {
+    val flat = java.nio.file.Files.createTempDirectory("ivf_flat").toString
+    val withPq = java.nio.file.Files.createTempDirectory("ivf_pq").toString
+    Similarity.writeIvfIndex(emb, flat, nCells = 8, refineIters = 1)
+    Similarity.writeIvfIndex(emb, withPq, nCells = 8, refineIters = 1,
+      pq = Some(Similarity.Pq(nSub = 8, codesPerSub = 16, pqIters = 1)))
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    def hits(path: String) = Similarity.searchIvfIndex(spark, path, queries, 5)
+      .collect().map(_.toString).sorted.toSeq
+    assert(hits(withPq) === hits(flat))
+    val e = intercept[IllegalArgumentException](
+      Similarity.searchIvfPqIndex(spark, flat, queries, 5))
+    assert(e.getMessage.contains(s"$flat/books"), e.getMessage)
   }
 
   test("appendIvfIndex: in-place growth, no file rewrites, meta advances to disk truth") {
@@ -1106,11 +1157,11 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("IVF-PQ on disk: recall 1 vs exact, ADC pass reads only probed cell directories") {
     val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec").toString
-    Similarity.writeIvfPqIndex(emb, path, nCells = 8, refineIters = 1,
-      nSub = 8, codesPerSub = 16, pqIters = 1)
+    Similarity.writeIvfIndex(emb, path, nCells = 8, refineIters = 1,
+      pq = Some(Similarity.Pq(nSub = 8, codesPerSub = 16, pqIters = 1)))
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val got = Similarity.searchIvfPqIndex(spark, q, path, k = 3,
+    val got = Similarity.searchIvfPqIndex(spark, path, q, k = 3,
       nProbe = 6, shortlistFrac = 0.5)
     val rec = Similarity.annRecall(got, Similarity.cosineTopK(emb, 5, 3), 3)
       .collect()
@@ -1121,8 +1172,8 @@ class OperatorsSpec extends AnyFunSuite {
     // must reach PartitionFilters on the codes scan (directories
     // outside the probe set are never listed, let alone read; same
     // contract as the IVF-Flat index test above)
-    val one = Similarity.searchIvfPqIndex(spark,
-      q.filter(col("qid") === 0L), path, k = 3,
+    val one = Similarity.searchIvfPqIndex(spark, path,
+      q.filter(col("qid") === 0L), k = 3,
       nProbe = 3, shortlistFrac = 0.5)
     val p = one.queryExecution.executedPlan.toString
     assert(p.linesIterator.exists(l =>
