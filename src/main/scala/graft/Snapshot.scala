@@ -101,14 +101,27 @@ object Snapshot {
 
   /** `df` with one aggregate `metric` observed on whichever action
     * runs it (zero extra jobs, also as a subtree of a larger plan),
-    * and its reader, which fails naming `site` after [[ObserveWait]]. */
+    * and its reader, which fails naming `site` when [[observeOption]]'s
+    * reader has no value. */
   private[graft] def observe[T](df: DataFrame, site: String,
                                 metric: Column): (DataFrame, () => T) = {
+    val (observed, read) = observeOption[T](df, metric)
+    (observed, () => read().getOrElse(throw new IllegalStateException(
+      s"$site: observed metric did not arrive within $ObserveWait " +
+        "(or the first action over the frame never ran its rows)")))
+  }
+
+  /** [[observe]] for a metric that may never be computed. The reader
+    * returns None when the first action over `df` completed without
+    * running its rows (Spark planned them away, e.g. under `limit(0)`:
+    * the observation then completes empty, at once), or when no action
+    * over `df` completed within [[ObserveWait]]. */
+  private[graft] def observeOption[T](df: DataFrame,
+                                      metric: Column): (DataFrame, () => Option[T]) = {
     val obs = Observation()
     (df.observe(obs, metric), () =>
-      try Await.result(obs.future, ObserveWait).getAs[T](0)
-      catch { case e: TimeoutException => throw new IllegalStateException(
-        s"$site: observed metric did not arrive within $ObserveWait", e) })
+      try Some(Await.result(obs.future, ObserveWait)).filter(_.size > 0).map(_.getAs[T](0))
+      catch { case _: TimeoutException => None })
   }
 
   /** Row count as an observable metric (0, not null, on no rows). */

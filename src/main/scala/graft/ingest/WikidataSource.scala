@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Snapshot
 import graft.model.Schemas
 
 /** File sources for Wikidata dumps (SURVEY §2.A A1-A7).
@@ -11,9 +12,9 @@ import graft.model.Schemas
   * trailing commas (reference: `src/utils.rs:125-129`,
   * `src/utils/init_reader.rs`). We read it as TEXT — splittable, and
   * for `.bz2` Hadoop streams + splits blocks, parallelizing what the
-  * reference decompresses single-threaded — clean the line artifacts,
-  * then `from_json` with the explicit raw schema (no inference pass
-  * over a >1 TB dump).
+  * reference decompresses single-threaded — and `from_json` each line
+  * as it is, with the explicit raw schema (no inference pass over a
+  * >1 TB dump, no per-line cleanup pass).
   *
   * Both line forms parse in one pass: bare dump entities and the
   * `{"entities":{...}}` fixture envelope (FIXTURES.md §1.1).
@@ -25,26 +26,47 @@ object WikidataSource {
     * exists for reference parity and fails fast on unknown formats. */
   val formats: Set[String] = Set("json", "bz2")
 
-  /** Read dump lines → one row per *parsed candidate* line with a
-    * single `j` struct column (raw schema). Malformed lines yield a
-    * null-field struct and are dropped downstream (A7 skip-bad-records
-    * — the reference skips silently, we keep the behavior). */
+  /** Read dump lines → one row per line: its text `value` and the
+    * parsed `j` struct (raw schema). Malformed lines yield a null
+    * struct and are dropped downstream (A7 skip-bad-records — the
+    * reference skips silently; we keep the behavior and count them,
+    * [[rejected]]). */
   def readRaw(spark: SparkSession, path: String, format: String = "json"): DataFrame = {
     require(formats.contains(format),
       s"unknown WIKIDATA_FILE_FORMAT '$format' (expected one of $formats)")
     fromLines(spark.read.text(path))
   }
 
-  /** Line cleanup + parse over ANY lines DataFrame — batch or
-    * streaming (`spark.readStream.text`): every step is per-row, so
-    * the same pipeline runs unchanged under Structured Streaming. */
-  def fromLines(lines: DataFrame): DataFrame = {
-    // A5 line cleanup: strip whitespace + trailing comma; `[`/`]` lines
-    // then parse to all-null structs and fall out with the bad records.
-    val cleaned = lines
-      .select(regexp_replace(trim(col("value")), ",$", "").as("line"))
-      .filter(col("line") =!= "[" && col("line") =!= "]" && col("line") =!= "")
-    cleaned.select(from_json(col("line"), Schemas.rawLine).as("j"))
+  /** Parse over ANY lines DataFrame — batch or streaming
+    * (`spark.readStream.text`): one per-row `from_json`, so the same
+    * pipeline runs unchanged under Structured Streaming. No line
+    * cleanup runs first (A5): the JSON parser stops at the object's
+    * closing brace, so `{…},` and ` {…} ,` parse as `{…}`; the `[`,
+    * `]` and blank lines parse to null rows, which [[entities]] drops
+    * with the malformed lines. Keeps the line as `value` for
+    * [[rejected]]; plans that do not read it prune it. */
+  def fromLines(lines: DataFrame): DataFrame =
+    lines.select(col("value"), from_json(col("value"), Schemas.rawLine).as("j"))
+
+  /** A7: an entity this source keeps — a Q/P/L id. Lines that did not
+    * parse into an entity shape, and ids outside Q/P/L (forms, senses,
+    * E-entities), are skipped, never a panic (reference todo!()
+    * hazard, SURVEY §7.4). */
+  private def kept(e: Column): Column =
+    e.getField("id").isNotNull && e.getField("id").rlike("^[QPL][0-9]+$")
+
+  /** Rejected dump lines, as an aggregate over [[fromLines]] rows: the
+    * lines that are not blank, `[` or `]` and yield no entity
+    * [[entities]] keeps (malformed, or only non-Q/P/L ids). The line
+    * text is looked at only for lines without a kept entity. */
+  val rejected: Column = {
+    val hasEntity = coalesce(
+      when(col("j.entities").isNotNull,
+        exists(map_values(col("j.entities")), kept))
+        .otherwise(kept(col("j"))),
+      lit(false))
+    coalesce(sum(when(!hasEntity && !trim(col("value")).isin("", "[", "]"), 1L)),
+      lit(0L)).as("rejected_lines")
   }
 
   /** Unwrap to one row per entity with the bare `rawEntity` schema,
@@ -61,14 +83,21 @@ object WikidataSource {
       .select(explode(
         when(col("j.entities").isNotNull, map_values(col("j.entities")))
           .otherwise(array(bareStruct))).as("e"))
-      // A7: drop lines that didn't parse into an entity shape, and ids
-      // outside Q/P/L (forms, senses, E-entities) — skip, never panic
-      // (reference todo!() hazard, SURVEY §7.4).
-      .filter(col("e.id").isNotNull && col("e.id").rlike("^[QPL][0-9]+$"))
+      .filter(kept(col("e")))
       .select(col("e.*"))
   }
 
   /** One-call source: path → entity rows. */
   def read(spark: SparkSession, path: String, format: String = "json"): DataFrame =
     entities(readRaw(spark, path, format))
+
+  /** [[read]] plus the reader of its [[rejected]] line count, observed
+    * on the first action over the rows (zero extra jobs); read it after
+    * that action. None when that action never read the dump
+    * ([[Snapshot.observeOption]]). */
+  def readCounted(spark: SparkSession, path: String,
+                  format: String = "json"): (DataFrame, () => Option[Long]) = {
+    val (raw, count) = Snapshot.observeOption[Long](readRaw(spark, path, format), rejected)
+    (entities(raw), count)
+  }
 }

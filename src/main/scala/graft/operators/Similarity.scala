@@ -858,15 +858,22 @@ object Similarity {
     * scheduled [[compactIvfCells]] pass — the split that lets deletes
     * stay cheap while reads stay exact. */
   def deleteFromIvfIndex(ids: DataFrame, path: String): Unit =
-    ids.select(col("vec_id"))
+    ids.select(col("vec_id").cast("long"))
       .write.mode(SaveMode.Append).parquet(s"$path/_tombstones")
 
+  /** The delete set, None when it has no files. Read by naming its
+    * files with their known schema: Spark treats a given path whose
+    * name starts with `_` as hidden and warns that all paths were
+    * ignored (it read them anyway), and a footer read would infer what
+    * the writer fixes. */
   private def tombstoneIds(spark: SparkSession, path: String,
-                           fs: graft.sources.Dfs): Option[DataFrame] =
-    if (fs.exists(s"$path/_tombstones"))
-      Some(spark.read.parquet(s"$path/_tombstones")
-        .select(col("vec_id")).distinct())
-    else None
+                           fs: graft.sources.Dfs): Option[DataFrame] = {
+    val dir = s"$path/_tombstones"
+    val files = fs.listNames(dir).filter(_.endsWith(".parquet"))
+    if (files.isEmpty) None
+    else Some(spark.read.schema("vec_id LONG").parquet(files.map(f => s"$dir/$f"): _*)
+      .distinct())
+  }
 
   /** Physically reclaim tombstoned rows: rewrite every cell whose
     * dead fraction reaches `minDeadFrac` (write-new → swap via
@@ -932,8 +939,10 @@ object Similarity {
       val tombsDir = s"$path/_tombstones"
       val tmpT = s"$path/_tombstones_tmp"
       val oldTombFiles = fs.listNames(tombsDir).filter(_.endsWith(".parquet"))
-      remaining.write.mode(SaveMode.Overwrite).parquet(tmpT)
-      val nRemain = spark.read.parquet(tmpT).count()
+      val (counted, remainCount) =
+        Snapshot.observe[Long](remaining, "compactIvfCells", Snapshot.rowCount)
+      counted.write.mode(SaveMode.Overwrite).parquet(tmpT)
+      val nRemain = remainCount()
       if (nRemain > 0) swapInMergedFiles(fs, tombsDir, tmpT, oldTombFiles)
       else {
         // every dead row was physically removed by the rewrites above,

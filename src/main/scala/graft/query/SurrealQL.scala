@@ -34,7 +34,9 @@ import graft.ingest.Load.WikiTables
   * over the wiki tables (traversal = the Paths join; array ops =
   * higher-order functions) — Catalyst plans them like any native
   * query. `$vars` hold DataFrames (a LET is a named lazy plan,
-  * exactly SurrealQL's semantics).
+  * exactly SurrealQL's semantics). A script that only DELETEs row
+  * selections also has a join-free form, [[rowKeep]]: the per-row keep
+  * predicates the filtered load writes through.
   */
 object SurrealQL {
 
@@ -71,17 +73,20 @@ object SurrealQL {
                           returned: Option[DataFrame],
                           analyzers: Map[String, AnalyzerDef] = Map.empty)
 
+  private val letRe = "(?is)^LET\\s+\\$([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*(.+)$".r
+  private val delRe = "(?is)^DELETE\\s+\\$([a-zA-Z_][a-zA-Z0-9_]*)$".r
+
+  private def statementsOf(script: String): Seq[String] =
+    Script.split(stripComments(script)).map(_.trim).filter(_.nonEmpty)
+
   def run(tables: WikiTables, script: String): Result = {
     var t = tables
     var vars = Map.empty[String, DataFrame]
     var views = Map.empty[String, DataFrame]
     var returned: Option[DataFrame] = None
 
-    val statements = Script.split(stripComments(script))
-      .map(_.trim).filter(_.nonEmpty)
-    val letRe = "(?is)^LET\\s+\\$([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*(.+)$".r
+    val statements = statementsOf(script)
     val retRe = "(?is)^RETURN\\s+(.+)$".r
-    val delRe = "(?is)^DELETE\\s+\\$([a-zA-Z_][a-zA-Z0-9_]*)$".r
     // value: $var, quoted string (may contain spaces), or bare literal
     val updRe = "(?is)^UPDATE\\s+Entity\\s+SET\\s+([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*(\"[^\"]*\"|\\S+)\\s+WHERE\\s+(.+)$".r
     val defTableRe = "(?is)^DEFINE\\s+TABLE\\s+(?:OVERWRITE\\s+)?([a-zA-Z_][a-zA-Z0-9_]*)\\s+TYPE\\s+NORMAL\\s+AS\\s+(.+)$".r
@@ -134,6 +139,60 @@ object SurrealQL {
     }
     Result(t, views, returned, analyzers)
   }
+
+  /** What a row-selection script keeps: one predicate over entity rows
+    * and one over claims rows, both Columns of the normalized row
+    * (`Transform.normalize`: `id`, `label`, `description` and the
+    * entity's own `claims_arr`), never null. See [[rowKeep]]. */
+  final case class RowKeep(entities: Column, claims: Column)
+
+  /** The fold rule: a script that only deletes row selections, as a
+    * [[RowKeep]] over the normalized rows instead of [[run]]'s joins.
+    *
+    * A `LET $v = SELECT id|claims FROM Entity|Property|Lexeme WHERE
+    * <cond>` is a row selection when [[compileCond]] compiles `cond`
+    * alone (an IN/INSIDE subselect does not) and the SELECT has no
+    * GROUP, ORDER BY, LIMIT, `[0]` or projection subselect. A script of
+    * such LETs followed by `DELETE`s of them folds: each `DELETE $v`
+    * ANDs `NOT coalesce(id.tb = X AND cond, false)` into the side `$v`
+    * names, entity rows for `id` and claims rows for `claims`. A row
+    * whose cond is NULL is not in `$v`, hence the `coalesce`: it stays.
+    * Every LET sees the unmodified tables, as in [[run]], because they
+    * all come before the first DELETE.
+    *
+    * Any other script — UPDATE, DEFINE, RETURN, a LET that is no row
+    * selection, a LET after a DELETE, a DELETE of an unknown name —
+    * returns None and runs through [[run]], whose anti-join is the
+    * general semantics.
+    *
+    * The fold is exact when each (tb, id) occurs once in the rows,
+    * which a Wikidata dump guarantees: the fold judges each row on its
+    * own cond, the anti-join judges a key by every row that holds it. */
+  def rowKeep(script: String): Option[RowKeep] = {
+    val (lets, deletes) = statementsOf(script).span(letRe.matches(_))
+    val selections = lets.map { case letRe(name, expr) =>
+      rowSelection(expr.trim).map(name -> _) }
+    val named = selections.flatten.toMap
+    val dropped = deletes.map {
+      case delRe(name) => named.get(name)
+      case _ => None
+    }
+    def keep(side: String): Column =
+      dropped.flatten.collect { case (`side`, sel) => !coalesce(sel, lit(false)) }
+        .foldLeft(lit(true))(_ && _)
+    if (selections.exists(_.isEmpty) || dropped.exists(_.isEmpty)) None
+    else Some(RowKeep(keep("id"), keep("claims")))
+  }
+
+  /** A row selection's side (`id` or `claims`) and its predicate. */
+  private def rowSelection(expr: String): Option[(String, Column)] =
+    parseSelect(expr).flatMap {
+      case (side @ ("id" | "claims"), tb @ ("Entity" | "Property" | "Lexeme"),
+            cond, null, null, null) if cond != null =>
+        scala.util.Try(compileCond(cond.trim)).toOption
+          .map(c => side -> (col("id.tb") === tb && c))
+      case _ => None
+    }
 
   // -------------------------------------------------- expressions //
 
@@ -287,8 +346,10 @@ object SurrealQL {
     df
   }
 
-  private def evalSelect(sql: String, t: WikiTables,
-                         vars: Map[String, DataFrame]): DataFrame = {
+  /** A SELECT's clauses — projections, source, WHERE, GROUP, ORDER BY,
+    * LIMIT (null when absent) — or None when `sql` is no SELECT. */
+  private def parseSelect(sql: String)
+      : Option[(String, String, String, String, String, String)] = {
     // the projection list splits off at the TOP-LEVEL FROM (quote-,
     // paren- and whitespace-aware): projection-position subselects
     // carry their own FROM inside parens, which a non-greedy regex
@@ -303,7 +364,7 @@ object SurrealQL {
       "(?:\\s+ORDER\\s+BY\\s+([a-zA-Z_][a-zA-Z0-9_]*(?:\\s+(?:ASC|DESC))?" +
       "(?:\\s*,\\s*[a-zA-Z_][a-zA-Z0-9_]*(?:\\s+(?:ASC|DESC))?)*))?" +
       "(?:\\s+LIMIT\\s+([0-9]+))?$").r
-    val parsed = splitAt.flatMap { i =>
+    splitAt.flatMap { i =>
       val projs = sql.substring(0, i).replaceFirst("(?is)^SELECT\\s+", "").trim
       sql.substring(i + "FROM".length).trim match {
         case tailRe(source, cond, groupSpec, orderBy, limit) =>
@@ -311,7 +372,11 @@ object SurrealQL {
         case _ => None
       }
     }
-    parsed match {
+  }
+
+  private def evalSelect(sql: String, t: WikiTables,
+                         vars: Map[String, DataFrame]): DataFrame = {
+    parseSelect(sql) match {
       case Some((projs, source, cond, groupSpec, orderBy, limit)) =>
         val base = source match {
           // the three wiki tables the reference routes by id prefix

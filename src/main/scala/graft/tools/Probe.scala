@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.{LocalSession, SparkEntry}
+import graft.ingest.Load
 import graft.obs.Counters
 import graft.operators.{Merge, Similarity}
 import graft.sources.Tables
@@ -30,6 +31,8 @@ import graft.streaming.{AnnStream, CorpusStream, DriftStream, MergeStream}
   *    PlanAuditSpec). Queries whose builders run real writes at
   *    plan-build time (index builds, versioned merges) execute those
   *    writes here; the dumped plan is the final returned stage.
+  *  - `etl`: jobs, stages, tasks, shuffle and wall time per warm
+  *    `Load.run` of a dump, Bulk or through a `filter.surql`.
   *  - `stream`: per-batch latency and throughput of the four streaming
   *    operators (PERF_r10).
   *  - `growth dedup|ann`: per-batch latency against accumulated stream
@@ -41,6 +44,7 @@ import graft.streaming.{AnnStream, CorpusStream, DriftStream, MergeStream}
   * {{{
   *   runMain graft.tools.Probe stats <sfDir> <q1,q2,...>
   *   runMain graft.tools.Probe plan <sfDir> <out.md> [q1,q2,...]
+  *   runMain graft.tools.Probe etl <dump> [filter.surql]
   *   runMain graft.tools.Probe stream <sfDir> [nBatches]
   *   runMain graft.tools.Probe growth <sfDir> dedup|ann [nBatches] [nWaves]
   *   runMain graft.tools.Probe annscale <sfDir> [factor ...]
@@ -75,6 +79,34 @@ object Probe {
         val c = counters.settle().group(group)
         Stats(name, sec, rows, c.jobs.toInt, c.stages.toInt, c.tasks.toInt,
           c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6)
+      }
+    }
+  }
+
+  /** `etl`: three warm [[Load.run]]s of one dump (bz2 when the name ends in
+    * `.bz2`), through `script` when given. Per load: wall seconds,
+    * Spark jobs, stages, tasks, shuffle MB written and input MB read,
+    * read from [[Counters]] under the load's own job group; rows are
+    * the entities written. One untimed load first (JIT, codegen, page
+    * cache). */
+  def etl(spark: SparkSession, dump: String,
+          script: Option[String]): Seq[Stats] = inTempDir("etl_probe") { base =>
+    val format = if (dump.endsWith(".bz2")) "bz2" else "json"
+    val mode = script.fold[Load.LoadMode](Load.Bulk)(Load.BulkFilterScript)
+    val sc = spark.sparkContext
+    val counters = new Counters()
+    counters.during(spark) {
+      Load.run(spark, dump, s"$base/cold", format, mode = mode)
+      (1 to 3).map { i =>
+        val group = s"probe-etl-$i-${System.nanoTime()}"
+        sc.setJobGroup(group, s"etl load $i")
+        val t0 = System.nanoTime()
+        val loaded = try Load.run(spark, dump, s"$base/load$i", format, mode = mode)
+          finally sc.clearJobGroup()
+        val sec = (System.nanoTime() - t0) / 1e9
+        val c = counters.settle().group(group)
+        Stats(s"etl_load$i", sec, loaded.entities.count(), c.jobs.toInt,
+          c.stages.toInt, c.tasks.toInt, c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6)
       }
     }
   }
@@ -479,6 +511,7 @@ object Probe {
     def names(csv: String) = SparkEntry.selection(Some(csv)).get.toSeq.sorted
     val usage = "usage: Probe stats <sfDir> <q1,q2,...> | " +
       "Probe plan <sfDir> <out.md> [q1,q2,...] | " +
+      "Probe etl <dump> [filter.surql] | " +
       "Probe stream <sfDir> [nBatches] | " +
       "Probe growth <sfDir> dedup|ann [nBatches] [nWaves] | " +
       "Probe annscale <sfDir> [factor ...]"
@@ -487,6 +520,14 @@ object Probe {
         val selected = names(qs)
         val spark = LocalSession()
         stats(spark, sfDir, selected).foreach(println)
+        spark.stop()
+      case Array("etl", dump, rest @ _*) if rest.length <= 1 =>
+        val spark = LocalSession()
+        // two splits per core, as the benchmark's ETL workloads split
+        spark.conf.set("spark.sql.files.maxPartitionBytes", math.max(64L << 10,
+          new File(dump).length / (2 * spark.sparkContext.defaultParallelism) + 1))
+        etl(spark, dump, rest.headOption.map(f => Files.readString(Paths.get(f))))
+          .foreach(println)
         spark.stop()
       case Array("plan", sfDir, out, rest @ _*) if rest.length <= 1 =>
         val selected = rest.headOption.map(names).getOrElse(headline)

@@ -33,9 +33,10 @@ object WikiDemo {
       Load.run(spark, path, outDir, format = format, lang = lang,
         mode = mode)
     }
-    println(s"entities=${t.entities.count()} claims_rows=${t.claims.count()}")
+    println(s"entities=${t.entities.count()} claims_rows=${t.claims.count()} " +
+      s"rejected_lines=${t.rejectedLines.fold("unknown")(_.toString)}")
 
-    val media = Ops.mediaView(t)
+    val media = Ops.mediaView(t.tables)
     println("label -> episodes (P1113):")
     media.filter(col("episodes").isNotNull)
       .select(col("label"), col("episodes"))
