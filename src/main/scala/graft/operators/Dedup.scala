@@ -40,16 +40,11 @@ object Dedup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
-  /** Edge-count threshold below which [[connectedComponents]] runs its
-    * propagation loop single-partition with AQE off (pure-scheduling
-    * regime — see the plan-mode comment in the method). 1M edges ≈
+  /** Edge count above which [[connectedComponents]] runs `Large`, in
+    * the caller's session ([[Regime]]); below it the loop is pure
+    * scheduling and runs single-partition with AQE off. 1M edges ≈
     * ~16 MB of (long,long) pairs: comfortably one task's work. */
   private val SmallCcEdges = 1000000L
-
-  /** Edge-count bound for the DRIVER union-find fast path in
-    * [[connectedComponents]] — ≤ ~1.6 MB of pairs, the bounded
-    * driver-model regime. */
-  private val TinyCcEdges = 100000L
 
   /** Canonical text normalization for near-exact dedup. */
   def normalized(text: Column): Column =
@@ -897,8 +892,12 @@ object Dedup {
     * write-and-readback dirs) so the plan/lineage stays O(1) deep
     * instead of growing per iteration, the classic failure of
     * iterative DataFrame loops. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-                          tinyThreshold: Long = TinyCcEdges): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
+    connectedComponents(edges, maxIter, None)
+
+  /** [[connectedComponents]] with its regime pinned by `force` (tests). */
+  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int,
+                                         force: Option[Regime]): DataFrame = {
     val caller = edges.sparkSession
     val a = col("a"); val b = col("b")
     // the symmetric edge set feeds every round — snapshot it once
@@ -909,29 +908,24 @@ object Dedup {
         .union(edges.toDF("b", "a").select(col("a"), col("b")))
         .distinct(),
       "cc_edges")
-    // Small-graph plan mode: after exact rerank the surviving edge set
-    // is usually TINY relative to the corpus (256 rows at sf0.1), and
-    // the loop's cost is pure scheduling — with AQE on, every exchange
+    // The regime ([[Regime]]) only picks physical strategy, never
+    // results. `Small`: after exact rerank the surviving edge set is
+    // usually TINY relative to the corpus (256 rows at sf0.1), and the
+    // loop's cost is pure scheduling — with AQE on, every exchange
     // becomes its own query-stage job, and every broadcast build is
-    // another (PERF_r05.md: ~18 jobs ≈ 6 s for 256 edges). Below the
-    // threshold the WHOLE loop runs in a cloned session (same
-    // SparkContext, isolated SQLConf — the withSQLConf move, scoped so
-    // Verify's concurrent queries never see the flipped conf) with AQE
-    // off, ONE shuffle partition and broadcasts disabled: each
-    // 2-round iteration collapses into a single write job whose
-    // identical 1-partition exchanges the non-AQE ReuseExchange rule
-    // dedupes. Above it, the caller's full-width AQE plan is the right
-    // one — the threshold only picks physical strategy, never results.
-    // Tiny-graph plan mode: below ~100k edges even the 1-partition
-    // loop is pure job-scheduling cost (a percolated 20k-edge
-    // geo graph spent 12.3 s in ~6 snapshot-write iterations —
-    // PERF_r11.md). The edge list is then bounded DRIVER-SIDE state
-    // (≤ ~1.6 MB of (long,long) pairs — the same regime as BPE
-    // dictionaries and k-means centroids): collect once, union-find
-    // with path compression (exact per-component min by definition),
-    // hand back a local frame. Identical output contract; the
-    // distributed loop remains the path for real edge sets.
-    if (edgeCount <= tinyThreshold) {
+    // another (PERF_r05.md: ~18 jobs ≈ 6 s for 256 edges). The WHOLE
+    // loop then runs in the AQE-off clone with ONE shuffle partition
+    // and broadcasts disabled: each 2-round iteration collapses into a
+    // single write job whose identical 1-partition exchanges the
+    // non-AQE ReuseExchange rule dedupes. `Large`: the caller's
+    // full-width AQE plan is the right one. `Local`: even the
+    // 1-partition loop is pure job-scheduling cost (a percolated
+    // 20k-edge geo graph spent 12.3 s in ~6 snapshot-write iterations
+    // — PERF_r11.md), and the edge list is bounded DRIVER-SIDE state:
+    // collect once, union-find with path compression (exact
+    // per-component min by definition), hand back a local frame.
+    val regime = Regime.pick(edgeCount, SmallCcEdges, force)
+    if (regime == Regime.Local) {
       val pairs = symSnap.df.collect().map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
@@ -957,10 +951,9 @@ object Dedup {
       import caller.implicits._
       return label.toDF("doc_id", "component")
     }
-    val small = edgeCount <= SmallCcEdges
+    val small = regime == Regime.Small
     val sess = if (!small) caller else {
-      val s2 = caller.newSession()
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
+      val s2 = Regime.aqeOff(caller)
       s2.conf.set("spark.sql.shuffle.partitions", "1")
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2

@@ -13,18 +13,14 @@ import graft.sources.Tables
   * runs (e.g. domain-authority weighting of web-crawl sources before
   * sampling).
   *
-  * Scale design: one distinct edge materialization, then per
-  * iteration exactly one shuffle of the edge list (join on src —
-  * ranks arrive shuffled from the previous iteration's groupBy) and
-  * one dst-keyed aggregation. Degrees ride inside the snapshotted
-  * edge rows, so no per-iteration degree join; the node count is
-  * observed on the degree write (no extra job) and folded into the
-  * update as a literal. The undirected (symmetrized) graph means no
-  * dangling-mass
-  * term — every node has out-degree ≥ 1 — keeping the update pure
-  * map/reduce. Lineage grows linearly with iterations; past ~20
-  * rounds a `localCheckpoint()` every 10 truncates the plan (the
-  * same pattern [[Dedup.dupClusters]] uses for pointer jumping).
+  * PageRank is personalized PageRank whose teleport set is every
+  * node: [[pageRank]], [[pageRankConverged]] and
+  * [[personalizedPageRank]] share one power iteration
+  * ([[powerIteration]]). Its physical strategy is picked once per
+  * call from the edge count observed on the edge write, by the one
+  * regime table in [[Regime]]: a driver-side loop for tiny graphs,
+  * the lazy per-iteration shuffle, and the fused shape (cached
+  * pre-partitioned edges) past 30M symmetrized edges.
   */
 object Graph {
 
@@ -49,13 +45,6 @@ object Graph {
       .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
       .distinct()
       .select((col("ck") * 2).as("a"), (col("sk") * 2 + 1).as("b"))
-
-  /** Distinct customer–supplier edges: customers and suppliers that
-    * shared at least one order line. Node ids are prefixed ("c123" /
-    * "s45") so the bipartite sides can't collide. */
-  def customerSupplierEdges(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    customerSupplierEdgesNum(orders, lineitem)
-      .select(decodeNode(col("a")).as("a"), decodeNode(col("b")).as("b"))
 
   /** The symmetrized edge set — the ONE definition of what "the same
     * undirected graph" means for every graph operator here (pagerank /
@@ -84,14 +73,14 @@ object Graph {
   }
 
   /** Fixed-iteration damped PageRank over an undirected edge list
-    * (columns `a`, `b`). Returns (node, rank) with rank rounded to
-    * 1e-6 — deterministic up to float reassociation in the neighbor
-    * sums, which the rounding absorbs (same bound as every other
-    * double aggregate in the registry).
+    * (columns `a`, `b`): [[personalizedPageRank]] whose teleport set
+    * is every node. Returns (node, rank) with rank rounded to 1e-6 —
+    * deterministic up to float reassociation in the neighbor sums,
+    * which the rounding absorbs (same bound as every other double
+    * aggregate in the registry).
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               tinyGate: Long = tinyPrSymEdges): DataFrame =
-    pageRankBounded(edges, iters, damping, tol = 0.0, tinyGate)
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    powerIteration(edges, None, iters, damping, tol = 0.0)
 
   /** Convergence-mode PageRank: run until the max per-node rank change
     * drops to `tol` (L∞ — the standard power-iteration stopping rule)
@@ -104,90 +93,121 @@ object Graph {
     * `tol` — an unconverged importance ranking must fail loudly, the
     * same contract as [[Dedup.dupClusters]]'s pointer jumping. */
   def pageRankConverged(edges: DataFrame, maxIters: Int, tol: Double,
-                        damping: Double = 0.85,
-                        tinyGate: Long = tinyPrSymEdges): DataFrame = {
+                        damping: Double = 0.85): DataFrame = {
     require(tol > 0, "pageRankConverged: tol must be positive")
-    pageRankBounded(edges, maxIters, damping, tol, tinyGate)
+    powerIteration(edges, None, maxIters, damping, tol)
   }
+
+  /** Personalized PageRank (Haveliwala, "Topic-Sensitive PageRank",
+    * WWW 2002): teleport mass returns to the SEED set instead of
+    * spreading uniformly — rank becomes proximity to the seeds, the
+    * "propagate trust from a curated seed list" primitive web-corpus
+    * curation uses to weight sources near known-good sites (and the
+    * classic seed-expansion recommender). r⁰ = 1_S/|S|;
+    * rᵏ = (1−δ)·1_S/|S| + δ·Σ_in rᵏ⁻¹/deg, with |S| counting the
+    * distinct seed list (seeds outside the graph included). Global
+    * [[pageRank]] is the S = every-node case of the same power
+    * iteration, in the same regimes ([[Regime]]). */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
+                           damping: Double = 0.85): DataFrame =
+    powerIteration(edges, Some(seeds), iters, damping, tol = 0.0)
 
   private val checkpointEvery = 10
 
-  /** Below this many SYMMETRIZED edge rows the whole power iteration
-    * runs driver-side (same regime boundary as [[Dedup]]'s
-    * `TinyCcEdges`): ≤ ~1.6 MB of pairs, the bounded-model-state
-    * class. The r12 clean-window adjudication root-caused ~1 s of
-    * fixed overhead on t_textrank's 31-node vocabulary graph to the
-    * three snapshot write-and-readbacks below — pure job scheduling,
-    * no data cost. The gate picks PHYSICAL strategy only: the local
-    * loop computes the identical update with the identical rounding,
-    * and real graphs (above the gate) keep the distributed plan
-    * unchanged (VERDICT r12 #2). */
-  private val tinyPrSymEdges = 100000L
+  /** Above this many symmetrized edges the power iteration runs
+    * `Large` (cached pre-partitioned edge table, [[Regime]]); below,
+    * the lazy per-iteration exchange is cheaper. Measured bracket:
+    * lazy wins at 11.7M (sf1), fused wins at 117M (sf10) — the
+    * boundary sits at the geometric middle. */
+  private val fusedPrSymEdges = 30000000L
 
-  private def pageRankBounded(edges: DataFrame, iters: Int,
-                              damping: Double, tol: Double,
-                              tinyGate: Long): DataFrame = {
-    // every iteration references the edge set and sender degrees, and
-    // the degree build reads the edges twice — WITHOUT snapshots each
-    // plan copy re-derives the upstream edge join (orders ⋈ lineitem
-    // ran ~2× per call plus once per iteration). TWO bounded
-    // write-and-readbacks (r15, was three): the asymmetric edge list
-    // (one derivation total) and the degree-annotated edge list the
-    // loop scans; the degree table lives only as a subtree inside the
-    // latter's write, with the node count observed on it.
-    val (symSnap, mEdges) = edgeSnapshotCounted(edges, "pr_sym")
-    if (mEdges <= tinyGate)
-      return pageRankLocal(symSnap, iters, damping, tol)
-    // the degree table is NOT materialized (r15): its only standalone
-    // consumers were the node count — which now rides the degree
-    // SUBTREE as an observe() inside the annotated-edge write below
-    // (the subtree executes exactly once, in that job) — and the
-    // initial rank vector, which is the CONSTANT 1/n on every node
-    // and so never needs to exist as a frame at all: iteration 1
-    // folds it into the edge scan (see the loop). One V-row
-    // write-and-readback pass gone at every scale.
+  /** The one power iteration behind [[pageRank]], [[pageRankConverged]]
+    * and [[personalizedPageRank]]. `teleport` None is the every-node
+    * set: r⁰ and the teleport base are the literals 1/n and (1−δ)/n.
+    * Some(seeds) flags each node's membership (column `node`) and
+    * applies 1/|S| and (1−δ)/|S| on seeds, 0.0 elsewhere. The
+    * symmetrized graph keeps every out-degree ≥ 1, so there is no
+    * dangling-mass term and the update stays pure map/reduce. `tol`
+    * > 0 (every-node set only) is convergence mode; `force` pins the
+    * regime (tests).
+    *
+    * Distributed shape: TWO bounded write-and-readbacks — the
+    * asymmetric edge list (one upstream derivation total) and the
+    * degree-annotated edge list the loop scans. The degree table
+    * exists only as a subtree inside the latter's write, with the
+    * node count observed on it; the seed flags ride that same write
+    * (`s` on the src side for r⁰, `t` on the dst side for the
+    * teleport base, recovered per node as max(t) inside the dst
+    * aggregation — no node-table join per iteration), with |S|
+    * observed on the seed subtree. Per iteration: one shuffle of the
+    * edge list (join on src — ranks arrive shuffled from the previous
+    * iteration's groupBy) and one dst-keyed aggregation. Lineage grows
+    * linearly; a `localCheckpoint()` every 10 rounds truncates it. */
+  private[graft] def powerIteration(edges: DataFrame, teleport: Option[DataFrame],
+                                    iters: Int, damping: Double, tol: Double,
+                                    force: Option[Regime] = None): DataFrame = {
+    require(tol == 0 || teleport.isEmpty, "convergence mode needs the every-node set")
+    val site = if (teleport.isEmpty) "pr" else "ppr"
+    val (symSnap, mEdges) = edgeSnapshotCounted(edges, s"${site}_sym")
+    // the distinct seed list, |S| observed on it: flagged by src (r⁰)
+    // and, in the distributed write, by dst (teleport base) — both
+    // joins read its one exchange, and either read counts all of it
+    val seedSet = teleport.map(seeds => Snapshot.observe[Long](
+      seeds.select(col("node")).distinct(), s"${site}_seeds", Snapshot.rowCount))
+    def flagged(df: DataFrame, key: String, flag: String): DataFrame =
+      seedSet.fold(df)(f => df.join(
+        f._1.select(col("node").as(key), lit(true).as(flag)), Seq(key), "left"))
+    def seedCount(): Option[Long] = seedSet.map { f =>
+      val nS = f._2(); require(nS > 0, "personalizedPageRank: empty seed set"); nS
+    }
+    val regime = Regime.pick(mEdges, fusedPrSymEdges, force)
+    if (regime == Regime.Local)
+      return pageRankLocal(flagged(symSnap, "src", "s"), () => seedCount(),
+        iters, damping, tol)
     val (deg, nodes) = Snapshot.observe[Long](
       symSnap.groupBy(col("src")).agg(count(lit(1)).as("deg")),
-      "pr_deg", Snapshot.rowCount)
-    // the FUSED iteration shape (VERDICT r13 #7), gated on edge
-    // count: above `fusedPrSymEdges` the edge table is pre-partitioned
-    // on the join key ONCE and cached, so each of the k iterations
-    // shuffles only the NODE-sized rank vector — the lazy shape
-    // re-exchanges (and re-sorts, under SMJ) the EDGE-sized side
-    // every iteration, the dominant cost at 100× (measured: sf10 =
-    // 117M sym edges, g_pagerank 72→64 s, g_ppr 88→56 s). BELOW the
-    // gate the lazy shape is faster (sf1 = 11.7M edges: fused lost
-    // 8.4→10.1 s warm — cache fill + in-memory scan overhead exceeds
-    // the smaller exchange it saves), so bench-scale plans are
-    // untouched; the gate is the third regime boundary after the
-    // driver-local tiny gate. The shuffle_hash hint on the small side
+      s"${site}_deg", Snapshot.rowCount)
+    val symDegSnap = Snapshot(flagged(
+      symSnap.join(flagged(deg, "src", "s"), "src"), "dst", "t"), s"${site}_edges").df
+    // the write above just ran (snapshots are eager), so the degree
+    // and seed subtrees have executed exactly once: counts in hand
+    val n = nodes()
+    require(n > 0, "pageRank: empty edge set")
+    val nS = seedCount()
+    def onSeeds(flag: String, v: Double): Column =
+      when(col(flag), lit(v)).otherwise(lit(0.0))
+    val r0 = nS.fold(lit(1.0 / n))(s => onSeeds("s", 1.0 / s))
+    val base = nS.fold(lit((1 - damping) / n))(s => onSeeds("t", (1 - damping) / s))
+    val carried = nS.map(_ => col("t")).toSeq
+    val aggs = sum(col("m")).as("in_mass") +: nS.map(_ => max(col("t")).as("t")).toSeq
+    def ranked(r: DataFrame): DataFrame =
+      r.select(col("src").as("node"), (round(col("r") * 1e6) / 1e6).as("rank"))
+    // degenerate 0-iteration call: the result is r⁰ itself
+    if (iters <= 0 && tol == 0)
+      return ranked(symDegSnap.select(col("src"), r0.as("r")).distinct())
+    // the Large shape: the edge table is pre-partitioned on the join
+    // key ONCE and cached, so each of the k iterations shuffles only
+    // the NODE-sized rank vector — the lazy shape re-exchanges (and
+    // re-sorts, under SMJ) the EDGE-sized side every iteration, the
+    // dominant cost at 100× (measured: sf10 = 117M sym edges,
+    // g_pagerank 72→64 s, g_ppr 88→56 s). Below the gate the lazy
+    // shape is faster (sf1 = 11.7M edges: fused lost 8.4→10.1 s warm
+    // — cache fill + in-memory scan overhead exceeds the smaller
+    // exchange it saves). The shuffle_hash hint on the small side
     // removes the per-iteration sort SMJ would re-impose on the
     // cached edges; map-side partial aggregation bounds the groupBy's
     // shuffle at O(partitions × nodes).
-    val fused = mEdges >= fusedPrSymEdges
-    val symDegSnap =
-      Snapshot(symSnap.join(deg, "src"), "pr_edges").df
-    // the write above just ran (snapshots are eager), so the degree
-    // subtree has executed exactly once and the node count is in hand
-    val n = nodes()
-    require(n > 0, "pageRank: empty edge set")
-    // degenerate 0-iteration call: the result is r⁰ itself — the
-    // constant 1/n over the node set (preserved old behavior)
-    if (iters <= 0 && tol == 0)
-      return symDegSnap.select(col("src")).distinct()
-        .select(col("src").as("node"),
-          (round(lit(1.0 / n) * 1e6) / 1e6).as("rank"))
-    val out = Snapshot.cached(
+    val fused = regime == Regime.Large
+    ranked(Snapshot.cached(
         if (fused) symDegSnap.repartition(col("src")) else symDegSnap,
         enabled = fused) { symDeg =>
-      // r⁰ = 1/n is the same CONSTANT on every node, so iteration 1
-      // needs no rank table and no join: its mass term is the literal
-      // (1/n)/deg over the annotated edge scan. Every node appears as
-      // dst (the graph is symmetrized), so the aggregation domain —
-      // and hence the output node set — is identical to the joined
-      // form's; the arithmetic is the same division of the same
-      // doubles. Iterations 2+ join the materialized rank vector
-      // exactly as before.
+      // r⁰ is a per-node CONSTANT (1/n, or 1/|S| on flagged seeds), so
+      // iteration 1 needs no rank table and no join: its mass term is
+      // r⁰/deg over the annotated edge scan. Every node appears as dst
+      // (the graph is symmetrized), so the aggregation domain — and
+      // hence the output node set — is identical to the joined form's;
+      // the arithmetic is the same division of the same doubles.
+      // Iterations 2+ join the materialized rank vector.
       var ranks: DataFrame = null
       var converged = false
       var i = 0
@@ -195,16 +215,16 @@ object Graph {
         i += 1
         val masses =
           if (i == 1)
-            symDeg.select(col("dst"), (lit(1.0 / n) / col("deg")).as("m"))
+            symDeg.select(col("dst") +: (r0 / col("deg")).as("m") +: carried: _*)
           else {
             val rhs = if (fused) ranks.hint("shuffle_hash") else ranks
             symDeg.join(rhs, "src")
-              .select(col("dst"), (col("r") / col("deg")).as("m"))
+              .select(col("dst") +: (col("r") / col("deg")).as("m") +: carried: _*)
           }
         val next = masses
-          .groupBy(col("dst")).agg(sum(col("m")).as("in_mass"))
+          .groupBy(col("dst")).agg(aggs.head, aggs.tail: _*)
           .select(col("dst").as("src"),
-            (lit((1 - damping) / n) + lit(damping) * col("in_mass")).as("r"))
+            (base + lit(damping) * col("in_mass")).as("r"))
         if (tol > 0) {
           // convergence mode: pin this iteration's vector (also the
           // lineage truncation) and measure the L∞ step — against the
@@ -232,39 +252,38 @@ object Graph {
         throw new IllegalStateException(
           s"pageRank did not converge to tol=$tol within $iters iterations")
       ranks
-    }
-    out.select(col("src").as("node"),
-      (round(col("r") * 1e6) / 1e6).as("rank"))
+    })
   }
 
-  /** Above this many symmetrized edges the power-iteration loops
-    * switch to the cached-pre-partitioned edge table (fused shape);
-    * below, the lazy per-iteration exchange is cheaper. Measured
-    * bracket: lazy wins at 11.7M (sf1), fused wins at 117M (sf10) —
-    * the boundary sits at the geometric middle. */
-  private val fusedPrSymEdges = 30000000L
-
-  /** Driver-side power iteration over a tiny symmetrized edge list —
-    * the [[Dedup.dupClusters]] union-find device applied here: the
-    * edge set IS bounded model-scale state below the gate, so the
-    * distributed loop's per-iteration scheduling (≈18 jobs for 256
-    * edges, PERF_r05.md) buys nothing. The update is the SAME formula
-    * as the distributed loop ((1−δ)/n + δ·Σ r/deg over in-edges), the
-    * final rounding mirrors Spark's Round-on-double semantics
-    * (BigDecimal.valueOf, HALF_UP), and the convergence/throw
-    * contract is identical — only the physical strategy differs.
-    * Double-sum reassociation between the two strategies sits inside
-    * the 1e-6 rounding bound, the same tolerance every cross-engine
-    * oracle compare already rides. */
-  private def pageRankLocal(symSnap: DataFrame, iters: Int,
-                            damping: Double, tol: Double): DataFrame = {
-    val spark = symSnap.sparkSession
-    val pairs = symSnap.collect().map(r => (r.get(0), r.get(1)))
+  /** The `Local` regime: power iteration on the driver over a tiny
+    * symmetrized edge list — the [[Dedup.dupClusters]] union-find
+    * device applied here. `rows` are (src, dst[, seed flag]) and are
+    * collected in one action, which also delivers |S| (`nSeeds`). The
+    * update is the SAME formula as the distributed loop (base + δ·Σ
+    * r/deg over in-edges), the final rounding mirrors Spark's
+    * Round-on-double semantics (BigDecimal.valueOf, HALF_UP), and the
+    * convergence/throw contract is identical — only the physical
+    * strategy differs. Double-sum reassociation between the two
+    * strategies sits inside the 1e-6 rounding bound, the same
+    * tolerance every cross-engine oracle compare already rides. */
+  private def pageRankLocal(rows: DataFrame, nSeeds: () => Option[Long],
+                            iters: Int, damping: Double, tol: Double): DataFrame = {
+    val spark = rows.sparkSession
+    val collected = rows.collect()
+    val pairs = collected.map(r => (r.get(0), r.get(1)))
     val deg = scala.collection.mutable.HashMap.empty[Any, Long]
     pairs.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1 }
     val n = deg.size
     require(n > 0, "pageRank: empty edge set")
-    var ranks: Map[Any, Double] = deg.keys.map(_ -> 1.0 / n).toMap
+    // per-node r⁰ and teleport base, as in the distributed loop
+    val (r0, base): (Any => Double, Any => Double) = nSeeds() match {
+      case None => (_ => 1.0 / n, _ => (1 - damping) / n)
+      case Some(s) =>
+        val seeds = collected.filterNot(_.isNullAt(2)).map(_.get(0)).toSet
+        (k => if (seeds(k)) 1.0 / s else 0.0,
+          k => if (seeds(k)) (1 - damping) / s else 0.0)
+    }
+    var ranks: Map[Any, Double] = deg.keys.map(k => k -> r0(k)).toMap
     var converged = false
     var i = 0
     while (i < iters && !converged) {
@@ -274,7 +293,7 @@ object Graph {
         in(d) = in.getOrElse(d, 0.0) + ranks(s) / deg(s)
       }
       val next = ranks.keys
-        .map(k => k -> ((1 - damping) / n + damping * in.getOrElse(k, 0.0)))
+        .map(k => k -> (base(k) + damping * in.getOrElse(k, 0.0)))
         .toMap
       if (tol > 0)
         converged = ranks.keys.map(k => math.abs(next(k) - ranks(k))).max <= tol
@@ -287,7 +306,7 @@ object Graph {
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e6
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(
-        "node", symSnap.schema("src").dataType),
+        "node", rows.schema("src").dataType),
       org.apache.spark.sql.types.StructField(
         "rank", org.apache.spark.sql.types.DoubleType)))
     import scala.jdk.CollectionConverters._
@@ -295,78 +314,6 @@ object Graph {
       ranks.toSeq.map { case (k, v) =>
         org.apache.spark.sql.Row(k, rnd(v))
       }.asJava, schema)
-  }
-
-  /** Personalized PageRank: teleport mass returns to the SEED set
-    * instead of spreading uniformly — rank becomes proximity to the
-    * seeds, the "propagate trust from a curated seed list" primitive
-    * web-corpus curation uses to weight sources near known-good sites
-    * (and the classic seed-expansion recommender). r⁰ = 1/|S| on
-    * seeds; rᵏ = (1−δ)·1_S/|S| + δ·Σ_in rᵏ⁻¹/deg. The symmetrized
-    * graph keeps every out-degree ≥ 1, so the update stays pure
-    * map/reduce (no dangling term), same as [[pageRank]].
-    *
-    * Scale shape: identical to the global loop — one edge-snapshot
-    * shuffle + one dst aggregation per iteration — plus one |V|-row
-    * join per iteration against the node-base snapshot (the seed
-    * indicator folded into the degree table at build time, so the
-    * seed set is never re-joined raw). */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                           damping: Double = 0.85): DataFrame = {
-    val (symSnap, mEdges) = edgeSnapshotCounted(edges, "ppr_sym")
-    // seed count rides the snapshot write ([[Snapshot.counted]]) — the
-    // former separate .count() spent one full extra job AND recomputed
-    // the distinct for the join below (code-review r10)
-    val (seedSet, nSeeds) =
-      Snapshot.counted(seeds.select(col("node")).distinct(), "ppr_seeds")
-    require(nSeeds > 0, "personalizedPageRank: empty seed set")
-    // degree + seed indicator + per-node teleport base, one snapshot
-    val nodeSnap = Snapshot(
-      symSnap.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .join(seedSet.df.select(col("node").as("src"),
-          lit(true).as("is_seed")), Seq("src"), "left")
-        .select(col("src"), col("deg"),
-          when(col("is_seed"),
-            lit((1 - damping) / nSeeds)).otherwise(lit(0.0)).as("base"),
-          when(col("is_seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
-            .as("r0")),
-      "ppr_nodes").df
-    // base rides the DST side of every edge row (one extra double),
-    // so each iteration's update needs NO node-table join: the
-    // aggregation recovers it as max(base) — base is functionally
-    // dependent on dst
-    // fused iteration shape above the edge-count gate, same trade and
-    // measurements as [[pageRankBounded]]: edges cached
-    // pre-partitioned on the join key once, only the node-sized rank
-    // vector shuffles per iteration
-    val fused = mEdges >= fusedPrSymEdges
-    val symDegSnap = Snapshot(symSnap
-      .join(nodeSnap.select(col("src"), col("deg")), "src")
-      .join(nodeSnap.select(col("src").as("dst"), col("base")), "dst"),
-      "ppr_edges").df
-    val out = Snapshot.cached(
-        if (fused) symDegSnap.repartition(col("src")) else symDegSnap,
-        enabled = fused) { symDeg =>
-      var ranks = nodeSnap.select(col("src"), col("r0").as("r"))
-      var i = 0
-      while (i < iters) {
-        i += 1
-        val rhs = if (fused) ranks.hint("shuffle_hash") else ranks
-        ranks = symDeg.join(rhs, "src")
-          .select(col("dst"), (col("r") / col("deg")).as("m"), col("base"))
-          .groupBy(col("dst")).agg(sum(col("m")).as("in_mass"),
-            max(col("base")).as("b"))
-          .select(col("dst").as("src"),
-            (col("b") + lit(damping) * col("in_mass")).as("r"))
-        // long-run lineage truncation, same as the global loop (never
-        // triggers at the 5-iteration oracle depth)
-        if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint()
-      }
-      ranks
-    }
-    out.select(col("src").as("node"),
-      (round(col("r") * 1e6) / 1e6).as("rank"))
   }
 
   /** Distinct part–part co-purchase edges (parts sharing an order) —
@@ -619,10 +566,10 @@ object Graph {
 
   /** The personalized loop unrolled — same CTE scaffolding as
     * [[prOracleSql]], with the teleport base CASE'd on seed
-    * membership. |S| counts the RAW seed list (same as the Scala
-    * side's seedSet.count()), while mass only initializes on seed
-    * nodes that exist in the graph — identical on both engines by
-    * construction. */
+    * membership. |S| counts the RAW seed list (as the Scala side's
+    * |S|, observed on its seed subtree), while mass only initializes
+    * on seed nodes that exist in the graph — identical on both
+    * engines by construction. */
   private def pprOracleSql(iters: Int): String = {
     val d = "CAST(0.85 AS DOUBLE)"
     val base = "WITH e0 AS MATERIALIZED (SELECT DISTINCT 'c' || o_custkey AS a, " +

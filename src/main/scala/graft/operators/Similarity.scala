@@ -866,8 +866,8 @@ object Similarity {
     * name starts with `_` as hidden and warns that all paths were
     * ignored (it read them anyway), and a footer read would infer what
     * the writer fixes. */
-  private def tombstoneIds(spark: SparkSession, path: String,
-                           fs: graft.sources.Dfs): Option[DataFrame] = {
+  private[graft] def tombstoneIds(spark: SparkSession, path: String,
+                                  fs: graft.sources.Dfs): Option[DataFrame] = {
     val dir = s"$path/_tombstones"
     val files = fs.listNames(dir).filter(_.endsWith(".parquet"))
     if (files.isEmpty) None
@@ -1613,8 +1613,8 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    // Tiny-corpus plan mode (r14 — the pageRankLocal/TinyCcEdges
-    // device): below the gate the corpus IS bounded driver model
+    // Tiny-corpus plan mode (r14 — the `Regime.Local` device of
+    // PageRank and CC): below the gate the corpus IS bounded driver model
     // state (≤ ~50 MB of vectors), and the k-round loop's cost is
     // pure scheduling — measured 18 jobs / 3.6 s warm for 2,000
     // vectors at sf0.1, where one collect + a local loop is ~0.3 s.
@@ -1697,7 +1697,7 @@ object Similarity {
 
   /** Row gate for [[kCenter]]'s driver-local plan mode: ≤ ~50 MB of
     * (id, ≤64-dim float) vectors — the bounded-driver-model regime
-    * shared with `Dedup.TinyCcEdges` / `Graph.tinyPrSymEdges`. */
+    * shared with [[Regime.LocalEdges]]. */
   private val KCenterLocalRows = 200000L
 
   /** Unrolled-CTE oracle for [[kCenter]] — the same greedy loop in

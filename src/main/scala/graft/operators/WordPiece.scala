@@ -98,16 +98,13 @@ object WordPiece {
     * bounded token-count collect, the 1-row argmax) is a tiny
     * vocabulary-sized aggregation whose plan AQE splits into 2–3
     * query-stage jobs — 8 rounds cost ~36 jobs where 16 suffice. The
-    * clone (same SparkContext, isolated SQLConf, the snapshot rebound
-    * by [[Snapshot.in]]) executes each action as ONE job; plans and
+    * clone ([[Regime.aqeOff]], the snapshot rebound by
+    * [[Snapshot.in]]) executes each action as ONE job; plans and
     * arithmetic are unchanged (no joins anywhere in the round plans —
     * the model rides typedLit maps), and the caller's session never
     * sees the flipped conf. */
-  private def loopDict(caller: SparkSession, wc: Snapshot): DataFrame = {
-    val s2 = caller.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    wc.in(s2)
-  }
+  private def loopDict(caller: SparkSession, wc: Snapshot): DataFrame =
+    wc.in(Regime.aqeOff(caller))
 
   /** The merge loop over an already-pinned dictionary frame — shared
     * by [[train]] (persist) and [[tokenCount]] (snapshot, reused by

@@ -16,15 +16,6 @@ import graft.ingest.Load.WikiTables
   */
 object Ops {
 
-  /** B14: `delete $entity; delete $claims;` — remove entities matching
-    * `doomed` AND their linked claims rows, in one pass each, via
-    * anti-joins on the (src_tb, id) key. `doomed` is evaluated against
-    * the traversed view (entities + `claims_arr`), exactly the shape
-    * `test_filter.surql` selects over. */
-  def deleteWhere(t: WikiTables, doomed: Column): WikiTables =
-    deleteIds(t, Paths.withClaims(t.entities, t.claims).filter(doomed)
-      .select(col("id")))
-
   /** Delete by computed id-set (the `$del` form): ids is a DF with a
     * `id: Thing` column. */
   def deleteIds(t: WikiTables, ids: DataFrame): WikiTables = {

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.HashExpressions.kmv_longs_agg
 import graft.operators.Sketch
@@ -22,6 +21,9 @@ import graft.operators.Sketch
   * whole table — the stream≡batch pin the spec enforces (the same
   * device as [[DriftStream]]'s accumulated-PSI pin, but exact rather
   * than merely value-stable).
+  *
+  * [[cardinalityStage]] is the `foreachBatch` body of a caller's
+  * `writeStream` over the events stream.
   *
   * Replay safety (foreachBatch is at-least-once): a replayed batch
   * overwrites ITS OWN partial directory (`statePath/batch=<id>`) and
@@ -48,16 +50,4 @@ object CardinalityStream {
     cum.select(col("event_type") +: Sketch.estimate(col("mins")): _*)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
   }
-
-  /** Start the cardinality monitor over an events stream. */
-  def cardinalityStream(eventsStream: DataFrame, statePath: String,
-                        outDir: String, checkpoint: String): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cardinalityStage(batch, batchId, statePath, outDir)
-      }
-      .start()
 }

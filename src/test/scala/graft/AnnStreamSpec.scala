@@ -371,8 +371,8 @@ class AnnStreamSpec extends AnyFunSuite {
       e.startsWith(s"delete $tombs/") && e.endsWith(".parquet"))
     assert(lastIn >= 0 && firstOut > lastIn, log.mkString("; "))
     // the surviving set is exactly the physically-unreclaimed id
-    val left = spark.read.parquet(tombs)
-      .select(col("vec_id")).distinct().collect().map(_.getLong(0))
+    val left = Similarity.tombstoneIds(spark, path, graft.sources.Dfs.default)
+      .get.collect().map(_.getLong(0))
     assert(left.toSeq === Seq(201L))
     // and the searcher still masks it
     val q = vecs(201, 202)

@@ -102,10 +102,11 @@ class ArtifactSpec extends AnyFunSuite {
   private def ids(df: DataFrame): Seq[Long] =
     df.select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
 
+  // through the library's reader, which names the files (a read of
+  // the `_`-prefixed directory itself logs "All paths were ignored")
   private def tombstones(path: String): Set[Long] =
-    if (Files.exists(Path.of(s"$path/_tombstones")))
-      ids(spark.read.parquet(s"$path/_tombstones")).toSet
-    else Set.empty
+    Similarity.tombstoneIds(spark, path, Dfs.default)
+      .fold(Set.empty[Long])(ids(_).toSet)
 
   /** Crash `op` before each of its mutating seam calls in turn, then
     * run one clean [[Similarity.ensureIvfIndex]] over the intended

@@ -1236,16 +1236,18 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r("a") > r("b"))
     assert(math.abs(r("e") - 1.0 / 6) < 1e-4)
     // the tiny-graph gate picks PHYSICAL strategy only: the
-    // distributed loop (forced via tinyGate = 0) must agree with the
+    // distributed loop (forced `Small`) must agree with the
     // driver-side loop exactly at the 1e-6 rounding contract
-    val dist = Graph.pageRank(edges, 10, tinyGate = 0).collect()
+    val dist = Graph.powerIteration(edges, None, 10, 0.85, 0.0,
+        Some(Regime.Small)).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(dist === r)
     // the degenerate 0-iteration call (r⁰ = 1/n on every node) too
     val r0 = Graph.pageRank(edges, 0).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(r0.size === 6)
-    assert(Graph.pageRank(edges, 0, tinyGate = 0).collect()
+    assert(Graph.powerIteration(edges, None, 0, 0.85, 0.0,
+        Some(Regime.Small)).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap === r0)
   }
 
@@ -1284,8 +1286,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(conv === deep)
     // the distributed loop's tol stop (incl. its i = 1 delta against
     // the 1/n literal) agrees with the driver-side loop
-    val distConv = Graph.pageRankConverged(edges, 200, 1e-9, tinyGate = 0)
-      .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+    val distConv = Graph.powerIteration(edges, None, 200, 0.85, 1e-9,
+        Some(Regime.Small)).collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(distConv === conv)
     // a budget too small to reach tol fails loudly, never returns a
     // half-converged ranking
@@ -1416,17 +1418,16 @@ class OperatorsSpec extends AnyFunSuite {
     // pointer jumping: a 40-hop chain must converge in well under 40
     // rounds (plain one-hop propagation would blow this maxIter and
     // throw) — the O(log diameter) claim, machine-checked.
-    // tinyThreshold = -1 forces the DISTRIBUTED loop (the default
-    // would route a 40-edge graph through the driver union-find)
+    // forcing `Small` runs the DISTRIBUTED loop (the default would
+    // route a 40-edge graph through the driver union-find)
     val long = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val longGot = Dedup.connectedComponents(long, maxIter = 10,
-        tinyThreshold = -1L).collect()
+    val longGot = Dedup.connectedComponents(long, 10,
+        Some(Regime.Small)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(longGot === (0L to 40L).map(_ -> 0L).toMap)
     // the iteration cap fails LOUDLY instead of publishing wrong labels
     intercept[IllegalStateException](
-      Dedup.connectedComponents(long, maxIter = 2,
-        tinyThreshold = -1L).collect())
+      Dedup.connectedComponents(long, 2, Some(Regime.Small)).collect())
     // the driver union-find fast path agrees with the distributed
     // loop on the same chain
     assert(Dedup.connectedComponents(long).collect()
@@ -2517,6 +2518,48 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 0.51125, 2L -> 0.1275, 3L -> 0.36125), s"got $got")
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "teleport must conserve mass")
+  }
+
+  test("graph regimes: Local, Small and Large return equal rows and leave no cache") {
+    import spark.implicits._
+    val all = Seq(Regime.Local, Regime.Small, Regime.Large)
+    // one run's rows; afterwards no loaned cache remains (a Large
+    // result is pinned by a local checkpoint, dropped here so that
+    // every run starts from an empty storage map)
+    def run(df: => org.apache.spark.sql.DataFrame): Map[Any, Any] = {
+      val got = df.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val left = spark.sparkContext.getPersistentRDDs.values
+      assert(left.forall(_.isCheckpointed), left.map(_.toDebugString).mkString("\n"))
+      left.foreach(_.unpersist(blocking = true))
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      got
+    }
+    // PageRank on the star a-{b,c,d} plus the pair e-f: fixed
+    // iterations, the 0-iteration r⁰, and convergence mode
+    val star = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("e", "f")).toDF("a", "b")
+    for ((iters, tol) <- Seq((10, 0.0), (0, 0.0), (200, 1e-9))) {
+      val got = all.map(r =>
+        r -> run(Graph.powerIteration(star, None, iters, 0.85, tol, Some(r))))
+      assert(got.map(_._2).distinct.size === 1, s"iters=$iters tol=$tol: $got")
+      assert(got.head._2.size === 6)
+    }
+    // PPR on the path 1–2–3, hand-computed (see the test above); a
+    // seed outside the graph (99, listed twice) still counts once in
+    // |S|, so every rank halves
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    for (r <- all) {
+      def ppr(seeds: Seq[Long], iters: Int) = run(Graph.powerIteration(
+        path, Some(seeds.toDF("node")), iters, 0.85, 0.0, Some(r)))
+      assert(ppr(Seq(1L), 2) === Map(1L -> 0.51125, 2L -> 0.1275, 3L -> 0.36125), r)
+      assert(ppr(Seq(1L, 99L, 99L), 2) ===
+        Map(1L -> 0.255625, 2L -> 0.06375, 3L -> 0.180625), r)
+      assert(ppr(Seq(1L), 0) === Map(1L -> 1.0, 2L -> 0.0, 3L -> 0.0), r)
+    }
+    // connected components: the 40-hop chain is one component
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    for (r <- all)
+      assert(run(Dedup.connectedComponents(chain, 10, Some(r))) ===
+        (0L to 40L).map(_ -> 0L).toMap, r)
   }
 
   test("matryoshka: recall 1 above cluster size, degraded below (prefix can't order within a cluster)") {

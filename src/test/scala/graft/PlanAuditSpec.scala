@@ -491,16 +491,33 @@ class PlanAuditSpec extends AnyFunSuite {
   test("pagerank iterations scan the edge snapshot — the base join never re-executes") {
     val orders = graft.sources.Tables.load(spark, sf, "orders")
     val li = graft.sources.Tables.load(spark, sf, "lineitem")
-    // tinyGate = 0 pins the DISTRIBUTED plan shape — at this sf the
-    // graph would otherwise take the driver-side tiny-graph path
-    val p = plan(graft.operators.Graph.pageRank(
-      graft.operators.Graph.customerSupplierEdgesNum(orders, li), 5,
-      tinyGate = 0))
+    // forcing `Small` pins the DISTRIBUTED plan shape — at this sf
+    // the graph would otherwise take the driver-side tiny-graph path
+    val p = plan(graft.operators.Graph.powerIteration(
+      graft.operators.Graph.customerSupplierEdgesNum(orders, li), None, 5,
+      0.85, 0.0, Some(graft.operators.Regime.Small)))
     assert(p.contains("pr_edges"), p)
     // orders ⋈ lineitem must have run ONCE into the snapshots at
     // call time — the returned iteration plan never touches the base
     // tables again (5 copies of that join was the first shape's cost)
     assert(!p.contains("orders.parquet") && !p.contains("lineitem.parquet"), p)
+  }
+
+  test("ppr iterations scan the annotated edge snapshot — seed flags ride its write") {
+    val orders = graft.sources.Tables.load(spark, sf, "orders")
+    val li = graft.sources.Tables.load(spark, sf, "lineitem")
+    val seeds = graft.sources.Tables.load(spark, sf, "customer")
+      .filter(col("c_custkey") < 25).select((col("c_custkey") * 2).as("node"))
+    // forced `Small`, as the g_pagerank pin above
+    val p = plan(graft.operators.Graph.powerIteration(
+      graft.operators.Graph.customerSupplierEdgesNum(orders, li), Some(seeds), 5,
+      0.85, 0.0, Some(graft.operators.Regime.Small)))
+    assert(p.contains("ppr_edges"), p)
+    // the edge join and the seed list ran once into the snapshot: the
+    // loop never re-reads a base table, and there is no node snapshot
+    assert(!p.contains("orders.parquet") && !p.contains("lineitem.parquet"), p)
+    assert(!p.contains("customer.parquet"), p)
+    assert(!p.contains("ppr_nodes"), p)
   }
 
   test("PQ: code assignment is one scan-local kernel call; no window sort anywhere") {
