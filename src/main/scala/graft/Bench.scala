@@ -111,6 +111,11 @@ object Bench {
     val groups = scala.collection.mutable.Map[String, String]()
     val counters = new Counters()
     var etlEps = -1.0
+    // jobs and executor CPU seconds of the load that gave etlEps: the
+    // marker's path changes with the ETL code (a Bulk load ran 4 jobs
+    // before the one-pass load, 2 after), and these say when it did
+    var etlJobs = -1L
+    var etlCpuS = -1.0
     // end-of-sweep re-run of the SAME calibration marker (r15, VERDICT
     // r14 #1): the marker is measured first, so a host-speed swing
     // DURING the sweep was invisible in the artifact and every
@@ -161,7 +166,9 @@ object Bench {
       def perQuery(of: Counters.Acc => Long): String =
         results.keys.map(k => "\"" + k + "\":" + of(counters.group(groups(k))))
           .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"best_of_2","queries":$qs,"jobs":${perQuery(_.jobs)},"shuffle_bytes":${perQuery(_.shuffleWriteBytes)},"sf":"$sfDir","etl_entities_per_sec":${fmt(etlEps)},"etl_baseline_eps":568${windowFields()}$subsetField$failedField$partialField}"""
+      val etlCounters =
+        if (etlJobs < 0) "" else s""","etl_jobs":$etlJobs,"etl_cpu_s":${fmt(etlCpuS)}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"best_of_2","queries":$qs,"jobs":${perQuery(_.jobs)},"shuffle_bytes":${perQuery(_.shuffleWriteBytes)},"sf":"$sfDir","etl_entities_per_sec":${fmt(etlEps)},"etl_baseline_eps":568$etlCounters${windowFields()}$subsetField$failedField$partialField}"""
     }
 
     /** The round driver records only the LAST ~2000 chars of output and
@@ -221,20 +228,23 @@ object Bench {
     // best-of-2: the recorded number must survive host contention
     // (round-2's driver run hit a 5-28x noise window on identical
     // code) — throughput takes the max over however many runs succeed.
-    def etlOnce(): Double = {
-      var eps = -1.0
+    def etlOnce(): Option[graft.tools.EtlBench.Timed] = {
+      var timed: Option[graft.tools.EtlBench.Timed] = None
       val (r, _) = runCapped(spark, "etl", 3 * QueryCapSec) {
-        eps = graft.tools.EtlBench.timedLoad(spark, 150000,
-          "/tmp/graft_bench_dump.json", "/tmp/graft_bench_etl")
+        timed = Some(graft.tools.EtlBench.timedLoad(spark, 150000,
+          "/tmp/graft_bench_dump.json", "/tmp/graft_bench_etl"))
       }
-      if (r < 0 || eps < 0) -1.0 else eps
+      timed.filter(t => r >= 0 && t.eps >= 0)
     }
+    def record(t: Option[graft.tools.EtlBench.Timed]): Unit =
+      t.filter(_.eps > etlEps).foreach { t =>
+        etlEps = t.eps; etlJobs = t.jobs; etlCpuS = t.cpuS
+      }
     // subset runs (scale rehearsals) skip the ETL benchmark
     if (subset.isEmpty) {
-      etlEps = etlOnce()
+      record(etlOnce())
       flush()
-      val second = etlOnce()
-      etlEps = math.max(etlEps, second)
+      record(etlOnce())
       flush()
     }
 
@@ -301,7 +311,7 @@ object Bench {
     if (subset.isEmpty) {
       spark.catalog.clearCache()
       System.gc()
-      etlEpsEnd = etlOnce()
+      etlEpsEnd = etlOnce().fold(-1.0)(_.eps)
       flush()
     }
 

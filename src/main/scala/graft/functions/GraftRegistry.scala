@@ -161,6 +161,8 @@ object GraftRegistry {
           s"cents=${cents.length}, nProbe=$nProbe)")
       TopCells(es(0), cells, cents, nProbe)
     }),
+    // flatten_claims(claims) — the Wikidata claims normalize
+    "flatten_claims" -> (es => FlattenClaims(es.head)),
     "ascii_fold" -> (es => AsciiFold(es.head)),
     "snowball_stem" -> (es => SnowballStem(es.head)))
 

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.model.Schemas
+import graft.functions.GraftRegistry
 
 /** The core normalize/project transform (SURVEY §2.A A8-A11) — the
   * Spark re-expression of `EntityMini::from_entity`
@@ -21,10 +21,13 @@ import graft.model.Schemas
   *     become `Thing` record links; everything else fills its branch
   *     of the serde-shaped `ClaimValueData` union.
   *
-  * Everything is higher-order array/struct expressions — per-row, no
-  * shuffle, whole pipeline stays in one map stage regardless of scale.
-  * The only non-codegen expressions are the `from_json` re-parses of
-  * the per-datatype value payloads.
+  * Everything is per-row column expressions — no shuffle, the whole
+  * pipeline stays in one map stage regardless of scale. The claims
+  * side is one compiled kernel call, `flatten_claims`
+  * ([[graft.functions.FlattenClaims]]): the only
+  * `from_json` in the plan is the line parse, and no lambda runs
+  * interpreted (`transform`/`filter` lambdas are codegen fallbacks in
+  * Spark, evaluated one element at a time).
   */
 object Transform {
 
@@ -40,134 +43,15 @@ object Transform {
   private def thingCol(tb: Column, id: Column): Column =
     struct(tb.as("tb"), id.as("id"))
 
-  /** Merged payload schema: the union of every object-shaped
-    * `datavalue.value` layout, parsed in ONE from_json per snak (the
-    * per-datatype-schema formulation parses the same JSON up to six
-    * times — it dominated ETL cost). Absent fields are null; the only
-    * field-name collision is `precision` (int for time, double for
-    * coordinates) — carried as double, cast per branch. */
-  private val mergedValueSchema = StructType(Seq(
-    StructField("entity-type", StringType),
-    StructField("numeric-id", LongType),
-    StructField("id", StringType),
-    StructField("amount", StringType), // "+51" — signed string in dump
-    StructField("lowerBound", StringType),
-    StructField("upperBound", StringType),
-    StructField("unit", StringType),
-    StructField("text", StringType),
-    StructField("language", StringType),
-    StructField("time", StringType),
-    StructField("precision", DoubleType),
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("globe", StringType)))
-
-  /** `[{"text": "...", "language": "en"}, ...]` — the
-    * MultilingualText(Vec<Text>) union branch's array payload. */
-  private val multiTextSchema = ArrayType(StructType(Seq(
-    StructField("text", StringType),
-    StructField("language", StringType))))
-
-  /** The A9 FK normalization + value-union fill for one snak column.
-    * Exactly one union branch non-null; `snaktype` somevalue/novalue
-    * map to UnknownValue/NoValue (wikidata-crate variant names). */
-  def valueUnion(sn: Column): Column = {
-    val st = sn.getField("snaktype")
-    val dt = sn.getField("datatype")
-    val raw = sn.getField("datavalue").getField("value")
-    val isVal = st === "value"
-
-    val pv = from_json(raw, mergedValueSchema)
-    val refNum = coalesce(pv.getField("numeric-id"),
-      idNum(pv.getField("id")))
-
-    // Thing branch: item/property/lexeme-valued claims → record links
-    val thing = when(isVal && dt === "wikibase-item",
-      thingCol(lit("Entity"), refNum))
-      .when(isVal && dt === "wikibase-property", thingCol(lit("Property"), refNum))
-      .when(isVal && dt === "wikibase-lexeme", thingCol(lit("Lexeme"), refNum))
-
-    def strBranch(datatype: String): Column =
-      when(isVal && dt === datatype, raw)
-
-    val cvd = struct(
-      strBranch("string").as("String"),
-      strBranch("external-id").as("ExternalID"),
-      strBranch("url").as("Url"),
-      strBranch("commonsMedia").as("CommonsMedia"),
-      strBranch("math").as("MathExpr"),
-      strBranch("geo-shape").as("GeoShape"),
-      strBranch("musical-notation").as("MusicNotation"),
-      strBranch("tabular-data").as("TabularData"),
-      when(isVal && dt === "monolingualtext",
-        struct(pv.getField("text").as("text"),
-          pv.getField("language").as("lang"))).as("MonolingualText"),
-      // MultilingualText(Vec<Text>): array-shaped value payload — its
-      // own from_json, evaluated lazily only on matching rows (CaseWhen
-      // branches don't run for non-matching datatypes)
-      when(isVal && dt === "multilingualtext",
-        transform(from_json(raw, multiTextSchema), v =>
-          struct(v.getField("text").as("text"),
-            v.getField("language").as("lang")))).as("MultilingualText"),
-      when(isVal && dt === "quantity", struct(
-        pv.getField("amount").cast(DoubleType).as("amount"),
-        pv.getField("lowerBound").cast(DoubleType).as("lower_bound"),
-        pv.getField("upperBound").cast(DoubleType).as("upper_bound"),
-        pv.getField("unit").as("unit"))).as("Quantity"),
-      when(isVal && dt === "time", struct(
-        pv.getField("time").as("date_time"),
-        pv.getField("precision").cast(IntegerType).as("precision"))).as("DateTime"),
-      when(isVal && dt === "globe-coordinate", struct(
-        pv.getField("latitude").as("lat"),
-        pv.getField("longitude").as("lon"),
-        pv.getField("precision").as("precision"),
-        pv.getField("globe").as("globe"))).as("GlobeCoordinate"),
-      when(isVal && dt === "wikibase-form",
-        pv.getField("id")).as("Form"),
-      when(isVal && dt === "wikibase-sense",
-        pv.getField("id")).as("Sense"),
-      when(st === "novalue", lit(true)).as("NoValue"),
-      when(st === "somevalue", lit(true)).as("UnknownValue"))
-
-    struct(thing.as("Thing"), cvd.as("ClaimValueData"))
-  }
-
-  /** Main claim of one statement: id = ("Property", pid). */
-  private def mainClaim(stmt: Column): Column = {
-    val sn = stmt.getField("mainsnak")
-    struct(
-      thingCol(lit("Property"), idNum(sn.getField("property"))).as("id"),
-      valueUnion(sn).as("value"))
-  }
-
-  /** Qualifier claims of one statement, flattened; id = ("Claims",
-    * qpid) — the reference's deliberate marker (`tables.rs:90`). */
-  private def qualifierClaims(stmt: Column): Column = {
-    val quals = stmt.getField("qualifiers")
-    when(quals.isNull, array().cast(ArrayType(Schemas.claim)))
-      .otherwise(flatten(transform(map_values(quals), snaks =>
-        transform(snaks, q => struct(
-          thingCol(lit("Claims"), idNum(q.getField("property"))).as("id"),
-          valueUnion(q).as("value"))))))
-  }
-
-  /** A10 qualifier flatten: claims map → ONE array where each
-    * statement contributes 1 main claim + N qualifier claims.
-    * |out| = Σ(1 + |qualifiers|) over statements. */
-  def flattenClaims(claimsMap: Column): Column = {
-    val stmts = flatten(map_values(claimsMap))
-    when(claimsMap.isNull, array().cast(ArrayType(Schemas.claim)))
-      .otherwise(flatten(transform(stmts, stmt =>
-        concat(array(mainClaim(stmt)), qualifierClaims(stmt)))))
-  }
-
   /** Full normalize: entity rows (WikidataSource.read) → one DF with
     * both the EntityMini and the Claims-row payloads. Split with
     * `entityMini` / `claimsRows` below. `lang` is the WIKIDATA_LANG
     * projection (reference `tables.rs:9-15`, default "" when the
-    * translation is missing). */
+    * translation is missing). Registers graft's kernels on the
+    * frame's session. */
   def normalize(raw: DataFrame, lang: String = "en",
                 keepAllLanguages: Boolean = false): DataFrame = {
+    GraftRegistry.register(raw.sparkSession)
     val base = Seq(
       thingCol(idTable(col("id")), idNum(col("id"))).as("id"),
       coalesce(element_at(col("labels"), lang).getField("value"),
@@ -175,7 +59,8 @@ object Transform {
         .as("label"),
       coalesce(element_at(col("descriptions"), lang).getField("value"), lit(""))
         .as("description"),
-      flattenClaims(col("claims")).as("claims_arr"))
+      // A9 + A10: one kernel call per entity (graft.functions.Claims)
+      call_function("flatten_claims", col("claims")).as("claims_arr"))
     // SURVEY §7.4: the reference DROPS all non-WIKIDATA_LANG
     // translations (parity default); the full maps stay available
     // behind this flag for pipelines that need them

@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * The claim-value `datavalue.value` field varies by datatype (bare
   * JSON string vs object). The raw schema captures it as StringType —
   * Spark's JSON parser renders any non-string token as its raw JSON
-  * text when the expected type is string — and the transform re-parses
-  * it per-datatype with `from_json`. This keeps the scan schema fixed
-  * while supporting the full value union.
+  * text when the expected type is string — and the `flatten_claims`
+  * kernel ([[graft.functions.Claims]]) parses an object payload once,
+  * by its datatype. This keeps the scan schema fixed while supporting
+  * the full value union.
   */
 object Schemas {
 

@@ -61,13 +61,19 @@ object EtlBench {
     w.close()
   }
 
+  /** One timed load: entities/s, and the Spark jobs and executor CPU
+    * seconds of its `Load.run` (the counters do not move with the host
+    * the way seconds do). */
+  final case class Timed(eps: Double, jobs: Long, cpuS: Double)
+
   /** Shared timing path (Bench reuses it so both tools measure under
     * one split-sizing policy): generate n entities, load, return
-    * entities/sec. Split size fans a small bench file out the way a
-    * multi-GB dump would; the session's own setting is back in place
-    * when this returns, so later scans split normally. */
+    * entities/sec with the load's counters. Split size fans a small
+    * bench file out the way a multi-GB dump would; the session's own
+    * setting is back in place when this returns, so later scans split
+    * normally. */
   def timedLoad(spark: SparkSession, n: Int, dump: String,
-                outDir: String): Double = {
+                outDir: String): Timed = {
     writeDump(dump, n)
     val splitKey = "spark.sql.files.maxPartitionBytes"
     val prior = spark.conf.getAll.get(splitKey)
@@ -81,12 +87,14 @@ object EtlBench {
       val t0 = System.nanoTime()
       // A17: the reference's progress bar equivalent — live task-metric
       // reporting while the timed load runs (listener overhead is noise)
-      val t = graft.ingest.EtlProgress.withProgress(spark, Some(n.toLong)) {
-        _ => Load.run(spark, dump, outDir,
-          format = if (dump.endsWith(".bz2")) "bz2" else "json")
+      // the progress counters settle before withProgress returns
+      val (t, progress) = graft.ingest.EtlProgress.withProgress(spark, Some(n.toLong)) {
+        p => (Load.run(spark, dump, outDir,
+          format = if (dump.endsWith(".bz2")) "bz2" else "json"), p)
       }
       val entities = t.entities.count()
-      entities / ((System.nanoTime() - t0) / 1e9)
+      val c = progress.counters.total
+      Timed(entities / ((System.nanoTime() - t0) / 1e9), c.jobs, c.cpuNs / 1e9)
     } finally prior.fold(spark.conf.unset(splitKey))(spark.conf.set(splitKey, _))
   }
 
@@ -95,7 +103,8 @@ object EtlBench {
     val dump = if (args.length > 1) args(1) else "/tmp/etl_bench_dump.json"
     val spark = LocalSession()
 
-    val eps = timedLoad(spark, n, dump, "/tmp/etl_bench_out")
+    val timed = timedLoad(spark, n, dump, "/tmp/etl_bench_out")
+    val eps = timed.eps
 
     // query-surface timing over the loaded tables: the flagship
     // traversal (B4-B7) and the Media view materialization (B16) at
@@ -108,7 +117,7 @@ object EtlBench {
       .count()
     val querySec = (System.nanoTime() - tq0) / 1e9
 
-    println(s"""{"metric":"etl_throughput","value":$eps,"unit":"entities_per_sec","entities":$n,"baseline_eps":568,"speedup_vs_baseline":${eps / 568.0},"media_view_sec":$querySec,"media_view_rows":$traversed}""")
+    println(s"""{"metric":"etl_throughput","value":$eps,"unit":"entities_per_sec","entities":$n,"baseline_eps":568,"speedup_vs_baseline":${eps / 568.0},"jobs":${timed.jobs},"cpu_s":${timed.cpuS},"media_view_sec":$querySec,"media_view_rows":$traversed}""")
     spark.stop()
   }
 }

@@ -20,7 +20,8 @@ import graft.streaming.{AnnStream, CorpusStream, DriftStream, MergeStream}
   *
   *  - `stats`: for each query, builder + count() twice (cold, warm);
   *    reports the WARM run's wall seconds, Spark jobs, stages, tasks,
-  *    shuffle MB written and input MB read, read from [[Counters]]
+  *    shuffle MB written, input MB read and executor CPU seconds, read
+  *    from [[Counters]]
   *    under the warm run's own job group. A query whose warm time is
   *    dominated by job count × local-mode scheduling (tiny shuffle and
   *    input bytes) is overhead-bound: the fix is fewer actions, not
@@ -31,7 +32,7 @@ import graft.streaming.{AnnStream, CorpusStream, DriftStream, MergeStream}
   *    PlanAuditSpec). Queries whose builders run real writes at
   *    plan-build time (index builds, versioned merges) execute those
   *    writes here; the dumped plan is the final returned stage.
-  *  - `etl`: jobs, stages, tasks, shuffle and wall time per warm
+  *  - `etl`: jobs, stages, tasks, shuffle, executor CPU and wall time per warm
   *    `Load.run` of a dump, Bulk or through a `filter.surql`.
   *  - `stream`: per-batch latency and throughput of the four streaming
   *    operators (PERF_r10).
@@ -56,11 +57,15 @@ object Probe {
 
   case class Stats(name: String, sec: Double, rows: Long, jobs: Int,
                    stages: Int, tasks: Int, shuffleMB: Double,
-                   inputMB: Double) {
+                   inputMB: Double, cpuS: Double) {
     override def toString: String =
       f"stats $name: $sec%.2fs rows=$rows jobs=$jobs stages=$stages " +
-        f"tasks=$tasks shuffleMB=$shuffleMB%.1f inputMB=$inputMB%.1f"
+        f"tasks=$tasks shuffleMB=$shuffleMB%.1f inputMB=$inputMB%.1f cpuS=$cpuS%.2f"
   }
+
+  private def statsOf(name: String, sec: Double, rows: Long, c: Counters.Acc): Stats =
+    Stats(name, sec, rows, c.jobs.toInt, c.stages.toInt, c.tasks.toInt,
+      c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6, c.cpuNs / 1e9)
 
   def stats(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Stats] = {
     val sc = spark.sparkContext
@@ -76,19 +81,17 @@ object Probe {
         val t0 = System.nanoTime()
         val rows = try fn(spark, sfDir).count() finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        val c = counters.settle().group(group)
-        Stats(name, sec, rows, c.jobs.toInt, c.stages.toInt, c.tasks.toInt,
-          c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6)
+        statsOf(name, sec, rows, counters.settle().group(group))
       }
     }
   }
 
   /** `etl`: three warm [[Load.run]]s of one dump (bz2 when the name ends in
     * `.bz2`), through `script` when given. Per load: wall seconds,
-    * Spark jobs, stages, tasks, shuffle MB written and input MB read,
-    * read from [[Counters]] under the load's own job group; rows are
-    * the entities written. One untimed load first (JIT, codegen, page
-    * cache). */
+    * Spark jobs, stages, tasks, shuffle MB written, input MB read and
+    * executor CPU seconds, read from [[Counters]] under the load's own
+    * job group; rows are the entities written. One untimed load first
+    * (JIT, codegen, page cache). */
   def etl(spark: SparkSession, dump: String,
           script: Option[String]): Seq[Stats] = inTempDir("etl_probe") { base =>
     val format = if (dump.endsWith(".bz2")) "bz2" else "json"
@@ -104,9 +107,8 @@ object Probe {
         val loaded = try Load.run(spark, dump, s"$base/load$i", format, mode = mode)
           finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        val c = counters.settle().group(group)
-        Stats(s"etl_load$i", sec, loaded.entities.count(), c.jobs.toInt,
-          c.stages.toInt, c.tasks.toInt, c.shuffleWriteBytes / 1e6, c.inputBytes / 1e6)
+        statsOf(s"etl_load$i", sec, loaded.entities.count(),
+          counters.settle().group(group))
       }
     }
   }

@@ -30,7 +30,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       "snowball_stem", "top_k_by_score", "bloom_might_contain_long",
       "bloom_longs_agg", "kmv_longs_agg", "pq_codes", "pq_residual",
       "splitmix_unif", "misra_gries", "srp_pack", "hamming_dist",
-      "cdc_chunks", "nearest_cell", "top_cells"))
+      "cdc_chunks", "nearest_cell", "top_cells", "flatten_claims"))
   }
 
   test("every injected builder evaluates correctly on literal input") {

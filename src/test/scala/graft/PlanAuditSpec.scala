@@ -678,6 +678,29 @@ class PlanAuditSpec extends AnyFunSuite {
       new org.apache.spark.sql.SparkSessionExtensions)
   }
 
+  test("normalize: one from_json (the line parse), no lambda, one flatten_claims call") {
+    // a file scan: over a local relation the optimizer folds the parse
+    val dump = java.nio.file.Files.createTempFile("normalize", ".json")
+    java.nio.file.Files.writeString(dump, """{"type":"item","id":"Q1","claims":{}}""")
+    val n = graft.ingest.Transform.normalize(
+      graft.ingest.WikidataSource.read(spark, dump.toString))
+    val p = plan(n)
+    def count(s: String) = p.sliding(s.length).count(_ == s)
+    assert(count("from_json(") === 1, p)
+    assert(!p.toLowerCase.contains("lambdafunction"), p)
+    assert(count("flatten_claims(") === 1, p)
+    // a session built with the extension resolves the kernel by name
+    val ext = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions).create()
+    assert(ext.sql("SELECT flatten_claims(CAST(NULL AS " +
+      "MAP<STRING, ARRAY<STRUCT<mainsnak: STRUCT<snaktype: STRING, " +
+      "property: STRING, datatype: STRING, datavalue: STRUCT<value: STRING, " +
+      "type: STRING>>, type: STRING, qualifiers: MAP<STRING, ARRAY<STRUCT<" +
+      "snaktype: STRING, property: STRING, datatype: STRING, datavalue: " +
+      "STRUCT<value: STRING, type: STRING>>>>, rank: STRING>>>)) AS c")
+      .head().getSeq[Any](0).isEmpty)
+  }
+
   test("multi-language projection behind keepAllLanguages flag") {
     val raw = graft.ingest.WikidataSource.read(spark,
       ReferenceFixtures("Entity.json"))

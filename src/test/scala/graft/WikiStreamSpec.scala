@@ -33,6 +33,29 @@ class WikiStreamSpec extends AnyFunSuite {
     assert(got.filter(col("label") === "Black Clover, season 1").count() === 1)
   }
 
+  test("authored dump files stream to the same rows as the batch normalize") {
+    val dumpDir = tmp()
+    val q = """{"snaktype":"value","property":"P1545","datavalue":{"value":"7","type":"string"},"datatype":"string"}"""
+    val lines = Seq(
+      entityLine(1, "show a", 10),
+      s"""{"type":"item","id":"Q2","labels":{"de":{"language":"de","value":"b"}},"claims":{"P31":[{"mainsnak":{"snaktype":"value","property":"P31","datavalue":{"value":{"entity-type":"item","numeric-id":5,"id":"Q5"},"type":"wikibase-entityid"},"datatype":"wikibase-item"},"type":"statement","qualifiers":{"P1545":[$q]}}],"P580":[{"mainsnak":{"snaktype":"somevalue","property":"P580","datatype":"time"}}]}}""",
+      """{"type":"property","id":"P31","labels":{"en":{"language":"en","value":"instance of"}}}""",
+      """{"type":"lexeme","id":"L9","lemmas":{"en":{"language":"en","value":"run"}},"claims":{"P5185":[{"mainsnak":{"snaktype":"value","property":"P5185","datavalue":{"value":{"entity-type":"form","id":"L9-F1"},"type":"wikibase-entityid"},"datatype":"wikibase-form"}}]}}""")
+    Files.writeString(JPaths.get(s"$dumpDir/f1.json"),
+      lines.take(2).mkString("[\n", ",\n", ",\n"))
+    Files.writeString(JPaths.get(s"$dumpDir/f2.json"),
+      lines.drop(2).mkString("", ",\n", "\n]\n"))
+    val q1 = WikiStream.normalizedStream(spark, dumpDir).writeStream
+      .outputMode("append").format("memory").queryName("wiki_stream_authored").start()
+    q1.processAllAvailable(); q1.stop()
+    val streamed = spark.table("wiki_stream_authored")
+    val batch = graft.ingest.Transform.normalize(
+      graft.ingest.WikidataSource.read(spark, dumpDir))
+    assert(streamed.schema === batch.schema)
+    assert(streamed.count() === 4)
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
   test("incremental media view: append then upsert across micro-batches") {
     val dumpDir = tmp(); val viewDir = tmp() + "/view"; val cp = tmp()
     Files.writeString(JPaths.get(s"$dumpDir/f1.json"),
